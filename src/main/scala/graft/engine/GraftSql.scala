@@ -3,21 +3,11 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
-/** MERGE INTO SQL front-end for the merge builder (reference parses this
-  * with ANTLR, CarbonAntlrParser.scala:25-40; semantics per
-  * docs/scd-and-cdc-guide.md:94-128).
-  *
-  * Supported grammar (case-insensitive keywords):
-  * {{{
-  * MERGE INTO <target> [AS <ta>] USING <source> [AS <sa>] ON <cond>
-  *   WHEN MATCHED [AND <cond>] THEN UPDATE SET c = <expr>[, ...]
-  *   WHEN MATCHED [AND <cond>] THEN DELETE
-  *   WHEN NOT MATCHED [AND <cond>] THEN INSERT *
-  *   WHEN NOT MATCHED [AND <cond>] THEN INSERT (c[, ...]) VALUES (<expr>[, ...])
-  * }}}
-  * `<target>` resolves through `tables`; `<source>` through `tables` or
-  * a temp view. Qualifiers `<target>.`/`<ta>.` and `<source>.`/`<sa>.`
-  * are normalized to the builder's `t.`/`s.` aliases.
+/** graft's command SQL: the segment-management, MV, index, stream and
+  * time-travel statements Spark's parser has no grammar for (reference
+  * CarbonSpark2SqlParser.scala:75-788). `MERGE INTO`, `UPDATE` and
+  * `DELETE` on catalog tables go through `spark.sql` instead
+  * ([[catalog.GraftDmlStrategy]]).
   */
 object GraftSql {
 
@@ -47,81 +37,12 @@ object GraftSql {
             "[zone], resolved in spark.sql.session.timeZone)"))
     }
 
-  private val HeadRe =
-    """(?is)^\s*MERGE\s+INTO\s+(\S+)(?:\s+AS\s+(\w+))?\s+USING\s+(\S+)(?:\s+AS\s+(\w+))?\s+ON\s+(.+)$""".r
-
-  def mergeInto(
-      spark: SparkSession,
-      sql: String,
-      tables: Map[String, GraftTable]): Option[Long] = {
-    // split into the head and WHEN clauses at top level
-    val parts = splitTopLevel(sql, "(?i)\\bWHEN\\b")
-    require(parts.nonEmpty, "empty MERGE statement")
-    val (target, tAlias, source, sAlias, onCond) = parts.head match {
-      case HeadRe(tgt, ta, src, sa, cond) =>
-        (tgt, Option(ta), src, Option(sa), cond)
-      case other => throw new IllegalArgumentException(s"cannot parse MERGE head: $other")
-    }
-    val targetTable = tables.getOrElse(target,
-      throw new IllegalArgumentException(s"unknown merge target $target"))
-    val sourceDf: DataFrame = tables.get(source).map(_.read)
-      .getOrElse(spark.table(source))
-
-    // quote-aware: an alias inside a string literal stays untouched, and
-    // aliases are matched literally (no regex metacharacter surprises)
-    def norm(e: String): String = {
-      var r = e
-      (Seq(target) ++ tAlias).foreach(a => r = replaceAlias(r, a, "t"))
-      (Seq(source) ++ sAlias).foreach(a => r = replaceAlias(r, a, "s"))
-      r
-    }
-
-    var b = targetTable.merge(sourceDf, expr(norm(onCond)))
-
-    val ClauseRe =
-      """(?is)^\s*(NOT\s+)?MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+(.+)$""".r
-    parts.tail.foreach {
-      case ClauseRe(notM, cond, action) =>
-        val condCol = Option(cond).map(c => expr(norm(c))).orNull
-        val isMatched = notM == null
-        val act = action.trim
-        if (act.toUpperCase.startsWith("UPDATE SET")) {
-          require(isMatched, "UPDATE requires WHEN MATCHED")
-          val sets = splitTopLevel(act.substring("UPDATE SET".length), ",").map { kv =>
-            val i = kv.indexOf('=')
-            require(i > 0, s"bad SET item: $kv")
-            kv.take(i).trim -> expr(norm(kv.drop(i + 1)))
-          }.toMap
-          b = b.whenMatched(condCol).updateExpr(sets)
-        } else if (act.toUpperCase.startsWith("DELETE")) {
-          b = if (isMatched) b.whenMatched(condCol).delete()
-          else b.whenNotMatchedAndExistsOnlyOnTarget(condCol).delete()
-        } else if (act.trim.toUpperCase.matches("INSERT\\s*\\*")) {
-          require(!isMatched, "INSERT requires WHEN NOT MATCHED")
-          b = b.whenNotMatched(condCol).insertAll()
-        } else if (act.toUpperCase.startsWith("INSERT")) {
-          require(!isMatched, "INSERT requires WHEN NOT MATCHED")
-          val InsRe = """(?is)^INSERT\s*\(([^)]*)\)\s*VALUES\s*\((.+)\)\s*$""".r
-          act match {
-            case InsRe(cols, vals) =>
-              val cs = cols.split(",").map(_.trim)
-              val vs = splitTopLevel(vals, ",").map(v => expr(norm(v)))
-              require(cs.length == vs.length, "INSERT columns/values mismatch")
-              b = b.whenNotMatched(condCol).insertExpr(cs.zip(vs).toMap)
-            case _ => throw new IllegalArgumentException(s"cannot parse: $act")
-          }
-        } else throw new IllegalArgumentException(s"unknown merge action: $act")
-      case other => throw new IllegalArgumentException(s"cannot parse WHEN clause: $other")
-    }
-    b.execute()
-  }
-
   /** Segment-management / MV command statements (the reference's
     * CarbonSpark2SqlParser command grammar, :75-788). Returns Some(df)
     * for statements that produce rows (SHOW …), Some(empty df) for
     * actions, None when `sql` is not a recognized command (caller falls
-    * through to `spark.sql`). Table references resolve through `tables`
-    * first, then as a filesystem path.
+    * through to `spark.sql`). A table reference is a filesystem path,
+    * optionally backquoted.
     *
     * Supported:
     * {{{
@@ -148,15 +69,10 @@ object GraftSql {
     * SHOW BENCHMARK FOR TABLE <t> [LIMIT n] -- CarbonCli-style per-file scan timings
     * }}}
     */
-  def command(
-      spark: SparkSession,
-      sql: String,
-      tables: Map[String, GraftTable] = Map.empty): Option[DataFrame] = {
+  def command(spark: SparkSession, sql: String): Option[DataFrame] = {
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    def table(ref: String): GraftTable = {
-      val clean = ref.stripPrefix("`").stripSuffix("`")
-      tables.getOrElse(clean, GraftTable.at(spark, clean))
-    }
+    def table(ref: String): GraftTable =
+      GraftTable.at(spark, ref.stripPrefix("`").stripSuffix("`"))
     def ids(s: String): Seq[Long] = {
       val parsed = s.split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
       require(parsed.nonEmpty, s"empty segment id list in: $s")
@@ -402,9 +318,8 @@ object GraftSql {
             require(exprs.length == cols.length,
               s"SET lists ${cols.length} columns but the subquery selects ${exprs.length}")
             val srcClean = src.stripPrefix("`").stripSuffix("`")
-            val srcDf = tables.get(srcClean).map(_.read)
-              .getOrElse(scala.util.Try(table(srcClean).read)
-                .getOrElse(spark.table(srcClean)))
+            val srcDf = scala.util.Try(table(srcClean).read)
+              .getOrElse(spark.table(srcClean))
             def norm(e: String): String = {
               var r = e
               (Seq(tgt) ++ Option(alias)).foreach(a => r = replaceAlias(r, a, "t"))

@@ -18,6 +18,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 class GraftTable private (val spark: SparkSession, val path: String)
     extends org.apache.spark.internal.Logging {
+  GraftSession.install(spark)
   val layout = new TableLayout(path, spark.sessionState.newHadoopConf())
 
   def meta: TableMeta = layout.readTableMeta()

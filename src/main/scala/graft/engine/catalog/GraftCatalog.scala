@@ -87,13 +87,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
 
   override def tableExists(ident: Identifier): Boolean = isTableDir(tablePath(ident))
 
-  override def loadTable(ident: Identifier): Table = {
+  /** (path, layout, schema) of an existing table. Every catalog table
+    * open passes here, and attaches graft to the session it runs in. */
+  private def open(ident: Identifier): (String, TableLayout, StructType) = {
     val p = resolvedPath(tablePath(ident))
     if (!fs.exists(new Path(p, "_meta/tablemeta.json")))
       throw new NoSuchTableException(ident)
+    graft.engine.GraftSession.install(SparkSession.active)
     val layout = new TableLayout(p.toString, conf)
     val schema = DataType.fromJson(layout.readTableMeta().schemaJson).asInstanceOf[StructType]
-    new CarbonishTable(p.toString, schema)
+    (p.toString, layout, schema)
+  }
+
+  override def loadTable(ident: Identifier): Table = {
+    val (p, _, schema) = open(ident)
+    new CarbonishTable(p, schema)
   }
 
   /** `SELECT … FROM graft.ns.t VERSION AS OF <v>` — Spark's own time-
@@ -102,18 +110,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     * version `v`. Served under the current schema; horizon bounds per
     * statusAt. */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val p = resolvedPath(tablePath(ident))
-    if (!fs.exists(new Path(p, "_meta/tablemeta.json")))
-      throw new NoSuchTableException(ident)
-    val layout = new TableLayout(p.toString, conf)
-    val schema = DataType.fromJson(layout.readTableMeta().schemaJson).asInstanceOf[StructType]
+    val (p, layout, schema) = open(ident)
     val v =
       try version.toLong
       catch { case _: NumberFormatException =>
         throw new IllegalArgumentException(
           s"carbonish versions are commit-log numbers, got '$version'") }
     layout.statusAt(v) // fail at resolution time, not first scan
-    new CarbonishTable(p.toString, schema, asOfVersion = Some(v))
+    new CarbonishTable(p, schema, asOfVersion = Some(v))
   }
 
   /** `… TIMESTAMP AS OF <ts>` — Spark resolves the literal in the

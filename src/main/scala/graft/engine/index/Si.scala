@@ -85,7 +85,6 @@ object Si {
     recordIndexedSegments(si, snapshot)
     t.layout.updateTableMeta(m => m.copy(
       properties = m.properties + (siPathsKey(column) -> siPath)))
-    SiSql.enable(t.spark) // plain SQL filters now consult the SI
     si
   }
 

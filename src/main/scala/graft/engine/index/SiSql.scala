@@ -1,7 +1,7 @@
 package graft.engine.index
 
 import graft.engine.GraftTable
-import graft.engine.source.CarbonishScan
+import graft.engine.source.{CarbonishScan, CarbonishTable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
@@ -16,14 +16,9 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * rewritten to the SI-pinned read ([[Si.pinnedFor]]: row-group →
   * file → segment grain) with the ORIGINAL filter kept as the exact
   * residual, so users get index pruning without calling
-  * [[Si.readWhereIn]] themselves. Installed per-session by
-  * [[SiSql.enable]]; CREATE INDEX … AS 'carbondata' enables it
-  * automatically. */
-object SiSql {
-  def enable(spark: SparkSession): Unit =
-    graft.engine.ExtraRules.install(spark, classOf[SiRewriteRule])(new SiRewriteRule)
-}
-
+  * [[Si.readWhereIn]] themselves. Attached to a session with the rest
+  * of graft by [[graft.engine.GraftSession.install]]; it acts on tables
+  * whose meta registers an SI (`si.<column>`). */
 class SiRewriteRule extends Rule[LogicalPlan] {
 
   /** Past this many literals an index probe stops being a point lookup
@@ -75,8 +70,10 @@ class SiRewriteRule extends Rule[LogicalPlan] {
     case r @ DataSourceV2ScanRelation(_, cs: CarbonishScan, _, _, _) =>
       // a pinned scan is this rule's own output — or an explicit
       // insegment/readFiles read — and must not re-trigger
-      // (fixed-point batches would otherwise loop)
-      if (cs.scanOptions.containsKey("segments")) None else Some((r, cs))
+      // (fixed-point batches would otherwise loop); a `VERSION AS OF`
+      // scan must not be swapped for the index's current-snapshot read
+      if (cs.scanOptions.containsKey("segments") || CarbonishTable.historical(r)) None
+      else Some((r, cs))
     case Project(_, child) => scanBelow(child)
     case Filter(_, child) => scanBelow(child)
     case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
@@ -85,7 +82,6 @@ class SiRewriteRule extends Rule[LogicalPlan] {
   }
 
   private def rewrite(f: Filter): Option[LogicalPlan] = {
-    val spark = SparkSession.active
     // pure expression analysis first — most filters carry no equality/
     // IN conjunct, and they must not pay the plan walk or a table-meta
     // stat call on every optimizer pass
@@ -95,8 +91,9 @@ class SiRewriteRule extends Rule[LogicalPlan] {
     val found = scanBelow(f.child)
     if (found.isEmpty) return None
     val (rel, cs) = found.get
-    val t = GraftTable.at(spark, cs.layout.tablePath)
-    val siCols = t.meta.properties.keys
+    // the SI registry rides the scan's own table meta, so point and
+    // bloom lookups on tables without an SI pay no extra metadata read
+    val siCols = cs.tableMeta.properties.keys
       .filter(_.startsWith("si.")).map(_.stripPrefix("si.")).toSet
     if (siCols.isEmpty) return None
     // first conjunct the SI can serve; the WHOLE original condition
@@ -107,6 +104,7 @@ class SiRewriteRule extends Rule[LogicalPlan] {
     }
     hit.flatMap { case (attr, values) =>
       val colName = siCols.find(_.equalsIgnoreCase(attr.name)).get
+      val t = GraftTable.at(SparkSession.active, cs.layout.tablePath)
       Si.pinnedFor(t, colName, values).map { base =>
         // plan the pinned read with exactly the relation's columns, then
         // project back onto the original attribute ids so everything

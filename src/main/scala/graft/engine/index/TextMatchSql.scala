@@ -1,9 +1,11 @@
 package graft.engine.index
 
 import graft.engine.GraftTable
-import graft.engine.source.CarbonishScan
+import graft.engine.source.{CarbonishScan, CarbonishTable}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -28,13 +30,12 @@ object TextMatchSql {
   private val err = "text_match() applies to carbonish table scans only " +
     "(the index rewrite rule did not fire on this plan)"
 
-  /** Idempotently register the UDFs + rewrite rule on a session. */
-  def enable(spark: SparkSession): Unit = synchronized {
+  /** The marker UDFs [[TextMatchRule]] rewrites, registered with the
+    * rule by [[graft.engine.GraftSession.install]]. */
+  private[graft] def markers: Seq[(String, UserDefinedFunction)] = {
     val f1: String => Boolean = _ => throw new UnsupportedOperationException(err)
     val f2: (String, Int) => Boolean = (_, _) => throw new UnsupportedOperationException(err)
-    spark.udf.register("text_match", f1)
-    spark.udf.register("text_match_with_limit", f2)
-    graft.engine.ExtraRules.install(spark, classOf[TextMatchRule])(new TextMatchRule)
+    Seq("text_match" -> udf(f1), "text_match_with_limit" -> udf(f2))
   }
 
   private[graft] def parseArg(s: String): (String, String) = {
@@ -163,9 +164,12 @@ class TextMatchRule extends Rule[LogicalPlan] {
     val cap: Option[Int] =
       if (calls.size == 1 && rest.isEmpty) calls.head.limit else None
 
-    // exactly one carbonish scan carrying every referenced column
+    // exactly one carbonish scan carrying every referenced column; a
+    // `VERSION AS OF` scan is left alone (the index and the swapped-in
+    // read are current), so its marker fails loudly
     val rels = f.child.collect {
-      case r @ DataSourceV2ScanRelation(_, cs: CarbonishScan, _, _, _) => (r, cs)
+      case r @ DataSourceV2ScanRelation(_, cs: CarbonishScan, _, _, _)
+          if !CarbonishTable.historical(r) => (r, cs)
     }.filter { case (r, cs) =>
       calls.forall(c => cs.tableSchema.fieldNames.exists(_.equalsIgnoreCase(c.column)))
     }

@@ -42,7 +42,7 @@ case class MvDef(
 
 /** In-memory session catalog. Persistence lives in [[MvStore]]: every
   * create/refresh ALSO writes `<mvPath>/_meta/mvdef.bin`, and
-  * [[Mv.load]] / [[Mv.install]] re-hydrate defs after a JVM restart
+  * [[Mv.load]] re-hydrates defs after a JVM restart
   * (the reference keeps MV schemas in its metastore for the same
   * reason, CarbonCreateMVCommand.scala:60). */
 object MvCatalog {
@@ -75,10 +75,6 @@ object MvCatalog {
 }
 
 object Mv {
-  /** Install the rewrite rule on a session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    graft.engine.ExtraRules.install(spark, classOf[MvRewriteRule])(new MvRewriteRule)
-
   /** An MV plan that is not an Aggregate must be pure
     * select-project-join: Project/Filter/Join over leaves, everything
     * deterministic. Windows, unions, limits, generators etc. have no
@@ -124,7 +120,6 @@ object Mv {
     MvCatalog.register(d)
     snapshot.foreach(s => MvCatalog.setRefreshedSegments(name, s))
     persist(spark, d)
-    install(spark)
     d
   }
 
@@ -139,9 +134,11 @@ object Mv {
     * Returns None if no (readable) def is stored there. */
   def load(spark: SparkSession, mvPath: String): Option[MvDef] =
     MvStore.load(spark, mvPath).map { case (d, refreshed) =>
+      // the open attaches graft, and so the rewrite rule, to `spark`
+      // even when every base of the MV is plain parquet
+      GraftTable.at(spark, d.path)
       MvCatalog.register(d)
       refreshed.foreach(s => MvCatalog.setRefreshedSegments(d.name, s))
-      install(spark)
       d
     }
 

@@ -98,8 +98,10 @@ class CarbonishTable(path: String, tableSchema: StructType,
     /** TIME TRAVEL (r17): Some(v) pins every scan to the commit-log
       * reconstruction of version v (GraftCatalog.loadTable's `VERSION
       * AS OF` / `TIMESTAMP AS OF` hand-off). Writes are unaffected —
-      * Spark never routes DML through a time-travel relation. */
-    asOfVersion: Option[Long] = None)
+      * Spark never routes DML through a time-travel relation. Index
+      * rewrites (SI, text_match) read the current snapshot, so they
+      * decline a relation that carries one. */
+    val asOfVersion: Option[Long] = None)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
@@ -345,6 +347,15 @@ class CarbonishTable(path: String, tableSchema: StructType,
           }
       }
     }
+}
+
+object CarbonishTable {
+  /** A scan of a `VERSION AS OF` / `TIMESTAMP AS OF` relation. */
+  def historical(r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation)
+      : Boolean = r.relation.table match {
+    case t: CarbonishTable => t.asOfVersion.isDefined
+    case _ => false
+  }
 }
 
 /** FileIndex over the visible segments' parquet files with segment-level
@@ -883,7 +894,7 @@ case class CarbonishScan(
 
   @volatile private var current: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan = inner
 
-  private lazy val tableMeta: TableMeta = layout.readTableMeta()
+  private[graft] lazy val tableMeta: TableMeta = layout.readTableMeta()
 
   // Resolve a planned file path to (segment, segment-relative path)
   // WITHOUT materializing a table-wide map: managed files live under

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** The reference's registered UDF surface (SURVEY §2.6 / CarbonEnv
@@ -311,13 +312,14 @@ object GraftFunctions {
     date_trunc(g, c)
   }
 
-  /** SQL registration for the UDF-shaped surface (SQL queries can't call
-    * the Column builders directly). Named `text_match_contains` — the
-    * row-level substring variant — so it can't collide with the indexed
-    * `text_match('col:query')` marker registered by
-    * [[graft.engine.index.TextMatchSql.enable]]. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("text_match_contains", (text: String, query: String) => {
+  /** The UDF-shaped SQL surface (SQL queries can't call the Column
+    * builders directly), attached to a session by
+    * [[graft.engine.GraftSession.install]]. Named `text_match_contains`
+    * — the row-level substring variant — so it can't collide with the
+    * indexed `text_match('col:query')` marker
+    * ([[graft.engine.index.TextMatchSql.markers]]). */
+  private[graft] def sqlUdfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "text_match_contains" -> udf((text: String, query: String) => {
       if (text == null) false
       else {
         val lc = text.toLowerCase
@@ -334,14 +336,20 @@ object GraftFunctions {
         }
         parseLucene(query).exists(_.forall(l => one(l.term) != l.negated))
       }
-    })
+    }))
+
+  /** Native catalyst functions under SQL names, registered next to
+    * [[sqlUdfs]]. */
+  private[graft] def sqlNatives
+      : Seq[(String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        org.apache.spark.sql.catalyst.expressions.Expression)] = Seq(
     // timeseries(col, 'granularity') as a SQL function (reference
     // TimeSeriesUDF registration, TimeSeriesFunction.scala): resolves
     // to the very TruncTimestamp the Column builder produces, so
     // timeseries MVs rewrite identically whether the query came from
     // SQL or the DataFrame API (a udf-wrapped variant would be opaque
     // to the matcher)
-    org.apache.spark.sql.graft.Shims.registerNative(spark, "timeseries", exprs => {
+    "timeseries" -> (exprs => {
       require(exprs.length == 2,
         "timeseries(column, granularity) takes exactly two arguments")
       val g = exprs(1) match {
@@ -358,10 +366,10 @@ object GraftFunctions {
       }
       org.apache.spark.sql.catalyst.expressions.TruncTimestamp(
         org.apache.spark.sql.catalyst.expressions.Literal(g), exprs.head)
-    })
+    }),
     // approx_top_k(col, k): the Misra-Gries aggregate as a SQL function
-    // (a native AggregateFunction can't go through spark.udf.register)
-    org.apache.spark.sql.graft.Shims.registerNative(spark, "approx_top_k", exprs => {
+    // (a native AggregateFunction is not a UDF)
+    "approx_top_k" -> (exprs => {
       require(exprs.length == 2,
         "approx_top_k(column, k) takes exactly two arguments")
       val k = exprs(1) match {
@@ -375,8 +383,7 @@ object GraftFunctions {
           "approx_top_k: k must be a literal")
       }
       org.apache.spark.sql.graft.MisraGries(exprs.head, k)
-    })
-  }
+    }))
 
   // ---------------------------------------------------------- redaction
 

@@ -1,6 +1,7 @@
 package graft.geo
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Geospatial pack (reference geo/ module, SURVEY §2.6):
@@ -293,22 +294,24 @@ object Geo {
     if (op == "OR") lists.exists(hit) else lists.forall(hit)
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("lat_lng_to_geo_id", latLngToGeoIdScalar _)
-    spark.udf.register("geo_id_to_lat", (id: Long) => geoIdToLatLngScalar(id)._1)
-    spark.udf.register("geo_id_to_lng", (id: Long) => geoIdToLatLngScalar(id)._2)
-    spark.udf.register("to_upper_layer_geo_id", toUpperLayerScalar _)
-    // reference GeoUtilUDFs.registerUDFs + GeoFilterUDFs.registerUDFs
-    spark.udf.register("geo_id_to_grid_xy", geoIdToGridXyScalar _)
-    spark.udf.register("to_range_list", (p: String) => toRangeListScalar(p))
-    spark.udf.register("to_range_list_as_string", (p: String) =>
+  /** The geo SQL functions (reference GeoUtilUDFs.registerUDFs +
+    * GeoFilterUDFs.registerUDFs), attached to a session by
+    * [[graft.engine.GraftSession.install]]. */
+  private[graft] def sqlUdfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "lat_lng_to_geo_id" -> udf(latLngToGeoIdScalar _),
+    "geo_id_to_lat" -> udf((id: Long) => geoIdToLatLngScalar(id)._1),
+    "geo_id_to_lng" -> udf((id: Long) => geoIdToLatLngScalar(id)._2),
+    "to_upper_layer_geo_id" -> udf(toUpperLayerScalar _),
+    "geo_id_to_grid_xy" -> udf(geoIdToGridXyScalar _),
+    "to_range_list" -> udf((p: String) => toRangeListScalar(p)),
+    "to_range_list_as_string" -> udf((p: String) =>
       toRangeListScalar(p).map(r => s"${r(0)} ${r(1)}")
-        .mkString("RANGELIST (", ", ", ")"))
-    spark.udf.register("in_polygon_range_list",
-      (g: Long, rl: String, op: String) => inPolygonRangeListScalar(g, rl, op))
-    spark.udf.register("in_polygon", (lat: Double, lng: Double, poly: String) =>
-      pointInPolygon(lat, lng, parsePolygon(poly)))
-    spark.udf.register("in_polygon_list",
+        .mkString("RANGELIST (", ", ", ")")),
+    "in_polygon_range_list" -> udf(
+      (g: Long, rl: String, op: String) => inPolygonRangeListScalar(g, rl, op)),
+    "in_polygon" -> udf((lat: Double, lng: Double, poly: String) =>
+      pointInPolygon(lat, lng, parsePolygon(poly))),
+    "in_polygon_list" -> udf(
       (lat: Double, lng: Double, polys: String, op: String) => {
         val ps = parsePolygonList(polys)
         op.toUpperCase match {
@@ -317,6 +320,5 @@ object Geo {
           case other => throw new IllegalArgumentException(
             s"opType must be OR or AND, got $other")
         }
-      })
-  }
+      }))
 }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.engine.GraftTable
-import graft.engine.catalog.GraftDml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import Q._
 
@@ -26,7 +25,6 @@ object CatalogQueries {
     val w = s"${Fixtures.root}/$base/warehouse"
     s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.engine.catalog.GraftCatalog].getName)
     s.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
-    GraftDml.enable(s)
     (cat, w)
   }
 

@@ -8,20 +8,26 @@ import java.nio.file.Files
 class GraftSqlSpec extends AnyFunSuite {
   import TestSpark._
 
+  // spec-local catalog name: a catalog binds its warehouse at first use
+  private lazy val wh: String = {
+    val w = Files.createTempDirectory("graft_sqlwh_").toString
+    spark.conf.set("spark.sql.catalog.gsql", "graft.engine.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gsql.warehouse", w)
+    w
+  }
+
   test("MERGE INTO SQL: update, conditional delete, insert *") {
     val src = spark.read.parquet(s"$sf/customer.parquet")
-    val root = Files.createTempDirectory("graft_msql_").toString
-    val t = GraftTable.createAsSelect(spark, s"$root/t", src, Seq("c_custkey"))
+    val t = GraftTable.createAsSelect(spark, s"$wh/msql/cust", src, Seq("c_custkey"))
     src.filter(col("c_custkey") < 60)
       .withColumn("c_acctbal", col("c_acctbal") + 1000.0)
       .createOrReplaceTempView("cust_updates")
-    GraftSql.mergeInto(spark,
-      """MERGE INTO cust AS a USING cust_updates AS b
+    spark.sql(
+      """MERGE INTO gsql.msql.cust AS a USING cust_updates AS b
          ON a.c_custkey = b.c_custkey
          WHEN MATCHED AND a.c_acctbal < 0 THEN DELETE
          WHEN MATCHED THEN UPDATE SET c_acctbal = b.c_acctbal, c_mktsegment = concat(a.c_mktsegment, '!')
-         WHEN NOT MATCHED THEN INSERT *""",
-      Map("cust" -> t))
+         WHEN NOT MATCHED THEN INSERT *""")
     val expected = src
       .filter(col("c_custkey") >= 60 || col("c_acctbal") >= 0)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
@@ -35,22 +41,19 @@ class GraftSqlSpec extends AnyFunSuite {
   }
 
   test("MERGE INTO SQL: explicit INSERT (cols) VALUES (exprs)") {
-    val root = Files.createTempDirectory("graft_msql2_").toString
-    val schema = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
     import spark.implicits._
-    val t = GraftTable.createAsSelect(spark, s"$root/t",
+    val t = GraftTable.createAsSelect(spark, s"$wh/msql2/tt",
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     Seq((2L, "B"), (3L, "C")).toDF("k", "v").createOrReplaceTempView("msrc")
-    GraftSql.mergeInto(spark,
-      """MERGE INTO tt USING msrc ON tt.k = msrc.k
+    spark.sql(
+      """MERGE INTO gsql.msql2.tt USING msrc ON tt.k = msrc.k
          WHEN MATCHED THEN UPDATE SET v = upper(msrc.v)
-         WHEN NOT MATCHED THEN INSERT (k, v) VALUES (msrc.k, concat('new_', msrc.v))""",
-      Map("tt" -> t))
+         WHEN NOT MATCHED THEN INSERT (k, v) VALUES (msrc.k, concat('new_', msrc.v))""")
     val got = t.read.as[(Long, String)].collect().toSet
     assert(got == Set((1L, "a"), (2L, "B"), (3L, "new_C")))
   }
 
-  test("MERGE alias normalization is quote-aware (aliases inside literals survive)") {
+  test("UPDATE subquery alias normalization is quote-aware (literals survive)") {
     val root = Files.createTempDirectory("graft_msql3_").toString
     import spark.implicits._
     val t = GraftTable.createAsSelect(spark, s"$root/t",
@@ -58,10 +61,10 @@ class GraftSqlSpec extends AnyFunSuite {
     Seq((1L, "x")).toDF("k", "v").createOrReplaceTempView("qsrc")
     // 'a.' and 'qsrc.' inside the string literal must NOT be rewritten;
     // the same tokens outside literals must be
-    GraftSql.mergeInto(spark,
-      """MERGE INTO qt AS a USING qsrc ON a.k = qsrc.k
-         WHEN MATCHED THEN UPDATE SET v = concat(qsrc.v, ' a.b qsrc.c ', a.v)""",
-      Map("qt" -> t))
+    assert(GraftSql.command(spark,
+      s"""UPDATE ${t.path} AS a SET (v) = (
+            SELECT concat(qsrc.v, ' a.b qsrc.c ', a.v) FROM qsrc WHERE qsrc.k = a.k)""")
+      .isDefined)
     val got = t.read.as[(Long, String)].collect().toSet
     assert(got == Set((1L, "x a.b qsrc.c a"), (2L, "b")))
   }
@@ -251,9 +254,9 @@ class GraftSqlSpec extends AnyFunSuite {
     val t = GraftTable.create(spark, s"$root/t",
       Seq((1L, "a")).toDF("k", "v").schema, Seq("k"))
     (0 until 4).foreach(i => t.insert(Seq((i.toLong, s"v$i")).toDF("k", "v")))
-    val tbls = Map("tt" -> t)
+    val tt = s"`${t.path}`"
 
-    val segs = GraftSql.command(spark, "SHOW SEGMENTS FOR TABLE tt", tbls).get
+    val segs = GraftSql.command(spark, s"SHOW SEGMENTS FOR TABLE $tt").get
     assert(segs.count() == 4)
     assert(segs.columns.toSeq ==
       Seq("id", "status", "format", "row_count", "size_bytes", "file_count"))
@@ -261,41 +264,41 @@ class GraftSqlSpec extends AnyFunSuite {
     // SHOW SEGMENTS … AS <select>: the registry is queryable as
     // <table>_segments (reference CarbonShowSegmentsAsSelectCommand)
     val asSel = GraftSql.command(spark,
-      """SHOW SEGMENTS FOR TABLE tt AS
+      s"""SHOW SEGMENTS FOR TABLE $tt AS
          SELECT id, row_count FROM t_segments
-         WHERE row_count >= 1 AND status = 'SUCCESS' ORDER BY id""", tbls).get
+         WHERE row_count >= 1 AND status = 'SUCCESS' ORDER BY id""").get
     assert(asSel.columns.toSeq == Seq("id", "row_count"))
     assert(asSel.collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 3L))
     // aggregates over the registry work too
     val agg = GraftSql.command(spark,
-      "SHOW SEGMENTS ON tt AS SELECT sum(row_count) AS r FROM t_segments", tbls).get
+      s"SHOW SEGMENTS ON $tt AS SELECT sum(row_count) AS r FROM t_segments").get
     assert(agg.collect().head.getLong(0) == 4L)
 
     // CUSTOM compaction of two named segments
-    GraftSql.command(spark, "ALTER TABLE tt COMPACT 'CUSTOM' WHERE SEGMENT.ID IN (0, 1)", tbls)
+    GraftSql.command(spark, s"ALTER TABLE $tt COMPACT 'CUSTOM' WHERE SEGMENT.ID IN (0, 1)")
     assert(t.status.visible.size == 3 && t.read.count() == 4)
 
     // retire one segment by id, then physically clean it
     val vis = t.status.visible.map(_.id).min
-    GraftSql.command(spark, s"DELETE FROM TABLE tt WHERE SEGMENT.ID IN ($vis)", tbls)
+    GraftSql.command(spark, s"DELETE FROM TABLE $tt WHERE SEGMENT.ID IN ($vis)")
     assert(t.status.visible.size == 2)
-    val cleaned = GraftSql.command(spark, "CLEAN FILES FOR TABLE tt", tbls).get
+    val cleaned = GraftSql.command(spark, s"CLEAN FILES FOR TABLE $tt").get
     assert(cleaned.collect().map(_.getLong(0)).nonEmpty)
 
     // the GC'd entries stay visible via SHOW HISTORY SEGMENTS …
-    val plainN = GraftSql.command(spark, "SHOW SEGMENTS FOR TABLE tt", tbls).get.count()
-    val histN = GraftSql.command(spark, "SHOW HISTORY SEGMENTS FOR TABLE tt", tbls).get.count()
+    val plainN = GraftSql.command(spark, s"SHOW SEGMENTS FOR TABLE $tt").get.count()
+    val histN = GraftSql.command(spark, s"SHOW HISTORY SEGMENTS FOR TABLE $tt").get.count()
     assert(histN > plainN, s"history ($histN) must exceed current ($plainN)")
     // … and LIMIT caps the (id-descending) listing
     assert(GraftSql.command(spark,
-      "SHOW HISTORY SEGMENTS FOR TABLE tt LIMIT 2", tbls).get.count() == 2)
+      s"SHOW HISTORY SEGMENTS FOR TABLE $tt LIMIT 2").get.count() == 2)
 
     // MAJOR compaction via SQL merges the remaining small segments
-    GraftSql.command(spark, "ALTER TABLE tt COMPACT 'MAJOR'", tbls)
+    GraftSql.command(spark, s"ALTER TABLE $tt COMPACT 'MAJOR'")
     assert(t.status.visible.size == 1)
 
     // DESCRIBE returns the schema + properties + metrics rows
-    val desc = GraftSql.command(spark, "DESCRIBE FORMATTED TABLE tt", tbls).get
+    val desc = GraftSql.command(spark, s"DESCRIBE FORMATTED TABLE $tt").get
     assert(desc.filter(col("kind") === "column").count() == 2)
 
     // DESCRIBE COLUMN drills into complex children; DESCRIBE SHORT
@@ -306,18 +309,18 @@ class GraftSqlSpec extends AnyFunSuite {
         StructField("name", StringType),
         StructField("tags", org.apache.spark.sql.types.ArrayType(StringType)))))))
     val tn = GraftTable.create(spark, s"$root/tnested", nestedSchema)
-    val tbls2 = Map("tn" -> tn)
-    val dc = GraftSql.command(spark, "DESC COLUMN meta ON TABLE tn", tbls2).get
+    val tnRef = s"`${tn.path}`"
+    val dc = GraftSql.command(spark, s"DESC COLUMN meta ON TABLE $tnRef").get
     assert(dc.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
       Set(("name", "string"), ("tags", "array<string>")))
-    val dcDeep = GraftSql.command(spark, "DESCRIBE COLUMN meta.tags ON tn", tbls2).get
+    val dcDeep = GraftSql.command(spark, s"DESCRIBE COLUMN meta.tags ON $tnRef").get
     assert(dcDeep.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
       Seq(("element", "string")))
-    val ds = GraftSql.command(spark, "DESC SHORT tn", tbls2).get
+    val ds = GraftSql.command(spark, s"DESC SHORT $tnRef").get
     assert(ds.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
       Set(("id", "bigint"), ("meta", "struct<...>")))
     // non-command falls through
-    assert(GraftSql.command(spark, "SELECT 1", tbls).isEmpty)
+    assert(GraftSql.command(spark, "SELECT 1").isEmpty)
   }
 
   test("command surface: MV lifecycle via SQL") {

@@ -140,7 +140,6 @@ class TextIndexSpec extends AnyFunSuite {
     assert(qn.select("id").collect().map(_.getLong(0)).toSet == Set(20L))
 
     // SQL marker route understands the same grammar
-    graft.engine.index.TextMatchSql.enable(spark)
     t.read.createOrReplaceTempView("tiwild_v")
     val qs = spark.sql("SELECT id FROM tiwild_v WHERE text_match('body:n1* OR \"big data\"')")
     assert(qs.collect().map(_.getLong(0)).toSet == Set(1L, 10L, 11L))
@@ -161,7 +160,6 @@ class TextIndexSpec extends AnyFunSuite {
     assert(shown.map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq ==
       Seq(("bidx", "lucene", "body")))
 
-    graft.engine.index.TextMatchSql.enable(spark)
     t.read.createOrReplaceTempView("tisql_v")
     val q = spark.sql("SELECT id FROM tisql_v WHERE text_match('body:charlie')")
     assert(q.collect().map(_.getLong(0)).toSet == Set(10L, 11L))

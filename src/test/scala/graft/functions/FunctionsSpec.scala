@@ -16,7 +16,7 @@ class FunctionsSpec extends AnyFunSuite {
     val got = df.filter(GraftFunctions.textMatch(col("t"), "big data OR carbon"))
       .collect().map(_.getString(0)).toSet
     assert(got == Set("Big Data engine", "carbon rocks"))
-    GraftFunctions.register(spark)
+    graft.engine.GraftSession.install(spark)
     df.createOrReplaceTempView("tm_t")
     val sqlGot = spark.sql(
       "SELECT t FROM tm_t WHERE text_match_contains(t, 'big data OR carbon')")
@@ -25,7 +25,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("approx_top_k SQL aggregate matches the Column form") {
-    GraftFunctions.register(spark)
+    graft.engine.GraftSession.install(spark)
     import spark.implicits._
     Seq("a", "b", "a", "c", "a", "b").toDF("token")
       .createOrReplaceTempView("atk_t")
@@ -110,7 +110,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("timeseries SQL registration resolves to the same date_trunc expression") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    graft.engine.GraftSession.install(spark)
     Seq("2024-03-15 10:23:45", "2024-03-15 11:59:59").toDF("s")
       .select(col("s").cast("timestamp").as("ts"))
       .createOrReplaceTempView("ts_reg_v")

@@ -58,7 +58,7 @@ class GeoSpec extends AnyFunSuite {
   }
 
   test("SQL utility UDFs: to_range_list / geo_id_to_grid_xy / in_polygon_range_list") {
-    Geo.register(spark)
+    graft.engine.GraftSession.install(spark)
     import spark.implicits._
     // grid xy round-trips the morton id
     val id = Geo.latLngToGeoIdScalar(15.0, 35.0)

@@ -103,7 +103,7 @@ class TextGrammarPropsSpec extends AnyFunSuite {
 
   test("text_match_contains UDF agrees with the Column tree") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    graft.engine.GraftSession.install(spark)
     val docs = samples(doc, 80).distinct
     val df = docs.zipWithIndex.map { case (d, i) => (i.toLong, d) }.toDF("id", "text")
     df.createOrReplaceTempView("tg_props_docs")
