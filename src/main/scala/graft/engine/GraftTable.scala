@@ -4,7 +4,7 @@ import graft.engine.format._
 
 import scala.collection.parallel.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -27,24 +27,11 @@ class GraftTable private (val spark: SparkSession, val path: String)
   def status: TableStatus = layout.readStatus()
   def segments: Seq[SegmentMeta] = status.segments
 
-  /** Read through the DSv2 source (segment pruning + parquet pushdown).
-    * Mixed-format tables (ADD SEGMENT csv/json/orc —
-    * MixedFormatHandler.scala:56) plan a union: the parquet segments go
-    * through the pruned DSv2 scan, each foreign-format segment through
-    * its own reader. */
-  def read: DataFrame = {
-    val vis = status.visible
-    val foreign = vis.filter(_.format != "parquet")
-    if (foreign.isEmpty) spark.read.format("carbonish").load(path)
-    else {
-      val parquetIds = vis.filter(_.format == "parquet").map(_.id)
-      val base =
-        if (parquetIds.isEmpty) None
-        else Some(readSegments(parquetIds))
-      val others = foreign.map(readForeignSegment)
-      (base.toSeq ++ others).reduce(_ unionByName _)
-    }
-  }
+  /** Read through the DSv2 source (segment pruning + parquet pushdown,
+    * merge-on-read deletes masked). On mixed-format tables (ADD SEGMENT
+    * csv/json/orc — MixedFormatHandler.scala:56) the same scan serves
+    * every format ([[graft.engine.source.MixedScan]]). */
+  def read: DataFrame = spark.read.format("carbonish").load(path)
 
   /** IN_POLYGON over a SPATIAL_INDEX table (reference InPolygonUDF —
     * the index column is implicit): rows inside the `"lng lat, …"`
@@ -56,18 +43,6 @@ class GraftTable private (val spark: SparkSession, val path: String)
       throw new IllegalArgumentException(
         s"table $path has no SPATIAL_INDEX table property"))
     read.filter(graft.geo.SpatialIndex.inPolygonFilter(sp, polygon, maxRanges))
-  }
-
-  private def readForeignSegment(s: SegmentMeta): DataFrame = {
-    val files = layout.segmentFilePaths(s)
-    s.format match {
-      case "parquet" => spark.read.schema(schema).parquet(files: _*)
-      case "orc" => spark.read.schema(schema).orc(files: _*)
-      case "csv" => spark.read.schema(schema)
-        .option("header", "true").csv(files: _*)
-      case "json" => spark.read.schema(schema).json(files: _*)
-      case other => throw new IllegalStateException(s"segment format $other")
-    }
   }
 
   /** Pinned-segment read — `insegment('0,2')` analog (CarbonEnv.scala:100). */
@@ -135,59 +110,38 @@ class GraftTable private (val spark: SparkSession, val path: String)
     val idx = new graft.engine.source.SegmentFileIndex(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], layout, vis, schema)
     val df = org.apache.spark.sql.graft.Shims.parquetRelationDf(spark, idx, schema)
-    // merge-on-read deltas mask rows on this path too
-    val live = Mutation.deltaFilter(this, vis.map(s => s -> layout.segmentFilePaths(s)))
-      .map(df.filter).getOrElse(df)
-    live.withColumn(idCol, graft.functions.GraftFunctions.tupleId)
+    LiveRows.mask(this, vis, df).withColumn(idCol, graft.functions.GraftFunctions.tupleId)
   }
 
   /** TIME TRAVEL (r17, beyond the reference — Delta/Iceberg `VERSION AS
     * OF`): the table exactly as of commit-log version `version`,
     * resolved via [[TableLayout.statusAt]] (checkpointed tables replay
     * ckpt + delta tail; inline tables read their timetravel='true'
-    * versioned snapshots). The as-of segment list drives the SAME
-    * pruning file index as live reads (segment/file min-max skip), and
-    * as-of merge-on-read delta lists mask exactly the rows that were
-    * dead AT that version. Served under the CURRENT schema (columns
-    * added since read as null on old files via parquet name matching).
-    * Fails loudly past the log horizon; segments physically reclaimed
-    * by CLEAN FILES (clean_files_retention_ms) fail at scan time —
+    * versioned snapshots). The same scan as the catalog's `SELECT …
+    * VERSION AS OF v`: the as-of segment list drives the DSv2 scan's
+    * pruning, and as-of merge-on-read delta lists mask exactly the rows
+    * that were dead AT that version. Served under the CURRENT schema
+    * with every column nullable (columns added or renamed since read
+    * as null on old files via parquet name matching). Fails loudly past
+    * the log horizon, at call time; segments physically reclaimed by
+    * CLEAN FILES (clean_files_retention_ms) fail at scan time —
     * retention bounds the readable past, exactly like Delta VACUUM. */
-  def readAsOf(version: Long): DataFrame =
-    readSegmentSubset(layout.statusAt(version).visible)
+  def readAsOf(version: Long): DataFrame = {
+    layout.statusAt(version)
+    scanAsOf(version, None)
+  }
 
-  /** Historical read restricted to an explicit segment subset — the
-    * shared machinery behind [[readAsOf]] (subset = everything
-    * visible) and [[readChanges]] (subset = only the segments the
-    * metadata diff says CHANGED). MoR delete deltas are applied
-    * per-segment like the live read; foreign formats read through
-    * their own readers; current-schema projection. */
-  private def readSegmentSubset(segs: Seq[graft.engine.format.SegmentMeta]): DataFrame = {
-    // NULLABILITY-RELAXED current schema (r20): historical states can
-    // predate a RENAME/RETYPE rewrite, and their files lack the
-    // current column name entirely — under a non-nullable field the
-    // vectorized reader refuses ("required column is missing") where
-    // the documented contract is "columns added since read as null".
-    // Live reads keep the strict schema; history serves nullable.
-    val hist = StructType(schema.fields.map(_.copy(nullable = true)))
-    if (segs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], hist)
-    else {
-      val (parquetSegs, foreign) = segs.partition(_.format == "parquet")
-      val base =
-        if (parquetSegs.isEmpty) None
-        else Some {
-          val idx = new graft.engine.source.SegmentFileIndex(
-            spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-            layout, parquetSegs, hist)
-          val df = org.apache.spark.sql.graft.Shims.parquetRelationDf(spark, idx, hist)
-          Mutation.deltaFilter(this,
-              parquetSegs.map(s => s -> layout.segmentFilePaths(s)))
-            .map(df.filter).getOrElse(df)
-        }
-      (base.toSeq ++ foreign.map(readForeignSegment)).reduce(_ unionByName _)
-        .select(hist.fieldNames.map(col).toSeq: _*)
-    }
+  /** The carbonish scan pinned to `version` (the relation
+    * `GraftCatalog.loadTable(ident, version)` serves), optionally
+    * restricted to the segment ids visible at that version in
+    * `segments`. */
+  private def scanAsOf(version: Long, segments: Option[Seq[Long]]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val table = new graft.engine.source.CarbonishTable(path, schema, asOfVersion = Some(version))
+    val options = new java.util.HashMap[String, String]()
+    segments.foreach(ids => options.put("segments", ids.mkString(",")))
+    org.apache.spark.sql.graft.Shims.ofRows(spark, DataSourceV2Relation.create(
+      table, None, None, new org.apache.spark.sql.util.CaseInsensitiveStringMap(options)))
   }
 
   /** CHANGE DATA FEED (r19, beyond the reference — Delta's
@@ -344,8 +298,8 @@ class GraftTable private (val spark: SparkSession, val path: String)
     // emits, so the result multiset matches by construction (grouping
     // equality == set-op equality: both normalize NaN/−0.0 through the
     // Aggregate keys; map-typed columns are rejected by both shapes).
-    val oldRows = readSegmentSubset(scanA)
-    val newRows = readSegmentSubset(scanB)
+    val oldRows = scanAsOf(fromVersion, Some(scanA.map(_.id)))
+    val newRows = scanAsOf(toVersion, Some(scanB.map(_.id)))
     val dataCols = newRows.columns.toSeq
     // fresh under the session's resolution rules (withColumn replaces
     // case-insensitively by default — r21, advisor r20)
@@ -707,8 +661,8 @@ class GraftTable private (val spark: SparkSession, val path: String)
     val (known, unknown) = vis.partition(_.rowCount >= 0)
     val base = known.map(_.rowCount).sum
     // -1 sentinels are foreign-format ADD SEGMENT entries: count them
-    // through their own readers (readSegments rejects non-parquet)
-    base + unknown.map(s => readForeignSegment(s).count()).sum
+    // with a scan of just those segments
+    base + (if (unknown.isEmpty) 0L else readSegments(unknown.map(_.id)).count())
   }
 
   // ---------------------------------------------------------------- insert
@@ -1087,7 +1041,7 @@ class GraftTable private (val spark: SparkSession, val path: String)
     val vis = status.visible
     val newMeta = updateMeta(meta)
     if (vis.isEmpty) { layout.writeTableMeta(newMeta); return }
-    val df = f(spark.read.schema(schema).parquet(vis.flatMap(layout.segmentFilePaths): _*))
+    val df = f(readSegments(vis.map(_.id)))
     var id = -1L
     layout.commit { st =>
       id = st.nextSegmentId
@@ -1661,10 +1615,7 @@ class GraftTable private (val spark: SparkSession, val path: String)
     else {
       // merge-on-read deltas fold into the compacted copy: read masked,
       // write clean — the compacted segment carries no deltas
-      val raw = spark.read.schema(schema)
-        .parquet(victims.flatMap(layout.segmentFilePaths): _*)
-      val df = Mutation.deltaFilter(this,
-        victims.map(s => s -> layout.segmentFilePaths(s))).map(raw.filter).getOrElse(raw)
+      val df = LiveRows.read(this, victims.map(s => s -> layout.segmentFilePaths(s)))
       var id = -1L
       layout.commit { st =>
         id = st.nextSegmentId
@@ -1853,25 +1804,10 @@ class GraftTable private (val spark: SparkSession, val path: String)
   private def foldOne(s: SegmentMeta, rel: String, dRels: Seq[String]): Boolean = {
     val dir = layout.segmentDir(s.id)
     val abs = new org.apache.hadoop.fs.Path(dir, rel)
-          // same executor-lazy mask as every read path (DeltaKeep over a
-          // broadcast path map): tasks load the position arrays of the
-          // file they read; positions never touch the driver
-          val bc = spark.sparkContext.broadcast(Map(
-            layout.fs.makeQualified(abs).toString ->
-              dRels.map(dr => new org.apache.hadoop.fs.Path(dir, dr).toString)))
-          val lookup = new org.apache.spark.sql.graft.DeltaLookup(bc,
-            new graft.engine.source.SerializableHadoopConf(
-              spark.sessionState.newHadoopConf()))
-          val keep = org.apache.spark.sql.graft.Shims.column(
-            org.apache.spark.sql.graft.DeltaKeep(
-              org.apache.spark.sql.graft.Shims.expression(col("_metadata.file_path")),
-              org.apache.spark.sql.graft.Shims.expression(col("_metadata.row_index")),
-              lookup))
           // one file in, one file out, original row order kept (the
           // segment's sort claim survives the fold)
-          val df = spark.read.schema(schema).parquet(abs.toString)
+          val df = LiveRows.read(this, Seq(s -> Seq(abs.toString)))
             .withColumn("__fold_ri", col("_metadata.row_index"))
-            .filter(keep)
             .coalesce(1).sortWithinPartitions("__fold_ri")
             .drop("__fold_ri")
           val tmp = new org.apache.hadoop.fs.Path(dir,

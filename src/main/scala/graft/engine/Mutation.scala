@@ -21,10 +21,8 @@ class ConcurrentMutationException(msg: String) extends RuntimeException(msg)
   * CDCBlockImplicitExpression), only those segments are rewritten, and
   * the commit is a single atomic tablestatus swap. Untouched segments
   * are never read or written, so a point-update of one segment on a
-  * 100 TB table rewrites ~1 segment, not the table. Merge-on-read delta
-  * masks on the maintenance read paths apply via the [[org.apache.spark.sql.graft.DeltaKeep]]
-  * codegen predicate (executor-lazy position loads over a broadcast
-  * path map — see [[deltaFilter]]).
+  * 100 TB table rewrites ~1 segment, not the table. Every scan here
+  * reads through [[LiveRows]], which masks merge-on-read deletes.
   */
 object Mutation extends org.apache.spark.internal.Logging {
 
@@ -44,39 +42,6 @@ object Mutation extends org.apache.spark.internal.Logging {
       s"cannot mutate ${t.path}: non-parquet segment(s) " +
         s"${foreign.map(s => s"${s.id}(${s.format})").mkString(",")}")
     vis.map(s => s -> t.layout.segmentFilePaths(s))
-  }
-
-  /** Anti-filter masking rows deleted by merge-on-read deltas, for the
-    * v1/maintenance read paths (mutation scans, tupleId reads,
-    * pagination, compaction). Only the data-file → delta-file PATH map
-    * ships (driver-bounded metadata, same class as the file lists the
-    * caller already holds); each task loads the position sets of the
-    * files it actually reads, lazily, with a per-task cache — positions
-    * never touch the driver, so a 10⁹-scattered-delete table masks at
-    * executor parallelism exactly like the main scan path
-    * ([[graft.engine.source.DeltaAwareReaderFactory]]). None = no
-    * deltas anywhere (caller skips the filter, keeping codegen clean). */
-  private[engine] def deltaFilter(
-      t: GraftTable, segs: Seq[(SegmentMeta, Seq[String])]): Option[Column] = {
-    val withDeltas = segs.map(_._1).filter(_.deltas.nonEmpty)
-    if (withDeltas.isEmpty) return None
-    val fs = t.layout.fs
-    val pathMap: Map[String, Seq[String]] = withDeltas.flatMap { s =>
-      val dir = t.layout.segmentDir(s.id)
-      s.deltas.map { case (rel, dRels) =>
-        fs.makeQualified(new org.apache.hadoop.fs.Path(dir, rel)).toString ->
-          dRels.map(dr => new org.apache.hadoop.fs.Path(dir, dr).toString)
-      }
-    }.toMap
-    val bc = t.spark.sparkContext.broadcast(pathMap)
-    val lookup = new org.apache.spark.sql.graft.DeltaLookup(bc,
-      new graft.engine.source.SerializableHadoopConf(
-        t.spark.sessionState.newHadoopConf()))
-    Some(org.apache.spark.sql.graft.Shims.column(
-      org.apache.spark.sql.graft.DeltaKeep(
-        org.apache.spark.sql.graft.Shims.expression(col("_metadata.file_path")),
-        org.apache.spark.sql.graft.Shims.expression(col("_metadata.row_index")),
-        lookup)))
   }
 
   /** Prune the candidate file set for a mutation predicate with the
@@ -218,13 +183,7 @@ object Mutation extends org.apache.spark.internal.Logging {
     val segs = pruneCandidates(t, segs0, cond)
     if (segs.isEmpty) return Map.empty
     val spark = decisionSession(t.spark)
-    val files = segs.flatMap(_._2)
-    // explicit schema: after a metadata-only ADD COLUMNS, footer
-    // inference would miss (or nondeterministically resolve) the new
-    // column and break conditions referencing it
-    val base = spark.read.schema(t.schema).parquet(files: _*)
-    val live = deltaFilter(t, segs).map(base.filter).getOrElse(base)
-    val hit = live
+    val hit = LiveRows.read(t, segs, segs.flatMap(_._2), spark)
       .filter(cond)
       .groupBy(col("_metadata.file_path").as("fp"))
       .count()
@@ -438,8 +397,7 @@ object Mutation extends org.apache.spark.internal.Logging {
 
     val (fullVictims, partialVictims, readFiles, before) =
       splitVictims(segs, affected.map { case (id, m) => id -> m.keySet })
-    val raw = t.spark.read.schema(t.schema).parquet(readFiles: _*)
-    val rows = deltaFilter(t, segs).map(raw.filter).getOrElse(raw)
+    val rows = LiveRows.read(t, segs, readFiles, t.spark)
     val id = reserve(t)
     val seg =
       try SegmentWriter.write(t.layout, t.meta, rewrite(rows), id,
@@ -667,8 +625,7 @@ object Mutation extends org.apache.spark.internal.Logging {
     if (segs.isEmpty || segs.flatMap(_._2).isEmpty)
       return t.spark.emptyDataFrame
         .select(lit("").as("__fp"), lit(0L).as("__pos")).limit(0)
-    val raw = t.spark.read.schema(t.schema).parquet(segs.flatMap(_._2): _*)
-    deltaFilter(t, segs).map(raw.filter).getOrElse(raw)
+    LiveRows.read(t, segs)
       .filter(cond)
       .select(col("_metadata.file_path").as("__fp"),
         col("_metadata.row_index").as("__pos"))
@@ -705,11 +662,9 @@ object Mutation extends org.apache.spark.internal.Logging {
     val schema = t.schema
     val segs = visibleFiles(t)
     if (segs.isEmpty || segs.flatMap(_._2).isEmpty) return 0L
-    val spark = t.spark
     val cands = pruneCandidates(t, segs, cond)
     if (cands.isEmpty || cands.flatMap(_._2).isEmpty) return 0L
-    val raw = spark.read.schema(schema).parquet(cands.flatMap(_._2): _*)
-    val matched = deltaFilter(t, cands).map(raw.filter).getOrElse(raw)
+    val matched = LiveRows.read(t, cands)
       .filter(cond)
       .select((schema.fieldNames.map(col).toSeq :+
         col("_metadata.file_path").as("__fp") :+
@@ -826,9 +781,7 @@ class MergeBuilder private[engine] (
       if (onlyTarget.nonEmpty) segs.map(p => p._1.id -> p._1.files.toSet).toMap
       else if (allFiles.isEmpty) Map.empty
       else {
-        val raw0 = spark.read.schema(schema).parquet(allFiles: _*)
-        val live0 = Mutation.deltaFilter(target, segs).map(raw0.filter).getOrElse(raw0)
-        val tgt = live0
+        val tgt = LiveRows.read(target, segs)
           .select((schema.fieldNames.map(col).toSeq :+ col("_metadata.file_path").as("__fp")): _*)
           .as("t")
         val hit = tgt.join(source.as("s"), condition)
@@ -842,10 +795,7 @@ class MergeBuilder private[engine] (
     val tgtRows =
       if (readFiles.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else {
-        val raw = spark.read.schema(schema).parquet(readFiles: _*)
-        Mutation.deltaFilter(target, segs).map(raw.filter).getOrElse(raw)
-      }
+      else LiveRows.read(target, segs, readFiles, spark)
 
     // full-outer join with presence markers (reference plans the same
     // shape, CarbonMergeDataSetCommand.scala:66)

@@ -85,10 +85,11 @@ object Pagination {
     val cover = coveringFiles(t, offset, limit)
     if (cover.isEmpty) return empty
 
-    val base = spark.read.schema(t.schema).parquet(cover.map(_.abs): _*)
+    val coverSegs = cover.map(_.seg).distinct.map(s => s -> t.layout.segmentFilePaths(s))
+    val live = LiveRows.read(t, coverSegs, cover.map(_.abs), spark)
     // start positions keyed by normalized path (SparkPath prints
     // file:/// while a qualified Path prints file:/ — same trick as
-    // Mutation.deltaFilter); the cover set is tiny, so a broadcast map
+    // LiveRows' delta map); the cover set is tiny, so a broadcast map
     // beats a when-chain that would grow with page span
     val fs = t.layout.fs
     val startByPath: Map[String, Long] = cover.map(f =>
@@ -103,18 +104,12 @@ object Pagination {
     val fp = col("_metadata.file_path")
     val ri = col("_metadata.row_index")
 
-    val coverSegs = cover.map(_.seg).distinct.map(s => s -> t.layout.segmentFilePaths(s))
-    val hasDeltas = cover.exists(f => f.seg.deltas.contains(f.rel))
     // live ordinal within the file: the physical row index where no rows
     // are masked; rank among surviving rows where delete deltas apply
     // (window shuffles only the covering files' rows — page-bounded)
-    val (live, ordinal) =
-      if (!hasDeltas) (base, ri)
-      else {
-        val masked = Mutation.deltaFilter(t, coverSegs).map(base.filter).getOrElse(base)
-        (masked,
-          row_number().over(Window.partitionBy(fp).orderBy(ri)).cast("long") - 1L)
-      }
+    val ordinal =
+      if (!cover.exists(f => f.seg.deltas.contains(f.rel))) ri
+      else row_number().over(Window.partitionBy(fp).orderBy(ri)).cast("long") - 1L
     val pos = startPos(fp) + ordinal
     live
       .withColumn("__pos", pos)

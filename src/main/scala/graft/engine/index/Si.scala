@@ -99,6 +99,9 @@ object Si {
       segments: Option[Seq[graft.engine.format.SegmentMeta]] = None): DataFrame = {
     val segs = segments.getOrElse(t.status.visible)
     val files = segs.flatMap(t.layout.segmentFilePaths)
+    // unmasked on purpose: postings may name rows that merge-on-read
+    // deltas deleted, and an index over a superset of the live rows
+    // stays correct because the scan it steers masks those rows
     val base = t.spark.read.schema(t.schema).parquet(files: _*)
       .select(col(column).as("v"), segIdFromPath.as("seg_id"),
         fileFromPath.as("file"), col("_metadata.row_index").as("ri"))

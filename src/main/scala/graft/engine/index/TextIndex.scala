@@ -39,6 +39,9 @@ object TextIndex {
       .cast("long")
     val relFile = regexp_extract(col("_metadata.file_path"),
       "/segments/[0-9]+/(.*)$", 1)
+    // unmasked on purpose: postings may name rows that merge-on-read
+    // deltas deleted, and an index over a superset of the live rows
+    // stays correct because the scan it steers masks those rows
     val base = t.spark.read.schema(t.schema).parquet(files.toSeq: _*)
       .select(explode(tokensOf(col(column))).as("term"), segId.as("seg_id"),
         relFile.as("file"), col("_metadata.row_index").as("ri"))

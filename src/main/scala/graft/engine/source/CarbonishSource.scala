@@ -97,10 +97,11 @@ class CarbonishSource extends TableProvider with DataSourceRegister
 class CarbonishTable(path: String, tableSchema: StructType,
     /** TIME TRAVEL (r17): Some(v) pins every scan to the commit-log
       * reconstruction of version v (GraftCatalog.loadTable's `VERSION
-      * AS OF` / `TIMESTAMP AS OF` hand-off). Writes are unaffected —
-      * Spark never routes DML through a time-travel relation. Index
-      * rewrites (SI, text_match) read the current snapshot, so they
-      * decline a relation that carries one. */
+      * AS OF` / `TIMESTAMP AS OF` hand-off, and GraftTable.readAsOf /
+      * readChanges). Writes are unaffected — Spark never routes DML
+      * through a time-travel relation. Index rewrites (SI, text_match)
+      * read the current snapshot, so they decline a relation that
+      * carries one. */
     val asOfVersion: Option[Long] = None)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -109,7 +110,15 @@ class CarbonishTable(path: String, tableSchema: StructType,
   def tablePath: String = path
   override def name(): String =
     s"carbonish.`$path`" + asOfVersion.map(v => s" VERSION AS OF $v").getOrElse("")
-  override def schema(): StructType = tableSchema
+  // History is served under the current schema with every column
+  // nullable: an old version can predate a RENAME/RETYPE rewrite, its
+  // files lack the current column name, and under a non-nullable field
+  // the vectorized reader refuses ("required column is missing") where
+  // the contract is "columns added since read as null".
+  private val servedSchema: StructType =
+    if (asOfVersion.isEmpty) tableSchema
+    else StructType(tableSchema.fields.map(_.copy(nullable = true)))
+  override def schema(): StructType = servedSchema
   // append/truncate/filter-overwrite run through the V1 write (the
   // planner dispatches per Write instance); BATCH_WRITE+OVERWRITE_DYNAMIC
   // exist for the one plan that hard-requires a real BatchWrite —
@@ -239,7 +248,8 @@ class CarbonishTable(path: String, tableSchema: StructType,
     val layout = new TableLayout(path, spark.sessionState.newHadoopConf())
     val status = asOfVersion.map(layout.statusAt).getOrElse(layout.readStatus())
     // `insegment('0,2')`-style pinned reads (reference CarbonEnv.scala:100)
-    val pinned = Option(options.get("segments")).map(_.split(",").map(_.trim.toLong).toSet)
+    val pinned = Option(options.get("segments"))
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSet)
     // A pinned read (insegment / readSegments / readFiles / SI) names
     // explicit segment ids: resolve them against the full commit log,
     // not just the currently-visible set. A compaction that commits
@@ -274,7 +284,7 @@ class CarbonishTable(path: String, tableSchema: StructType,
     // partitions concatenated — SELECT … FROM graft.ns.t serves the union
     val foreign = visible.filter(_.format != "parquet")
     if (foreign.nonEmpty)
-      return new MixedScanBuilder(spark, layout, visible, tableSchema, options)
+      return new MixedScanBuilder(spark, layout, visible, servedSchema, options)
     // metadata count(*) is only sound when every visible segment carries
     // an exact row count (external ADD SEGMENT files may not), and never
     // on a file-pinned read (segment rowCount covers ALL its files)
@@ -282,7 +292,7 @@ class CarbonishTable(path: String, tableSchema: StructType,
       if (filePin.isEmpty && visible.forall(_.rowCount >= 0))
         Some(visible.map(_.rowCount).sum)
       else None
-    new CarbonishScanBuilder(spark, layout, visible, tableSchema, options, totalRows)
+    new CarbonishScanBuilder(spark, layout, visible, servedSchema, options, totalRows)
   }
 
   /** Append / truncate-overwrite / filter-overwrite (the v2 plan for
@@ -1521,7 +1531,7 @@ class MixedScan(
         // the full carbonish ladder for the managed segments
         new CarbonishScanBuilder(spark, layout, segs, schema, options, None)
       case "csv" =>
-        // match GraftTable.readForeignSegment: header'd CSV
+        // ADD SEGMENT csv files carry a header row
         val opts = new CaseInsensitiveStringMap(
           (options.asScala ++ Map("header" -> "true")).asJava)
         CSVScanBuilder(spark, idx, schema, schema, opts)

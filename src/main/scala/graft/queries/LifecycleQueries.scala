@@ -593,8 +593,8 @@ object LifecycleQueries {
     * (the mis-step). The query reads the pre-retire version — the
     * oracle is the FULL supplier table, so a green row proves the
     * as-of read resurrects a foreign-format segment through the same
-    * parquet+foreign union the live read uses (readAsOf partitions
-    * resurrected segments by format), not just parquet. */
+    * mixed-format scan the live read uses (one sub-scan per segment
+    * format), not just parquet. */
   private def supplierMixedTravel(s: SparkSession, d: String): (GraftTable, Long) = lock.synchronized {
     val p = path(d, "lc_ttmixed")
     val vMark = new java.io.File(s"${p}_v1.txt")

@@ -20,14 +20,18 @@ class ChangesSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.datasources.FilePartition
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    // query stages are leaves of an adaptive plan: descend into them,
+    // or a scan below an exchange goes uncounted
     def scansExec(p: SparkPlan): Seq[BatchScanExec] = p.collect {
       case b: BatchScanExec => Seq(b)
       case a: AdaptiveSparkPlanExec => scansExec(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scansExec(q.plan)
     }.flatten
     val fromExec = scansExec(df.queryExecution.executedPlan)
       .flatMap(_.scan.toBatch.planInputPartitions())
-    // readSegmentSubset goes through a v1 parquet HadoopFsRelation —
-    // collect its files from the optimized plan too
+    // a leg read through a v1 parquet HadoopFsRelation would show its
+    // files only in the optimized plan — count those too, so no read
+    // path escapes the count
     val fromRelation = df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         r.relation match {

@@ -78,6 +78,23 @@ class DdlSpec extends AnyFunSuite {
     assert(direct.select("n_name").distinct().count() == 25)
   }
 
+  test("RENAME COLUMN on a mixed-format table rewrites the csv segment too") {
+    val rows = (lo: Long, hi: Long) =>
+      spark.range(lo, hi).selectExpr("id AS k", "CAST(id AS STRING) AS s")
+    val t = GraftTable.create(spark, tmpTable(), rows(0, 1).schema)
+    t.insert(rows(0, 50))
+    val ext = Files.createTempDirectory("graft_csv_").toString
+    rows(50, 100).coalesce(1).write.option("header", "true").mode("overwrite").csv(ext)
+    t.addSegment(ext, "csv")
+    t.renameColumn("s", "name")
+    assert(t.schema.fieldNames.toSeq == Seq("k", "name"))
+    val got = t.read.select("k", "name").collect()
+    assert(got.length == 100)
+    assert(got.map(_.getLong(0)).toSet == (0L until 100L).toSet)
+    assert(got.forall(r => r.getString(1) == r.getLong(0).toString))
+    assert(t.status.visible.forall(_.format == "parquet"))
+  }
+
   test("ADD SEGMENT parquet registers from footers: zero Spark jobs, file stats on") {
     val src = spark.read.parquet(s"$sf/nation.parquet")
     val t = GraftTable.createAsSelect(spark, tmpTable(), src.filter(col("n_nationkey") < 10))

@@ -2,7 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Merge-on-read IUD: DELETE/UPDATE write per-file delete-delta
   * position files (the reference's immutable-file model,
@@ -50,6 +51,22 @@ class MorSpec extends AnyFunSuite {
       s"metadata count must still fire (zero files):\n$agg")
     // tupleId (v1) path masks deltas too
     assert(t.readWithTupleId().count() == 3960)
+  }
+
+  test("RENAME and CHANGE DATATYPE keep merge-on-read deletes") {
+    // both rewrite every visible row under the new schema; the rewrite
+    // must read through the delete mask, not the raw data files
+    val renamed = mk()
+    assert(renamed.delete(col("k") % 100 === 7L) == 40L)
+    renamed.renameColumn("v", "w")
+    assert(renamed.read.count() == 3960 && renamed.countStar == 3960)
+    assert(renamed.read.filter(col("k") % 100 === 7L).count() == 0)
+
+    val retyped = mk()
+    assert(retyped.delete(col("k") % 100 === 7L) == 40L)
+    retyped.changeColumnType("v", org.apache.spark.sql.types.StringType)
+    assert(retyped.read.count() == 3960 && retyped.countStar == 3960)
+    assert(retyped.read.filter(col("k") % 100 === 7L).count() == 0)
   }
 
   test("maintenance reads load delta positions on executors only (no driver materialization)") {
@@ -293,5 +310,35 @@ class MorSpec extends AnyFunSuite {
     assert(deleted == 1L)
     assert(t.read.filter(col("k") === 9005L).count() == 0)
     assert(t.read.count() == 4099)
+  }
+
+  test("only LiveRows builds the merge-on-read mask for positional reads") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main),
+      s"expected the sources under ${main.toAbsolutePath}")
+    val helper = main.resolve("graft/engine/LiveRows.scala")
+    assert(Files.exists(helper))
+    val maskBuilders = Seq(
+      """(?<!class )\bDeltaKeep\s*\(""".r,
+      """\bdeltaFilter\s*\(""".r)
+    val relationCall = """(?<!def )\bparquetRelationDf\s*\(""".r
+    val files = Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def code(p: java.nio.file.Path): Seq[(String, Int)] =
+      Files.readAllLines(p).asScala.zipWithIndex.filterNot { case (l, _) =>
+        val t = l.trim
+        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+      }.toSeq
+    val offenders = for {
+      p <- files if p != helper
+      (l, i) <- code(p) if maskBuilders.exists(_.findFirstIn(l).isDefined)
+    } yield s"$p:${i + 1}: ${l.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // readWithTupleId is the one v1-relation read left
+    val relationCalls = for {
+      p <- files
+      (l, i) <- code(p) if relationCall.findFirstIn(l).isDefined
+    } yield s"$p:${i + 1}"
+    assert(relationCalls.size <= 1, relationCalls.mkString("\n"))
   }
 }
