@@ -5,48 +5,73 @@ import graft.engine.index.{SiRewriteRule, TextMatchRule, TextMatchSql}
 import graft.engine.mv.MvRewriteRule
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graft.Shims
 
-/** The one way graft attaches to a Spark session — the analog of the
-  * reference's CarbonExtensions, which injects its parser, rules and
-  * strategies together (CarbonExtensions.scala:31-62). [[install]] puts
-  * everything graft adds to a session onto it at once:
-  *   - optimizer rules: MV rewrite, SI rewrite, text_match rewrite;
-  *   - the DML strategy (SQL UPDATE and MERGE INTO on carbonish catalog
-  *     tables);
-  *   - SQL functions: the text_match markers, graft's functions
-  *     ([[graft.functions.GraftFunctions]]) and the geo functions.
-  * Every table open runs it — [[GraftTable]]'s constructor and
-  * [[catalog.GraftCatalog]]'s `loadTable` — so which accelerations a
-  * query gets never depends on what its session happened to run
-  * before. */
+/** The parts graft adds to a Spark session — the analog of the
+  * reference's CarbonExtensions (CarbonExtensions.scala:31-62): the MV,
+  * SI and text_match optimizer rules, the DML strategy (SQL UPDATE and
+  * MERGE INTO on carbonish tables), graft's SQL functions and the
+  * `TABLE_CHANGES` table function. [[GraftExtensions]] injects them,
+  * with graft's statement parser, when a session is built;
+  * [[install]] puts them on any other session at its first table open
+  * ([[GraftTable]]'s constructor, [[catalog.GraftCatalog]]'s
+  * `loadTable`), so what a query gets never depends on what its session
+  * ran before. */
 object GraftSession {
   // ExperimentalMethods' rule and strategy lists are plain vars: two
   // unsynchronized read-modify-writes could drop one another's entries
   private val lock = new Object
 
-  /** Idempotent; once a session carries graft this is a lock-free check. */
+  // MV first: a whole aggregate served by an MV beats an index pinning
+  // its input, and a pinned scan no longer matches the MV
+  private[engine] def rules: Seq[Rule[LogicalPlan]] =
+    Seq(new MvRewriteRule, new SiRewriteRule, new TextMatchRule)
+
+  private[engine] def strategy: GraftDmlStrategy = new GraftDmlStrategy
+
+  private[engine] lazy val functions: Seq[(String, Seq[Expression] => Expression)] =
+    (TextMatchSql.markers ++ graft.functions.GraftFunctions.sqlUdfs ++
+        graft.geo.Geo.sqlUdfs).map { case (name, f) => name -> Shims.udfBuilder(name, f) } ++
+      graft.functions.GraftFunctions.sqlNatives
+
+  private[engine] val tableFunction = "table_changes" -> GraftSql.tableChanges
+
+  def info(name: String): ExpressionInfo =
+    new ExpressionInfo(getClass.getName, null, name, null, "", "", "", "", "", "", "built-in")
+
+  /** Idempotent; once a session carries graft this is a lock-free check.
+    * A no-op on a session built with [[GraftExtensions]]. */
   def install(spark: SparkSession): Unit =
     if (!installed(spark)) lock.synchronized {
       if (!installed(spark)) {
-        (TextMatchSql.markers ++ graft.functions.GraftFunctions.sqlUdfs ++
-            graft.geo.Geo.sqlUdfs).foreach { case (name, f) =>
-          spark.udf.register(name, f)
-        }
-        graft.functions.GraftFunctions.sqlNatives.foreach { case (name, build) =>
-          org.apache.spark.sql.graft.Shims.registerNative(spark, name, build)
-        }
-        val x = spark.experimental
-        // MV first: a whole aggregate served by an MV beats an index
-        // pinning its input, and a pinned scan no longer matches the MV
-        x.extraOptimizations = x.extraOptimizations ++
-          Seq(new MvRewriteRule, new SiRewriteRule, new TextMatchRule)
+        functions.foreach { case (name, build) => Shims.registerFunction(spark, name, build) }
+        Shims.registerTableFunction(spark, tableFunction._1, tableFunction._2)
+        attachRules(spark)
         // written last: its presence is what `installed` checks
-        x.extraStrategies = x.extraStrategies :+ new GraftDmlStrategy
+        spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ strategy
       }
     }
+
+  /** The rules must see DSv2 scans after push-down: only the session's
+    * `experimental.extraOptimizations` batch runs there, and session
+    * extensions have no hook into it. Idempotent. */
+  private[engine] def attachRules(spark: SparkSession): Unit =
+    if (!rulesAttached(spark)) lock.synchronized {
+      if (!rulesAttached(spark)) {
+        val x = spark.experimental
+        x.extraOptimizations = x.extraOptimizations ++ rules
+      }
+    }
+
+  private def rulesAttached(spark: SparkSession): Boolean =
+    spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewriteRule])
 
   /** The strategy list is a volatile field written after everything
     * else, so seeing the strategy means the rest is visible too. */
   private def installed(spark: SparkSession): Boolean =
-    spark.experimental.extraStrategies.exists(_.isInstanceOf[GraftDmlStrategy])
+    spark.experimental.extraStrategies.exists(_.isInstanceOf[GraftDmlStrategy]) ||
+      spark.sessionState.sqlParser.isInstanceOf[GraftSqlParser]
 }

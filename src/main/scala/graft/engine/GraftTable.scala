@@ -633,10 +633,6 @@ class GraftTable private (val spark: SparkSession, val path: String)
     dest
   }
 
-  /** Timestamp form of [[restoreTo]]. */
-  def restoreToTimestamp(tsMillis: Long): Long =
-    restoreTo(layout.versionAtTimestamp(tsMillis))
-
   /** Paged read: rows [offset, offset+limit) of committed table order
     * (PaginationCarbonReader analog — see [[Pagination]]): only the
     * covering files are opened, located from footer live row counts. */
@@ -968,70 +964,70 @@ class GraftTable private (val spark: SparkSession, val path: String)
         "against a new spec would silently drop rows")
   }
 
-  /** ALTER TABLE SET/UNSET TBLPROPERTIES — metadata-only, locked RMW.
-    * The layout-immutability check runs INSIDE the update closure —
-    * the same table lock segment commits take — so there is no
-    * check-then-act window against a concurrent writer; current-value
-    * lookups are case-insensitive (DSv2 preserves user key case). */
-  def setProperties(props: Map[String, String]): Unit =
-    layout.updateTableMeta { m =>
-      val lower = m.properties.map { case (k, v) => k.toLowerCase -> v }
-      checkLayoutImmutable(m, props.keys,
-        k => !lower.get(k.toLowerCase).contains(props(k)))
-      m.copy(properties = m.properties ++ props)
-    }
-  def unsetProperties(keys: Seq[String]): Unit =
-    layout.updateTableMeta { m =>
-      val lower = m.properties.map { case (k, v) => k.toLowerCase -> v }
-      checkLayoutImmutable(m, keys, k => lower.contains(k.toLowerCase))
-      m.copy(properties = m.properties -- keys)
-    }
+  /** Metadata-only property changes, one locked RMW each. */
+  def setProperties(props: Map[String, String]): Unit = alterMeta(None, None, props, Nil)
+  def unsetProperties(keys: Seq[String]): Unit = alterMeta(None, None, Map.empty, keys)
 
-  /** ALTER TABLE … SET TBLPROPERTIES('SORT_COLUMNS'=…[, 'SORT_SCOPE'=…])
-    * (reference CarbonAlterTableSetCommand; docs/ddl-of-carbondata.md
-    * SORT_COLUMNS/SORT_SCOPE modification): metadata-only — FUTURE
-    * loads and compactions write under the new spec ([[meta]] re-reads
-    * per call), while existing segments keep the sortColumns RECORDED
-    * in their SegmentMeta. Every sort-dependent read claim
-    * (outputOrdering, pagination's committed-order contract) already
-    * refuses mixed-spec tables, and TopN/min-max pruning is footer-
-    * stats-based, so the change is always sound; a MAJOR compaction
-    * rewrites everything under the new spec and restores the
-    * table-wide ordering claim. Empty `cols` = NO sort (reference
-    * SORT_COLUMNS=''). */
+  /** ALTER TABLE SET/UNSET TBLPROPERTIES, for both SQL surfaces, in one
+    * commit: if ANY part fails validation, NOTHING is applied.
+    * SORT_COLUMNS/SORT_SCOPE alter the sort spec (reference
+    * CarbonAlterTableSetCommand; docs/ddl-of-carbondata.md) — as plain
+    * properties they would be a silent no-op. That is metadata-only:
+    * FUTURE loads and compactions write under the new spec, existing
+    * segments keep the sortColumns RECORDED in their SegmentMeta. Every
+    * sort-dependent read claim (outputOrdering, pagination) refuses
+    * mixed-spec tables and TopN/min-max pruning is footer-stats-based,
+    * so the change is always sound; a MAJOR compaction restores the
+    * table-wide ordering claim. Empty SORT_COLUMNS = NO sort. */
+  def alterProperties(set: Map[String, String], unset: Seq[String] = Nil): Unit = {
+    def sortKey(k: String): Boolean =
+      k.equalsIgnoreCase("sort_columns") || k.equalsIgnoreCase("sort_scope")
+    // sort_scope always has a value: "unsetting" it has no meaning
+    require(!unset.exists(_.equalsIgnoreCase("sort_scope")),
+      "cannot UNSET sort_scope — SET it to NO_SORT/LOCAL_SORT/GLOBAL_SORT/ZORDER_SORT")
+    val cols = set.collectFirst { case (k, v) if k.equalsIgnoreCase("sort_columns") =>
+      v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    }.orElse(if (unset.exists(_.equalsIgnoreCase("sort_columns"))) Some(Nil) else None)
+    val scope = set.collectFirst { case (k, v) if k.equalsIgnoreCase("sort_scope") => v }
+    alterMeta(cols, scope, set.filterNot(kv => sortKey(kv._1)), unset.filterNot(sortKey))
+  }
+
+  /** The sort-spec part of [[alterProperties]], plus ordinary properties. */
   def alterSortColumns(cols: Seq[String], scope: Option[String] = None): Unit =
     alterSortAndProperties(cols, scope, Map.empty)
-
-  /** One locked commit for an ALTER TABLE SET TBLPROPERTIES statement
-    * that mixes a sort-spec change with ordinary properties — the
-    * statement is atomic: if ANY part fails validation (unknown sort
-    * column, bad scope, spatial leading-key rule, or an immutable
-    * layout key in `rest` with data present), NOTHING is applied. The
-    * two-commit shape this replaces could leave the sort spec altered
-    * while the rest of the statement was rejected. */
   def alterSortAndProperties(cols: Seq[String], scope: Option[String],
-      rest: Map[String, String]): Unit = {
-    val bad = cols.filterNot(c => schema.fieldNames.contains(c))
-    require(bad.isEmpty, s"sort columns not in schema: ${bad.mkString(",")}")
+      rest: Map[String, String]): Unit =
+    alterMeta(Some(cols), scope, rest, Nil)
+
+  /** One locked TableMeta commit. The layout-immutability check runs
+    * INSIDE the update closure — the lock segment commits take — so no
+    * concurrent writer slips between check and act; current-value
+    * lookups are case-insensitive (DSv2 preserves user key case). */
+  private def alterMeta(cols: Option[Seq[String]], scope: Option[String],
+      set: Map[String, String], unset: Seq[String]): Unit = {
+    cols.foreach { cs =>
+      val bad = cs.filterNot(c => schema.fieldNames.contains(c))
+      require(bad.isEmpty, s"sort columns not in schema: ${bad.mkString(",")}")
+      // a spatial-index table's generated geoId column must stay the
+      // leading sort key — geoId range pruning degrades badly without
+      // the write-time clustering (the reference refuses altering the
+      // SPATIAL_INDEX column entirely)
+      graft.geo.SpatialIndex.of(meta.properties).foreach { sp =>
+        require(cs.headOption.contains(sp.name),
+          s"spatial-index table: SORT_COLUMNS must keep '${sp.name}' first")
+      }
+    }
     scope.foreach(sc => require(
       Seq("NO_SORT", "LOCAL_SORT", "GLOBAL_SORT", "ZORDER_SORT").contains(sc.toUpperCase),
       s"bad sort scope $sc"))
-    // a spatial-index table's generated geoId column must stay the
-    // leading sort key — geoId range pruning degrades badly without
-    // the write-time clustering (the reference refuses altering the
-    // SPATIAL_INDEX column entirely)
-    graft.geo.SpatialIndex.of(meta.properties).foreach { sp =>
-      require(cols.headOption.contains(sp.name),
-        s"spatial-index table: SORT_COLUMNS must keep '${sp.name}' first")
-    }
     layout.updateTableMeta { m =>
       val lower = m.properties.map { case (k, v) => k.toLowerCase -> v }
-      checkLayoutImmutable(m, rest.keys,
-        k => !lower.get(k.toLowerCase).contains(rest(k)))
+      checkLayoutImmutable(m, set.keys, k => !lower.get(k.toLowerCase).contains(set(k)))
+      checkLayoutImmutable(m, unset, k => lower.contains(k.toLowerCase))
       m.copy(
-        sortColumns = cols,
+        sortColumns = cols.getOrElse(m.sortColumns),
         sortScope = scope.map(_.toUpperCase).getOrElse(m.sortScope),
-        properties = m.properties ++ rest)
+        properties = m.properties ++ set -- unset)
     }
   }
 

@@ -219,27 +219,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       case u: TableChange.UpdateColumnType =>
         require(u.fieldNames.length == 1, "nested ALTER COLUMN is not supported")
         t.changeColumnType(u.fieldNames.head, u.newDataType)
-      // sort spec lives in TableMeta fields, not the property bag — a
-      // plain setProperties would write a dead 'sort_columns' property
-      // the scan never reads (silent no-op). Route to the real alter.
-      case p: TableChange.SetProperty if p.property.equalsIgnoreCase("sort_columns") =>
-        t.alterSortColumns(
-          p.value.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      case p: TableChange.SetProperty if p.property.equalsIgnoreCase("sort_scope") =>
-        t.alterSortColumns(t.meta.sortColumns, Some(p.value))
-      case p: TableChange.RemoveProperty if p.property.equalsIgnoreCase("sort_columns") =>
-        t.alterSortColumns(Nil)
-      case p: TableChange.RemoveProperty if p.property.equalsIgnoreCase("sort_scope") =>
-        // always has a value — silently "removing" it would be a no-op
-        throw new UnsupportedOperationException(
-          "cannot UNSET sort_scope — SET it to NO_SORT/LOCAL_SORT/GLOBAL_SORT/ZORDER_SORT")
-      case p: TableChange.SetProperty =>
-        t.setProperties(Map(p.property -> p.value))
-      case p: TableChange.RemoveProperty =>
-        t.unsetProperties(Seq(p.property))
+      // property changes commit together, below
+      case _: TableChange.SetProperty | _: TableChange.RemoveProperty =>
       case other => throw new UnsupportedOperationException(
         s"ALTER TABLE change ${other.getClass.getSimpleName}")
     }
+    val set = changes.collect { case p: TableChange.SetProperty => p.property -> p.value }
+    val unset = changes.collect { case p: TableChange.RemoveProperty => p.property }
+    if (set.nonEmpty || unset.nonEmpty) t.alterProperties(set.toMap, unset)
     loadTable(ident)
   }
 

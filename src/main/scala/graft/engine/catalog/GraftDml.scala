@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions.expr
   * Spark's own parser produces an analyzed [[UpdateTable]] command, but
   * only executes it for `SupportsRowLevelOperations` sources; for
   * everything else the built-in strategy throws. This strategy (put
-  * ahead of the built-ins by [[graft.engine.GraftSession.install]],
+  * ahead of the built-ins by [[graft.engine.GraftSession]],
   * together with graft's optimizer rules) intercepts
   * the analyzed plan and routes it to the engine's copy-on-write
   * [[graft.engine.Mutation]] path — only segments containing matching

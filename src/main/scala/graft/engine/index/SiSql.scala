@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * file → segment grain) with the ORIGINAL filter kept as the exact
   * residual, so users get index pruning without calling
   * [[Si.readWhereIn]] themselves. Attached to a session with the rest
-  * of graft by [[graft.engine.GraftSession.install]]; it acts on tables
+  * of graft by [[graft.engine.GraftSession]]; it acts on tables
   * whose meta registers an SI (`si.<column>`). */
 class SiRewriteRule extends Rule[LogicalPlan] {
 

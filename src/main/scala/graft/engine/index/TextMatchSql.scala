@@ -31,7 +31,7 @@ object TextMatchSql {
     "(the index rewrite rule did not fire on this plan)"
 
   /** The marker UDFs [[TextMatchRule]] rewrites, registered with the
-    * rule by [[graft.engine.GraftSession.install]]. */
+    * rule by [[graft.engine.GraftSession]]. */
   private[graft] def markers: Seq[(String, UserDefinedFunction)] = {
     val f1: String => Boolean = _ => throw new UnsupportedOperationException(err)
     val f2: (String, Int) => Boolean = (_, _) => throw new UnsupportedOperationException(err)

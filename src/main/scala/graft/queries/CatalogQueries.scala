@@ -160,15 +160,17 @@ object CatalogQueries {
         s"FROM $cat.default.sqlupd GROUP BY o_orderpriority")
     }),
     // UPDATE … SET (…) = (SELECT …) — the reference's update-from-
-    // subquery form (CarbonSpark2SqlParser.scala:259), routed through
-    // the MergeBuilder by GraftSql.command: stamp each high-value
-    // order's clerk with its customer's name.
+    // subquery form (CarbonSpark2SqlParser.scala:259), which graft's
+    // parser builds as a MERGE for the MergeBuilder: stamp each
+    // high-value order's clerk with its customer's name. The grammar
+    // needs a session carrying GraftExtensions.
     "q_sql_update_subquery" -> ((s, d) => {
       val cat = freshCatalogTable(s, d, "sqlupdsq", t(s, d, "orders"), Seq("o_orderkey"))
       val base = new java.io.File(d).getName
       val p = s"${Fixtures.root}/$base/warehouse/default/sqlupdsq"
-      t(s, d, "customer").createOrReplaceTempView("updsq_cust")
-      graft.engine.GraftSql.command(s,
+      val x = graft.engine.GraftExtensions.session()
+      t(x, d, "customer").createOrReplaceTempView("updsq_cust")
+      x.sql(
         s"""UPDATE $p AS o SET (o_orderpriority) = (
               SELECT c.c_name FROM updsq_cust c WHERE c.c_custkey = o.o_custkey)
             WHERE o.o_totalprice > 400000.0""")

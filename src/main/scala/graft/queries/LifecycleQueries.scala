@@ -370,9 +370,7 @@ object LifecycleQueries {
       val n = src.agg(max("o_orderkey")).collect().head.getLong(0) + 1
       val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"))
       tbl.insert(src.filter(col("o_orderkey") < n / 2))
-      graft.engine.GraftSql.command(s,
-        s"ALTER TABLE `$p` SET TBLPROPERTIES(" +
-          "'sort_columns'='o_custkey', 'sort_scope'='LOCAL_SORT')")
+      tbl.alterSortAndProperties(Seq("o_custkey"), Some("LOCAL_SORT"), Map.empty)
       tbl.insert(src.filter(col("o_orderkey") >= n / 2))
       tbl.compact("MAJOR")
       tbl
@@ -529,8 +527,7 @@ object LifecycleQueries {
       tbl.insert(src)
       val v1 = tbl.status.version
       graft.engine.Mutation.delete(tbl, col("o_orderkey") % 3 === 2)
-      graft.engine.GraftSql.command(s,
-        s"CREATE TABLE $cp DEEP CLONE $p VERSION AS OF $v1")
+      tbl.deepCloneTo(cp, Some(v1))
       // vacuum the source: age every mtime past the sweep graces, then
       // CLEAN FILES — reclaims the pre-delete files a shallow clone
       // would still point at

@@ -72,15 +72,30 @@ object Shims {
   def waitListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Register a native catalyst function under a SQL name —
-    * `spark.udf.register` can't register AggregateFunction expressions
-    * (private[sql] FunctionRegistry). */
-  def registerNative(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
+  /** Register a (table-valued) function builder under a SQL name on a
+    * running session (private[sql] registries) — the runtime twins of
+    * `injectFunction`/`injectTableFunction`. */
+  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+    spark.sessionState.functionRegistry.registerFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+      graft.engine.GraftSession.info(name), builder)
+  def registerTableFunction(spark: org.apache.spark.sql.SparkSession, name: String,
+      builder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Unit =
+    spark.sessionState.tableFunctionRegistry.registerFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+      graft.engine.GraftSession.info(name), builder)
+
+  /** A Scala UDF as a function builder: the ScalaUDF expression
+    * `spark.udf.register` would build, named so plans show `name`. */
+  def udfBuilder(name: String,
+      f: org.apache.spark.sql.expressions.UserDefinedFunction)
+      : Seq[Expression] => Expression = {
+    val named = f.withName(name)
+      .asInstanceOf[org.apache.spark.sql.expressions.SparkUserDefinedFunction]
+    children => org.apache.spark.sql.classic.UserDefinedFunctionUtils.toScalaUDF(named, children)
+  }
 
   /** v1 parquet relation over a caller-supplied FileIndex. Unlike the
     * DSv2 FileTable path this exposes the `_metadata` columns (tupleId),

@@ -142,17 +142,16 @@ class AlterSortSpec extends AnyFunSuite {
     val src = spark.range(0, 500).selectExpr("id AS a", "(499 - id) AS b")
     val t = GraftTable.createAsSelect(spark, s"$root/t", src, Seq("a"))
     // path-table form through the command grammar
-    assert(GraftSql.command(spark,
+    spark.sql(
       s"ALTER TABLE `$root/t` SET TBLPROPERTIES('sort_columns'='b', " +
-        "'sort_scope'='LOCAL_SORT', 'custom.tag'='x')").isDefined)
+        "'sort_scope'='LOCAL_SORT', 'custom.tag'='x')")
     assert(t.meta.sortColumns == Seq("b"))
     assert(t.meta.sortScope == "LOCAL_SORT")
     assert(t.meta.properties.get("custom.tag").contains("x"))
     assert(!t.meta.properties.contains("sort_columns"),
       "sort spec must not leak into the property bag")
-    assert(GraftSql.command(spark,
+    spark.sql(
       s"ALTER TABLE `$root/t` UNSET TBLPROPERTIES('custom.tag', 'sort_columns')")
-      .isDefined)
     assert(t.meta.sortColumns.isEmpty)
     assert(!t.meta.properties.contains("custom.tag"))
 
@@ -167,5 +166,23 @@ class AlterSortSpec extends AnyFunSuite {
     assert(GraftTable.at(spark, s"$w/ns/t").meta.sortColumns == Seq("j"))
     spark.sql("ALTER TABLE gasort.ns.t SET TBLPROPERTIES('sort_scope'='GLOBAL_SORT')")
     assert(GraftTable.at(spark, s"$w/ns/t").meta.sortScope == "GLOBAL_SORT")
+  }
+
+  test("catalog ALTER SET TBLPROPERTIES commits the statement once: a rejected key leaves the sort spec") {
+    val w = Files.createTempDirectory("graft_asort_once_").toString
+    spark.conf.set("spark.sql.catalog.gasort1", "graft.engine.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gasort1.warehouse", w)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gasort1.ns")
+    spark.sql("CREATE TABLE gasort1.ns.t (k INT, j INT) USING carbonish " +
+      "TBLPROPERTIES ('sort_columns'='k', 'bucket_columns'='k', 'bucket_count'='4')")
+    spark.sql("INSERT INTO gasort1.ns.t VALUES (1, 2), (3, 4)")
+    val t = GraftTable.at(spark, s"$w/ns/t")
+    // bucket_count cannot change once data exists, so the whole
+    // statement must fail — including its sort_columns part
+    val e = intercept[Exception](spark.sql(
+      "ALTER TABLE gasort1.ns.t SET TBLPROPERTIES('sort_columns'='j', 'bucket_count'='8')"))
+    assert(e.getMessage.contains("bucket_count"), e.getMessage)
+    assert(t.meta.sortColumns == Seq("k"), "the rejected statement altered the sort spec")
+    assert(t.meta.properties.get("bucket_count").contains("4"))
   }
 }

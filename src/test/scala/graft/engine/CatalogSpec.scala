@@ -185,8 +185,7 @@ class CatalogSpec extends AnyFunSuite {
     GraftTable.createAsSelect(spark, s"$base/src", src,
       sortColumns = Seq("k"), partitionColumns = Seq("p"),
       properties = Map("note" -> "n1"))
-    val res = GraftSql.command(spark, s"CREATE TABLE $base/dst LIKE $base/src")
-    assert(res.isDefined)
+    spark.sql(s"CREATE TABLE $base/dst LIKE $base/src")
     val dst = GraftTable.at(spark, s"$base/dst")
     assert(dst.schema == GraftTable.at(spark, s"$base/src").schema)
     assert(dst.meta.sortColumns == Seq("k"))
@@ -194,7 +193,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(dst.meta.properties.get("note").contains("n1"))
     assert(dst.read.count() == 0, "LIKE clones structure, not data")
     // CarbonCli-style per-file summary rides the same command surface
-    val summary = GraftSql.command(spark, s"SHOW SUMMARY FOR TABLE $base/src").get
+    val summary = spark.sql(s"SHOW SUMMARY FOR TABLE $base/src")
     assert(summary.columns.toSeq ==
       Seq("segment", "file", "format", "live_rows", "bytes",
         "delta_files", "sort_col", "sort_min", "sort_max"))

@@ -301,17 +301,59 @@ class ChangesSpec extends AnyFunSuite {
     val one = t.readChanges(v2).collect()
     assert(one.length == 15 && one.forall(_.getAs[String]("_change_type") == "insert"))
     assert(one.map(_.getLong(0)).toSet == (30L until 45L).toSet)
-    val sql = GraftSql.command(spark,
-      s"SELECT * FROM TABLE_CHANGES('$dir', $v2)").get.collect()
+    val sql = spark.sql(
+      s"SELECT * FROM TABLE_CHANGES('$dir', $v2)").collect()
     assert(sql.map(_.getLong(0)).toSet == (30L until 45L).toSet)
     intercept[IllegalArgumentException](t.readChanges(0L))
     GraftTable.drop(spark, dir)
   }
 
-  test("TABLE_CHANGES misuse errors loudly with the supported grammar") {
-    val e = intercept[IllegalArgumentException](GraftSql.command(spark,
-      "SELECT k FROM TABLE_CHANGES('/tmp/x', 1, 2) WHERE k > 3"))
-    assert(e.getMessage.contains("TABLE_CHANGES supports exactly"))
+  test("TABLE_CHANGES is a table-valued function: projection and WHERE around it") {
+    val dir = Files.createTempDirectory("graft_cdftvf_").toString + "/t"
+    val t = GraftTable.create(spark, dir,
+      spark.range(0, 1).selectExpr("id AS k").schema,
+      properties = Map("timetravel" -> "true"))
+    t.insert(spark.range(0, 5).selectExpr("id AS k"))
+    val v1 = t.status.version
+    t.insert(spark.range(5, 12).selectExpr("id AS k"))
+    Mutation.delete(t, col("k") === 2L)
+    val v3 = t.status.version
+    val got = spark.sql(s"SELECT k FROM TABLE_CHANGES('$dir', $v1, $v3) WHERE k > 3")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val expected = t.readChanges(v1, v3).where(col("k") > 3).select("k")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(got.nonEmpty && got == expected)
+    // joins around the feed work too
+    spark.range(0, 8).selectExpr("id AS k", "id * 10 AS w").createOrReplaceTempView("cdf_dim")
+    assert(spark.sql(s"""SELECT c.k, d.w FROM TABLE_CHANGES('$dir', $v1, $v3) c
+                         JOIN cdf_dim d ON c.k = d.k""").count() ==
+      t.readChanges(v1, v3).where(col("k") < 8).count())
+    GraftTable.drop(spark, dir)
+  }
+
+  test("README's change-feed lines run through spark.sql, by path and by catalog name") {
+    val wh = Files.createTempDirectory("graft_cdfreadme_").toString
+    spark.conf.set("spark.sql.catalog.gcdf", "graft.engine.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gcdf.warehouse", wh)
+    val dir = s"$wh/prod/sales"
+    val t = GraftTable.create(spark, dir,
+      spark.range(0, 1).selectExpr("id AS k").schema,
+      properties = Map("timetravel" -> "true"))
+    t.insert(spark.range(0, 10).selectExpr("id AS k"))
+    val v40 = t.status.version
+    Thread.sleep(30)
+    // a session-zone (UTC) timestamp string, as the README writes it
+    val ts = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC).toString.replace('T', ' ')
+    Thread.sleep(30)
+    t.insert(spark.range(10, 14).selectExpr("id AS k"))
+    val v42 = t.status.version
+    val expected = t.readChanges(v40, v42).collect().map(_.toString).sorted.toSeq
+    Seq(s"SELECT * FROM TABLE_CHANGES('$dir', $v40, $v42)",
+      s"SELECT * FROM TABLE_CHANGES('$dir', '$ts', $v42)",
+      s"SELECT * FROM TABLE_CHANGES('gcdf.prod.sales', $v40, $v42)").foreach { q =>
+      assert(spark.sql(q).collect().map(_.toString).sorted.toSeq == expected, q)
+    }
+    GraftTable.drop(spark, dir)
   }
 
   test("readChangesPaired relabels one-delete-one-insert keys as update pre/post images") {
@@ -552,13 +594,13 @@ class ChangesSpec extends AnyFunSuite {
     Thread.sleep(30)
     t.insert(spark.range(30, 45).selectExpr("id AS k"))
     val v2 = t.status.version
-    val byVersion = GraftSql.command(spark,
-      s"SELECT * FROM TABLE_CHANGES('$dir', $v1, $v2)").get.collect()
+    val byVersion = spark.sql(
+      s"SELECT * FROM TABLE_CHANGES('$dir', $v1, $v2)").collect()
     assert(byVersion.length == 15)
     assert(byVersion.forall(_.getAs[String]("_change_type") == "insert"))
     // timestamp bounds resolve session-TZ like every other surface
-    val byTs = GraftSql.command(spark,
-      s"SELECT * FROM TABLE_CHANGES('$dir', '${new java.sql.Timestamp(mid)}', $v2)").get.collect()
+    val byTs = spark.sql(
+      s"SELECT * FROM TABLE_CHANGES('$dir', '${new java.sql.Timestamp(mid)}', $v2)").collect()
     assert(byTs.length == 15)
     GraftTable.drop(spark, dir)
   }

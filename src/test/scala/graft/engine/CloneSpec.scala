@@ -90,14 +90,12 @@ class CloneSpec extends AnyFunSuite {
     assert(t.read.count() == 1000L)
 
     // SQL surface, current version
-    val res = GraftSql.command(spark,
+    spark.sql(
       s"CREATE TABLE $root/c_sql SHALLOW CLONE $root/t")
-    assert(res.isDefined)
     assert(GraftTable.at(spark, s"$root/c_sql").read.count() == 1000L)
     // SQL surface, AS OF
-    val res2 = GraftSql.command(spark,
+    spark.sql(
       s"CREATE TABLE $root/c_sql2 SHALLOW CLONE $root/t VERSION AS OF $vGood")
-    assert(res2.isDefined)
     assert(GraftTable.at(spark, s"$root/c_sql2").read.count() == 1500L)
 
     // outstanding MoR deltas are refused (positions resolve against
@@ -273,8 +271,8 @@ class CloneSpec extends AnyFunSuite {
 
     // both clone forms of the PRE-delete version, deep via SQL
     val shallow = t.shallowCloneTo(s"$root/cs", Some(v1))
-    val res = GraftSql.command(spark,
-      s"CREATE TABLE $root/cd DEEP CLONE $root/t VERSION AS OF $v1").get.collect()
+    val res = spark.sql(
+      s"CREATE TABLE $root/cd DEEP CLONE $root/t VERSION AS OF $v1").collect()
     assert(res.head.getLong(1) == 1500L, "DEEP CLONE must report the copied rows")
     val deep = GraftTable.at(spark, s"$root/cd")
     assert(deep.read.count() == 1500)

@@ -171,7 +171,7 @@ class DdlSpec extends AnyFunSuite {
     // reference bloomfilter-index-guide.md:33 PROPERTIES — mapped onto
     // parquet's per-column expected-NDV / FPP knobs, flowing to every
     // future load via the parquet.* property passthrough
-    GraftSql.command(spark,
+    spark.sql(
       s"CREATE INDEX cb ON TABLE ${t.path} (c_custkey) AS 'bloomfilter' " +
         "PROPERTIES('BLOOM_SIZE'='640000', 'BLOOM_FPP'='0.00001')")
     val props = GraftTable.at(spark, t.path).meta.properties
@@ -182,7 +182,7 @@ class DdlSpec extends AnyFunSuite {
       .contains("0.00001"))
     // a bloom index has nothing to defer — loud error, not a silent no-op
     intercept[IllegalArgumentException] {
-      GraftSql.command(spark,
+      spark.sql(
         s"CREATE INDEX cb2 ON TABLE ${t.path} (c_name) AS 'bloomfilter' WITH DEFERRED REFRESH")
     }
     // the next load's files carry the filter with the tuned params

@@ -7,10 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 object TestSpark {
+  /** The shared session carries graft's session extension, so graft's
+    * statements run through `spark.sql`; `newSession()` keeps it. */
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -19,6 +22,17 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** A session without the extension over the shared context. The
+    * builder makes the session it creates the default and active one;
+    * the shared session is put back. */
+  def plainSession(): SparkSession = {
+    val shared = spark
+    val s = SparkSession.builder().create()
+    SparkSession.setDefaultSession(shared)
+    SparkSession.setActiveSession(shared)
+    s
+  }
 
   /** Unwrap the carbonish runtime-filtering scan to the delegated
     * parquet scan (plan-inspection helper for the specs). */
@@ -170,8 +184,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.read.count() == 10)
     // dry run first (reference clean-files.md DRY RUN OPTION): reports
     // the doomed segment with its size, deletes nothing
-    val dry = GraftSql.command(spark,
-      s"CLEAN FILES FOR TABLE $path OPTIONS('dryrun'='true')").get.collect()
+    val dry = spark.sql(
+      s"CLEAN FILES FOR TABLE $path OPTIONS('dryrun'='true')").collect()
     assert(dry.map(_.getLong(0)).toSeq == Seq(1L))
     assert(dry.head.getString(1) == "MARKED_FOR_DELETE" && dry.head.getLong(2) > 0)
     assert(t.layout.fs.exists(t.layout.segmentDir(1)),

@@ -61,10 +61,9 @@ class GraftSqlSpec extends AnyFunSuite {
     Seq((1L, "x")).toDF("k", "v").createOrReplaceTempView("qsrc")
     // 'a.' and 'qsrc.' inside the string literal must NOT be rewritten;
     // the same tokens outside literals must be
-    assert(GraftSql.command(spark,
+    spark.sql(
       s"""UPDATE ${t.path} AS a SET (v) = (
             SELECT concat(qsrc.v, ' a.b qsrc.c ', a.v) FROM qsrc WHERE qsrc.k = a.k)""")
-      .isDefined)
     val got = t.read.as[(Long, String)].collect().toSet
     assert(got == Set((1L, "x a.b qsrc.c a"), (2L, "b")))
   }
@@ -79,20 +78,20 @@ class GraftSqlSpec extends AnyFunSuite {
       .write.mode("append").parquet(srcDir)
     spark.readStream.schema(schema).parquet(srcDir)
       .createOrReplaceTempView("stream_in")
-    assert(GraftSql.command(spark,
+    spark.sql(
       s"""CREATE STREAM ssql ON TABLE ${t.path}
           STMPROPERTIES('checkpoint'='$root/ckpt')
-          AS SELECT id, v FROM stream_in""").isDefined)
+          AS SELECT id, v FROM stream_in""")
     try {
       graft.engine.streaming.StreamManager.query("ssql").get.processAllAvailable()
       assert(t.read.count() == 2)
-      val shown = GraftSql.command(spark, "SHOW STREAMS").get.collect()
+      val shown = spark.sql("SHOW STREAMS").collect()
       assert(shown.exists(r => r.getString(0) == "ssql" && r.getString(2) == "RUNNING"))
-    } finally GraftSql.command(spark, "DROP STREAM ssql")
+    } finally spark.sql("DROP STREAM ssql")
     assert(graft.engine.streaming.StreamManager.query("ssql").isEmpty)
     // a non-streaming source is rejected loudly
     Seq((1L, "a")).toDF("id", "v").createOrReplaceTempView("not_stream")
-    val e = intercept[IllegalArgumentException](GraftSql.command(spark,
+    val e = intercept[IllegalArgumentException](spark.sql(
       s"CREATE STREAM s2 ON TABLE ${t.path} AS SELECT * FROM not_stream"))
     assert(e.getMessage.contains("streaming source"))
   }
@@ -112,10 +111,10 @@ class GraftSqlSpec extends AnyFunSuite {
     val src = GraftTable.create(spark, s"$root/feed", schema)
     src.setProperties(Map(
       "streaming" -> "source", "format" -> "csv", "path" -> csvDir))
-    assert(GraftSql.command(spark,
+    spark.sql(
       s"""CREATE STREAM scsv ON TABLE ${sink.path}
           STMPROPERTIES('checkpoint'='$root/ckpt2')
-          AS SELECT id, v FROM `${src.path}`""").isDefined)
+          AS SELECT id, v FROM `${src.path}`""")
     try {
       graft.engine.streaming.StreamManager.query("scsv").get.processAllAvailable()
       assert(sink.read.as[(Long, String)].collect().toSet ==
@@ -125,12 +124,12 @@ class GraftSqlSpec extends AnyFunSuite {
         "4,d\n".getBytes)
       graft.engine.streaming.StreamManager.query("scsv").get.processAllAvailable()
       assert(sink.read.count() == 4)
-    } finally GraftSql.command(spark, "DROP STREAM scsv")
+    } finally spark.sql("DROP STREAM scsv")
     // an unknown source format fails loudly at CREATE time
     val bad = GraftTable.create(spark, s"$root/badfeed", schema)
     bad.setProperties(Map(
       "streaming" -> "source", "format" -> "avro2", "path" -> csvDir))
-    val e2 = intercept[IllegalArgumentException](GraftSql.command(spark,
+    val e2 = intercept[IllegalArgumentException](spark.sql(
       s"CREATE STREAM s3 ON TABLE ${sink.path} AS SELECT * FROM `${bad.path}`"))
     assert(e2.getMessage.contains("unsupported streaming source format"))
   }
@@ -140,8 +139,8 @@ class GraftSqlSpec extends AnyFunSuite {
     import spark.implicits._
     val t = GraftTable.createAsSelect(spark, s"$root/t",
       (0L until 500L).map(i => (i, s"v$i", i * 0.5)).toDF("k", "v", "w"))
-    val out = GraftSql.command(spark,
-      s"SHOW BENCHMARK FOR TABLE `${t.path}` LIMIT 2").get.collect()
+    val out = spark.sql(
+      s"SHOW BENCHMARK FOR TABLE `${t.path}` LIMIT 2").collect()
     val ops = out.map(_.getString(2)).toSet
     assert(ops.contains("footer") && ops.contains("scan_all"))
     assert(Set("scan:k", "scan:v", "scan:w").subsetOf(ops), s"got $ops")
@@ -193,7 +192,7 @@ class GraftSqlSpec extends AnyFunSuite {
     val feed = GraftTable.create(spark, s"$root/feed", schema)
     feed.setProperties(Map("streaming" -> "source", "format" -> "kafka",
       "kafka.bootstrap.servers" -> "localhost:9092", "topic" -> "events"))
-    val e = intercept[Exception](GraftSql.command(spark,
+    val e = intercept[Exception](spark.sql(
       s"""CREATE STREAM skafka ON TABLE ${sink.path}
           STMPROPERTIES('checkpoint'='$root/ckpt')
           AS SELECT id, v, w FROM `${feed.path}`"""))
@@ -208,19 +207,19 @@ class GraftSqlSpec extends AnyFunSuite {
     Seq((1L, "A1"), (3L, "C3"), (9L, "Z9")).toDF("k", "nv")
       .createOrReplaceTempView("updsq_src")
     // correlated subquery form → MergeBuilder; outer WHERE gates rows
-    assert(GraftSql.command(spark,
+    spark.sql(
       s"""UPDATE ${t.path} AS u SET (v) = (
             SELECT s.nv FROM updsq_src s WHERE s.k = u.k)
-          WHERE u.x < 25.0""").isDefined)
+          WHERE u.x < 25.0""")
     assert(t.read.as[(Long, String, Double)].collect().toSet ==
       Set((1L, "A1", 10.0), (2L, "b", 20.0), (3L, "c", 30.0)))
     // tuple form: plain multi-assignment
-    assert(GraftSql.command(spark,
-      s"UPDATE ${t.path} SET (v, x) = ('zz', x + 1.0) WHERE k = 2").isDefined)
+    spark.sql(
+      s"UPDATE ${t.path} SET (v, x) = ('zz', x + 1.0) WHERE k = 2")
     assert(t.read.as[(Long, String, Double)].collect().toSet ==
       Set((1L, "A1", 10.0), (2L, "zz", 21.0), (3L, "c", 30.0)))
     // column/select arity mismatch fails loudly
-    val e = intercept[IllegalArgumentException](GraftSql.command(spark,
+    val e = intercept[IllegalArgumentException](spark.sql(
       s"UPDATE ${t.path} SET (v, x) = (SELECT s.nv FROM updsq_src s WHERE s.k = k)"))
     assert(e.getMessage.contains("columns"))
   }
@@ -256,49 +255,49 @@ class GraftSqlSpec extends AnyFunSuite {
     (0 until 4).foreach(i => t.insert(Seq((i.toLong, s"v$i")).toDF("k", "v")))
     val tt = s"`${t.path}`"
 
-    val segs = GraftSql.command(spark, s"SHOW SEGMENTS FOR TABLE $tt").get
+    val segs = spark.sql(s"SHOW SEGMENTS FOR TABLE $tt")
     assert(segs.count() == 4)
     assert(segs.columns.toSeq ==
       Seq("id", "status", "format", "row_count", "size_bytes", "file_count"))
 
     // SHOW SEGMENTS … AS <select>: the registry is queryable as
     // <table>_segments (reference CarbonShowSegmentsAsSelectCommand)
-    val asSel = GraftSql.command(spark,
+    val asSel = spark.sql(
       s"""SHOW SEGMENTS FOR TABLE $tt AS
          SELECT id, row_count FROM t_segments
-         WHERE row_count >= 1 AND status = 'SUCCESS' ORDER BY id""").get
+         WHERE row_count >= 1 AND status = 'SUCCESS' ORDER BY id""")
     assert(asSel.columns.toSeq == Seq("id", "row_count"))
     assert(asSel.collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 3L))
     // aggregates over the registry work too
-    val agg = GraftSql.command(spark,
-      s"SHOW SEGMENTS ON $tt AS SELECT sum(row_count) AS r FROM t_segments").get
+    val agg = spark.sql(
+      s"SHOW SEGMENTS ON $tt AS SELECT sum(row_count) AS r FROM t_segments")
     assert(agg.collect().head.getLong(0) == 4L)
 
     // CUSTOM compaction of two named segments
-    GraftSql.command(spark, s"ALTER TABLE $tt COMPACT 'CUSTOM' WHERE SEGMENT.ID IN (0, 1)")
+    spark.sql(s"ALTER TABLE $tt COMPACT 'CUSTOM' WHERE SEGMENT.ID IN (0, 1)")
     assert(t.status.visible.size == 3 && t.read.count() == 4)
 
     // retire one segment by id, then physically clean it
     val vis = t.status.visible.map(_.id).min
-    GraftSql.command(spark, s"DELETE FROM TABLE $tt WHERE SEGMENT.ID IN ($vis)")
+    spark.sql(s"DELETE FROM TABLE $tt WHERE SEGMENT.ID IN ($vis)")
     assert(t.status.visible.size == 2)
-    val cleaned = GraftSql.command(spark, s"CLEAN FILES FOR TABLE $tt").get
+    val cleaned = spark.sql(s"CLEAN FILES FOR TABLE $tt")
     assert(cleaned.collect().map(_.getLong(0)).nonEmpty)
 
     // the GC'd entries stay visible via SHOW HISTORY SEGMENTS …
-    val plainN = GraftSql.command(spark, s"SHOW SEGMENTS FOR TABLE $tt").get.count()
-    val histN = GraftSql.command(spark, s"SHOW HISTORY SEGMENTS FOR TABLE $tt").get.count()
+    val plainN = spark.sql(s"SHOW SEGMENTS FOR TABLE $tt").count()
+    val histN = spark.sql(s"SHOW HISTORY SEGMENTS FOR TABLE $tt").count()
     assert(histN > plainN, s"history ($histN) must exceed current ($plainN)")
     // … and LIMIT caps the (id-descending) listing
-    assert(GraftSql.command(spark,
-      s"SHOW HISTORY SEGMENTS FOR TABLE $tt LIMIT 2").get.count() == 2)
+    assert(spark.sql(
+      s"SHOW HISTORY SEGMENTS FOR TABLE $tt LIMIT 2").count() == 2)
 
     // MAJOR compaction via SQL merges the remaining small segments
-    GraftSql.command(spark, s"ALTER TABLE $tt COMPACT 'MAJOR'")
+    spark.sql(s"ALTER TABLE $tt COMPACT 'MAJOR'")
     assert(t.status.visible.size == 1)
 
     // DESCRIBE returns the schema + properties + metrics rows
-    val desc = GraftSql.command(spark, s"DESCRIBE FORMATTED TABLE $tt").get
+    val desc = spark.sql(s"DESCRIBE FORMATTED TABLE $tt")
     assert(desc.filter(col("kind") === "column").count() == 2)
 
     // DESCRIBE COLUMN drills into complex children; DESCRIBE SHORT
@@ -310,31 +309,33 @@ class GraftSqlSpec extends AnyFunSuite {
         StructField("tags", org.apache.spark.sql.types.ArrayType(StringType)))))))
     val tn = GraftTable.create(spark, s"$root/tnested", nestedSchema)
     val tnRef = s"`${tn.path}`"
-    val dc = GraftSql.command(spark, s"DESC COLUMN meta ON TABLE $tnRef").get
+    val dc = spark.sql(s"DESC COLUMN meta ON TABLE $tnRef")
     assert(dc.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
       Set(("name", "string"), ("tags", "array<string>")))
-    val dcDeep = GraftSql.command(spark, s"DESCRIBE COLUMN meta.tags ON $tnRef").get
+    val dcDeep = spark.sql(s"DESCRIBE COLUMN meta.tags ON $tnRef")
     assert(dcDeep.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
       Seq(("element", "string")))
-    val ds = GraftSql.command(spark, s"DESC SHORT $tnRef").get
+    val ds = spark.sql(s"DESC SHORT $tnRef")
     assert(ds.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
       Set(("id", "bigint"), ("meta", "struct<...>")))
-    // non-command falls through
-    assert(GraftSql.command(spark, "SELECT 1").isEmpty)
+    // anything else is Spark's own statement, parsed by Spark's parser
+    val plain = "SELECT k, count(*) FROM t GROUP BY k"
+    assert(spark.sessionState.sqlParser.parsePlan(plain) ==
+      new org.apache.spark.sql.execution.SparkSqlParser().parsePlan(plain))
   }
 
   test("command surface: MV lifecycle via SQL") {
     val root = Files.createTempDirectory("graft_cmdmv_").toString
     spark.read.parquet(s"$sf/lineitem.parquet").createOrReplaceTempView("li_cmd")
-    GraftSql.command(spark,
+    spark.sql(
       s"""CREATE MATERIALIZED VIEW mv_cmd STORED AT '$root/mv' AS
           SELECT l_returnflag, count(*) AS cnt FROM li_cmd GROUP BY l_returnflag""")
     try {
       assert(graft.engine.mv.MvCatalog.get("mv_cmd").isDefined)
       assert(GraftTable.at(spark, s"$root/mv").read.count() == 3)
-      GraftSql.command(spark, "REFRESH MATERIALIZED VIEW mv_cmd")
+      spark.sql("REFRESH MATERIALIZED VIEW mv_cmd")
     } finally {
-      GraftSql.command(spark, "DROP MATERIALIZED VIEW mv_cmd")
+      spark.sql("DROP MATERIALIZED VIEW mv_cmd")
       assert(graft.engine.mv.MvCatalog.get("mv_cmd").isEmpty)
     }
   }
@@ -353,9 +354,8 @@ class GraftSqlSpec extends AnyFunSuite {
 
     // 1) segment min/max pruning appears for a sort-column filter
     t.read.createOrReplaceTempView("ord_ex")
-    val pruned = GraftSql.command(spark,
-      "EXPLAIN SELECT count(*) AS c FROM ord_ex WHERE o_orderdate >= TIMESTAMP '1997-06-01'")
-      .get.collect().head.getString(0)
+    val pruned = spark.sql(
+      "EXPLAIN SELECT count(*) AS c FROM ord_ex WHERE o_orderdate >= TIMESTAMP '1997-06-01'").collect().head.getString(0)
     assert(pruned.contains("== Graft =="), pruned)
     assert(pruned.contains("min/max skip: kept 1/3 segments"), pruned)
 
@@ -374,14 +374,12 @@ class GraftSqlSpec extends AnyFunSuite {
       t.read.groupBy("o_orderstatus").agg(count(lit(1)).as("cnt")),
       s"$root/mv")
     try {
-      val mvText = GraftSql.command(spark,
-        "EXPLAIN SELECT o_orderstatus, count(*) AS cnt FROM ord_ex GROUP BY o_orderstatus")
-        .get.collect().head.getString(0)
+      val mvText = spark.sql(
+        "EXPLAIN SELECT o_orderstatus, count(*) AS cnt FROM ord_ex GROUP BY o_orderstatus").collect().head.getString(0)
       assert(mvText.contains("MV 'mv_ex' served"), mvText)
       // EXTENDED mode still carries the Graft section
-      val ext = GraftSql.command(spark,
-        "EXPLAIN EXTENDED SELECT o_orderstatus, count(*) AS cnt FROM ord_ex GROUP BY o_orderstatus")
-        .get.collect().head.getString(0)
+      val ext = spark.sql(
+        "EXPLAIN EXTENDED SELECT o_orderstatus, count(*) AS cnt FROM ord_ex GROUP BY o_orderstatus").collect().head.getString(0)
       assert(ext.contains("== Graft ==") && ext.contains("== Parsed Logical Plan =="), ext)
     } finally graft.engine.mv.Mv.drop(spark, "mv_ex")
   }
@@ -435,5 +433,47 @@ class GraftSqlSpec extends AnyFunSuite {
       VectorIndex.search(vt, "embedding", queries, 3, nprobe = 2, rerank = 50))
     assert(vecText.contains("VectorIndex(embedding): 1/1 segments served"), vecText)
     assert(vecText.contains("nprobe=2/4"), vecText)
+  }
+
+  test("Spark's own statements pass through an extension session unchanged") {
+    import org.apache.spark.sql.SparkSession
+    val root = Files.createTempDirectory("graft_pass_").toString
+    val plain = plainSession()
+    assert(!plain.sessionState.sqlParser.isInstanceOf[GraftSqlParser])
+    // the same plan but for the fresh expression ids each parse mints
+    def same(q: String): Unit = {
+      def shape(s: SparkSession) =
+        s.sessionState.sqlParser.parsePlan(q).treeString.replaceAll("#\\d+", "#")
+      assert(shape(spark) == shape(plain), q)
+    }
+    def rows(s: SparkSession, q: String): Seq[String] = s.sql(q).collect().map(_.toString).toSeq
+    // spark_catalog parquet tables, one per session
+    Seq(spark -> "pass_ext", plain -> "pass_plain").foreach { case (s, n) =>
+      s.sql(s"CREATE TABLE default.$n (k INT, v STRING) USING parquet LOCATION '$root/$n'")
+      s.sql(s"ALTER TABLE default.$n SET TBLPROPERTIES ('note'='n1')")
+      s.sql(s"CREATE TABLE default.${n}_like LIKE default.$n LOCATION '$root/${n}_like'")
+    }
+    try {
+      Seq("DESCRIBE TABLE default.pass_ext", "ALTER TABLE default.pass_ext SET TBLPROPERTIES ('note'='n1')",
+        "CREATE TABLE default.pass_x LIKE default.pass_ext").foreach(same)
+      assert(rows(spark, "DESCRIBE TABLE default.pass_ext") == rows(plain, "DESCRIBE TABLE default.pass_plain"))
+      assert(rows(spark, "SHOW TBLPROPERTIES default.pass_ext ('note')") ==
+        rows(plain, "SHOW TBLPROPERTIES default.pass_plain ('note')"))
+      assert(rows(spark, "DESCRIBE TABLE default.pass_ext_like") ==
+        rows(plain, "DESCRIBE TABLE default.pass_plain_like"))
+    } finally Seq("pass_ext", "pass_plain", "pass_ext_like", "pass_plain_like")
+      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS default.$n"))
+
+    // Spark's DESCRIBE TABLE on a graft catalog name
+    Seq(spark, plain).foreach { s =>
+      s.conf.set("spark.sql.catalog.gpass", "graft.engine.catalog.GraftCatalog")
+      s.conf.set("spark.sql.catalog.gpass.warehouse", s"$root/wh")
+    }
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gpass.ns")
+    spark.sql("CREATE TABLE gpass.ns.t (k INT, v STRING) USING carbonish")
+    same("DESCRIBE TABLE gpass.ns.t")
+    assert(rows(spark, "DESCRIBE TABLE gpass.ns.t") == rows(plain, "DESCRIBE TABLE gpass.ns.t"))
+    // a plain SELECT parses to the delegate's plan
+    same("SELECT k, count(*) FROM gpass.ns.t WHERE v LIKE 'a%' GROUP BY k")
   }
 }

@@ -30,7 +30,7 @@ class LegacyIndexUpgradeSpec extends AnyFunSuite {
   }
 
   private def grainShown(tPath: String): String = {
-    val sync = GraftSql.command(spark, s"SHOW INDEXES ON TABLE $tPath").get
+    val sync = spark.sql(s"SHOW INDEXES ON TABLE $tPath")
       .collect().map(_.getString(5)).head
     "grain: ([a-z-]+)".r.findFirstMatchIn(sync).map(_.group(1)).getOrElse("?")
   }
@@ -40,7 +40,7 @@ class LegacyIndexUpgradeSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_legacy_si_").toString
     val t = GraftTable.create(spark, s"$root/t", src.schema, Seq("o_orderkey"))
     Seq("O", "F").foreach(s0 => t.insert(src.filter(col("o_orderstatus") === s0)))
-    GraftSql.command(spark,
+    spark.sql(
       s"CREATE INDEX lsi ON TABLE ${t.path} (o_orderstatus) AS 'carbondata'")
     val siPath = Si.show(t).head._2
     val expected = src.filter(col("o_orderstatus") === "F").count()
@@ -52,7 +52,7 @@ class LegacyIndexUpgradeSpec extends AnyFunSuite {
     assert(grainShown(t.path) == "file")
 
     // REFRESH rebuilds in place with the rg schema (not a schema-mismatch)
-    GraftSql.command(spark, s"REFRESH INDEX lsi ON TABLE ${t.path}")
+    spark.sql(s"REFRESH INDEX lsi ON TABLE ${t.path}")
     assert(GraftTable.at(spark, siPath).schema.fieldNames.contains("rg_start"))
     assert(grainShown(t.path) == "row-group")
     assert(Si.readWhereIn(t, "o_orderstatus", Seq("F")).count() == expected)
@@ -61,7 +61,7 @@ class LegacyIndexUpgradeSpec extends AnyFunSuite {
     // complete) instead of appending mismatched rows
     stripToLegacy(siPath, Seq("v", "seg_id", "file"))
     t.insert(src.filter(col("o_orderstatus") === "F").limit(10))
-    GraftSql.command(spark, s"REINDEX INDEX TABLE lsi ON ${t.path}")
+    spark.sql(s"REINDEX INDEX TABLE lsi ON ${t.path}")
     val upgraded = GraftTable.at(spark, siPath)
     assert(upgraded.schema.fieldNames.contains("rg_start"))
     assert(Si.indexedSegments(upgraded) == t.status.visible.map(_.id).toSet)
@@ -75,7 +75,7 @@ class LegacyIndexUpgradeSpec extends AnyFunSuite {
     val seg1 = Seq((10L, "charlie shared"), (11L, "charlie delta"))
     val t = GraftTable.create(spark, s"$root/t", seg0.toDF("id", "body").schema)
     Seq(seg0, seg1).foreach(s0 => t.insert(s0.toDF("id", "body")))
-    GraftSql.command(spark,
+    spark.sql(
       s"CREATE INDEX lti ON TABLE ${t.path} (body) AS 'lucene'")
     val tiPath = t.meta.properties("textindex.body")
 
@@ -84,7 +84,7 @@ class LegacyIndexUpgradeSpec extends AnyFunSuite {
       .select("id").collect().map(_.getLong(0)).toSet == Set(10L, 11L))
     assert(grainShown(t.path) == "file")
 
-    GraftSql.command(spark, s"REFRESH INDEX lti ON TABLE ${t.path}")
+    spark.sql(s"REFRESH INDEX lti ON TABLE ${t.path}")
     assert(GraftTable.at(spark, tiPath).schema.fieldNames.contains("rg_start"))
     assert(grainShown(t.path) == "row-group")
     assert(TextIndex.readMatching(t, "body", "charlie")
@@ -93,7 +93,7 @@ class LegacyIndexUpgradeSpec extends AnyFunSuite {
     // REINDEX upgrade path for the text index too
     stripToLegacy(tiPath, Seq("term", "seg_id", "file"))
     t.insert(Seq((20L, "echo charlie")).toDF("id", "body"))
-    GraftSql.command(spark, s"REINDEX INDEX TABLE lti ON ${t.path}")
+    spark.sql(s"REINDEX INDEX TABLE lti ON ${t.path}")
     assert(GraftTable.at(spark, tiPath).schema.fieldNames.contains("rg_start"))
     assert(TextIndex.readMatching(t, "body", "charlie")
       .select("id").collect().map(_.getLong(0)).toSet == Set(10L, 11L, 20L))

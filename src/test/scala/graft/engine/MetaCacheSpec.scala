@@ -86,14 +86,14 @@ class MetaCacheSpec extends AnyFunSuite {
     import spark.implicits._
     val t = GraftTable.createAsSelect(spark, path, Seq((1L, "a")).toDF("k", "v"))
     t.layout.readStatus(); t.meta // populate both kinds
-    val rows = GraftSql.command(spark, s"SHOW METACACHE FOR TABLE ${t.path}").get.collect()
+    val rows = spark.sql(s"SHOW METACACHE FOR TABLE ${t.path}").collect()
     assert(rows.map(_.getString(1)).toSet.subsetOf(Set("tablestatus", "tablemeta")))
     assert(rows.nonEmpty)
-    GraftSql.command(spark, s"DROP METACACHE FOR TABLE ${t.path}")
-    assert(GraftSql.command(spark, s"SHOW METACACHE FOR TABLE ${t.path}").get.collect().isEmpty)
+    spark.sql(s"DROP METACACHE FOR TABLE ${t.path}")
+    assert(spark.sql(s"SHOW METACACHE FOR TABLE ${t.path}").collect().isEmpty)
     // global SHOW still works (other tables may be cached)
-    assert(GraftSql.command(spark, "SHOW METACACHE").isDefined)
-    GraftSql.command(spark, "DROP METACACHE")
-    assert(GraftSql.command(spark, "SHOW METACACHE").get.collect().isEmpty)
+    spark.sql("SHOW METACACHE")
+    spark.sql("DROP METACACHE")
+    assert(spark.sql("SHOW METACACHE").collect().isEmpty)
   }
 }

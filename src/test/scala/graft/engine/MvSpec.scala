@@ -524,7 +524,7 @@ class MvSpec extends AnyFunSuite {
       t.read.groupBy("l_returnflag").agg(avg(col("l_discount")).as("ad")),
       s"$path/mvb", deferred = true)
     try {
-      val rows = GraftSql.command(spark, "SHOW MATERIALIZED VIEWS").get
+      val rows = spark.sql("SHOW MATERIALIZED VIEWS")
         .collect().map(r => r.getString(0) ->
           ((r.getString(1), r.getString(2), r.getString(3)))).toMap
       assert(rows("mv_show_a") == (("ENABLED", "INCREMENTAL", "ON_COMMIT")))
@@ -534,8 +534,8 @@ class MvSpec extends AnyFunSuite {
       // growth: the non-deferred MV is caught up by refresh-on-commit,
       // the deferred one reports DISABLED until a manual refresh
       t.insert(lineitem.limit(600).except(lineitem.limit(500)))
-      val rows2 = GraftSql.command(spark,
-        s"SHOW MATERIALIZED VIEWS ON TABLE $path/fact").get
+      val rows2 = spark.sql(
+        s"SHOW MATERIALIZED VIEWS ON TABLE $path/fact")
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(rows2.keySet == Set("mv_show_a", "mv_show_b"),
         "ON TABLE must filter to this base's MVs")
@@ -551,7 +551,7 @@ class MvSpec extends AnyFunSuite {
       t.read.groupBy("l_returnflag").agg(count(lit(1)).as("cnt")),
       s"$path/mv_oncommit")
     // the SQL surface carries the deferred flag
-    GraftSql.command(spark,
+    spark.sql(
       s"""CREATE MATERIALIZED VIEW mv_defer WITH DEFERRED REFRESH
           STORED AT '$path/mv_defer_sql' AS
           SELECT l_linestatus, count(*) AS cnt

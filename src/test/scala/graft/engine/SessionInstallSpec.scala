@@ -10,12 +10,22 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Graft attaches to a session in one place ([[GraftSession.install]]):
-  * any table open puts the MV, SI and text_match rules, the DML strategy
-  * and the SQL functions on the session together, so what a query gets
-  * never depends on what its session ran before. */
+/** Graft's parts reach a session in one of two ways, both drawn from
+  * [[GraftSession]]'s one parts list: [[GraftExtensions]] injects them
+  * when the session is built, and [[GraftSession.install]] puts them on
+  * any other session at its first table open. Either way the MV, SI and
+  * text_match rules, the DML strategy and the SQL functions arrive
+  * together, so what a query gets never depends on what its session ran
+  * before. */
 class SessionInstallSpec extends AnyFunSuite {
   import TestSpark._
+
+  private def counts(s: SparkSession): Seq[Int] = {
+    val rules = s.experimental.extraOptimizations
+    Seq(classOf[MvRewriteRule], classOf[SiRewriteRule], classOf[TextMatchRule])
+      .map(c => rules.count(c.isInstance)) :+
+      s.sessionState.planner.strategies.count(_.isInstanceOf[GraftDmlStrategy])
+  }
 
   private def catalogOn(s: SparkSession, name: String, warehouse: String): Unit = {
     s.conf.set(s"spark.sql.catalog.$name", "graft.engine.catalog.GraftCatalog")
@@ -46,7 +56,7 @@ class SessionInstallSpec extends AnyFunSuite {
       o.read.groupBy("o_orderstatus").agg(count(lit(1)).as("cnt")), s"$root/mv_sess")
     try {
       // no enable or install call anywhere below: opening is enough
-      val fresh = spark.newSession()
+      val fresh = plainSession()
       val o2 = GraftTable.at(fresh, o.path)
       val docs2 = GraftTable.at(fresh, docs.path)
 
@@ -84,7 +94,7 @@ class SessionInstallSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_sess_cat_").toString
     val d = GraftTable.createAsSelect(spark, s"$root/wh/ns/d",
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    val fresh = spark.newSession()
+    val fresh = plainSession()
     catalogOn(fresh, "gsess2", s"$root/wh")
     fresh.sql("UPDATE gsess2.ns.d SET v = 'z' WHERE k = 2")
     assert(d.read.as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "z")))
@@ -111,7 +121,7 @@ class SessionInstallSpec extends AnyFunSuite {
     Si.create(o, "o_orderstatus", s"$root/o_si")
     TextIndex.create(docs, "body", s"$root/docs_ti")
 
-    val fresh = spark.newSession()
+    val fresh = plainSession()
     catalogOn(fresh, "gsess3", s"$root/wh")
     Seq("O", "P").foreach { st =>
       val asOf = fresh.sql(
@@ -136,7 +146,7 @@ class SessionInstallSpec extends AnyFunSuite {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_sess_race_").toString
     val path = GraftTable.createAsSelect(spark, s"$root/t", Seq(1L).toDF("k")).path
-    val fresh = spark.newSession()
+    val fresh = plainSession()
     val start = new java.util.concurrent.CyclicBarrier(8)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 8).map(_ => new Thread(() =>
@@ -145,30 +155,64 @@ class SessionInstallSpec extends AnyFunSuite {
     threads.foreach(_.start())
     threads.foreach(_.join())
     assert(errors.isEmpty, errors.asScala.mkString("; "))
-    def counts: Seq[Int] = {
-      val rules = fresh.experimental.extraOptimizations
-      Seq(classOf[MvRewriteRule], classOf[SiRewriteRule], classOf[TextMatchRule])
-        .map(c => rules.count(c.isInstance)) :+
-        fresh.experimental.extraStrategies.count(_.isInstanceOf[GraftDmlStrategy])
-    }
-    assert(counts == Seq(1, 1, 1, 1))
+    assert(counts(fresh) == Seq(1, 1, 1, 1))
     GraftTable.at(fresh, path)
-    assert(counts == Seq(1, 1, 1, 1), "a second open must add nothing")
+    assert(counts(fresh) == Seq(1, 1, 1, 1), "a second open must add nothing")
     Seq("text_match", "text_match_with_limit", "text_match_contains",
       "timeseries", "approx_top_k", "lat_lng_to_geo_id", "in_polygon")
       .foreach(f => assert(fresh.catalog.functionExists(f), s"$f not registered"))
+  }
+
+  test("an extension session resolves graft's functions and TABLE_CHANGES before any table opens") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_sess_ext_").toString + "/t"
+    val t = GraftTable.create(spark, dir, Seq(0L).toDF("k").schema,
+      properties = Map("timetravel" -> "true"))
+    t.insert(Seq(1L, 2L, 3L).toDF("k"))
+    val v = t.status.version
+    // the shared session carries the extension, and so does each of its
+    // new sessions: nothing below opens a table first
+    val fresh = spark.newSession()
+    assert(fresh.sql("SELECT k FROM VALUES (1L, 'a b') AS v(k, body) " +
+      "WHERE text_match('body:a')").queryExecution.analyzed.resolved)
+    // graft's Misra-Gries aggregate, not a same-named Spark built-in
+    val topK = fresh.sql("SELECT approx_top_k(w, 2) FROM VALUES ('a'), ('a'), ('b') AS v(w)")
+    assert(topK.queryExecution.analyzed.toString.contains("approx_top_k_mg"),
+      topK.queryExecution.analyzed.toString)
+    assert(fresh.sql(s"SELECT k FROM TABLE_CHANGES('$dir', $v)")
+      .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
+  }
+
+  test("after table opens on an extension session each rule and the strategy are there once") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_sess_ext2_").toString
+    val path = GraftTable.createAsSelect(spark, s"$root/t", Seq(1L).toDF("k")).path
+    val fresh = GraftExtensions.session()
+    assert(fresh.sessionState.sqlParser.isInstanceOf[GraftSqlParser])
+    assert(SparkSession.active eq spark, "building the session must not change the active one")
+    assert(GraftTable.at(fresh, path).read.count() == 1L)
+    GraftTable.at(fresh, path)
+    fresh.sql(s"SHOW SEGMENTS FOR TABLE $path").collect()
+    assert(counts(fresh) == Seq(1, 1, 1, 1))
+    assert(!fresh.experimental.extraStrategies.exists(_.isInstanceOf[GraftDmlStrategy]),
+      "install must not add a second strategy to an extension session")
   }
 
   test("only the installer touches a session's rules, strategies and functions") {
     val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main),
       s"expected the sources under ${main.toAbsolutePath}")
+    // the one parts list and install
     val installer = main.resolve("graft/engine/GraftSession.scala")
+    // the injection of those parts
+    val extension = main.resolve("graft/engine/GraftExtensions.scala")
     val touches = Seq(
       """\bextraOptimizations\s*(\+\+|:\+)?=(?!=)""".r,
       """\bextraStrategies\s*(\+\+|:\+)?=(?!=)""".r,
       """\budf\.register\s*\(""".r,
-      """\.registerNative\s*\(""".r)
+      """\bShims\.register\w*\s*\(""".r,
+      """\bnew\s+(MvRewriteRule|SiRewriteRule|TextMatchRule|GraftDmlStrategy)\b""".r)
+    val injects = """\.inject\w+\s*[({]""".r
     val installCall = """GraftSession\.install\s*\(""".r
     val files = Files.walk(main).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
@@ -179,10 +223,13 @@ class SessionInstallSpec extends AnyFunSuite {
       }.toSeq
     val offenders = for {
       p <- files if p != installer
-      (l, i) <- code(p) if touches.exists(_.findFirstIn(l).isDefined)
+      (l, i) <- code(p)
+      if touches.exists(_.findFirstIn(l).isDefined) ||
+        (p != extension && injects.findFirstIn(l).isDefined)
     } yield s"$p:${i + 1}: ${l.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n"))
-    assert(Files.exists(installer))
+    assert(Files.exists(installer) && Files.exists(extension))
+    assert(code(extension).exists { case (l, _) => injects.findFirstIn(l).isDefined })
     val calls = for {
       p <- files if p != installer
       (l, i) <- code(p) if installCall.findFirstIn(l).isDefined

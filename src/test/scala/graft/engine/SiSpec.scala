@@ -63,19 +63,19 @@ class SiSpec extends AnyFunSuite {
       t.insert(src.filter(col("o_orderstatus") === s0)))
     // WITH DEFERRED REFRESH: empty index table, zero coverage — lookups
     // scan unindexed (correct, unaccelerated) and SHOW reports DISABLED
-    GraftSql.command(spark,
+    spark.sql(
       s"CREATE INDEX dsi ON TABLE ${t.path} (o_orderstatus) AS 'carbondata' WITH DEFERRED REFRESH")
     val expected = src.filter(col("o_orderstatus") === "F").count()
     assert(Si.readWhereIn(t, "o_orderstatus", Seq("F")).count() == expected)
-    val (st1, sync1) = GraftSql.command(spark,
-        s"SHOW INDEXES ON TABLE ${t.path}").get
+    val (st1, sync1) = spark.sql(
+        s"SHOW INDEXES ON TABLE ${t.path}")
       .collect().map(r => (r.getString(4), r.getString(5))).head
     assert(st1 == "DISABLED" && sync1.startsWith("0/2 segments"),
       s"expected a disabled 0/2 index, got ($st1, $sync1)")
     // REFRESH builds it: coverage complete, lookups prune again
-    GraftSql.command(spark, s"REFRESH INDEX dsi ON TABLE ${t.path}")
-    val (st2, sync2) = GraftSql.command(spark,
-        s"SHOW INDEXES ON TABLE ${t.path}").get
+    spark.sql(s"REFRESH INDEX dsi ON TABLE ${t.path}")
+    val (st2, sync2) = spark.sql(
+        s"SHOW INDEXES ON TABLE ${t.path}")
       .collect().map(r => (r.getString(4), r.getString(5))).head
     assert(st2 == "ENABLED" && sync2.startsWith("2/2 segments"),
       s"expected enabled 2/2 after REFRESH, got ($st2, $sync2)")

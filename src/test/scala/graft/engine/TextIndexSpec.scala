@@ -155,8 +155,8 @@ class TextIndexSpec extends AnyFunSuite {
     Seq(seg0, seg1, seg2).foreach(s0 => t.insert(s0.toDF("id", "body")))
 
     // CREATE INDEX … AS 'lucene' through the SQL command surface
-    assert(GraftSql.command(spark, s"CREATE INDEX bidx ON TABLE ${t.path} (body) AS 'lucene'").isDefined)
-    val shown = GraftSql.command(spark, s"SHOW INDEXES ON TABLE ${t.path}").get.collect()
+    spark.sql(s"CREATE INDEX bidx ON TABLE ${t.path} (body) AS 'lucene'")
+    val shown = spark.sql(s"SHOW INDEXES ON TABLE ${t.path}").collect()
     assert(shown.map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq ==
       Seq(("bidx", "lucene", "body")))
 
@@ -203,8 +203,8 @@ class TextIndexSpec extends AnyFunSuite {
     assert(e.getMessage != null)
 
     // DROP INDEX clears the registry and the index table
-    GraftSql.command(spark, s"DROP INDEX bidx ON TABLE ${t.path}")
-    assert(GraftSql.command(spark, s"SHOW INDEXES ON TABLE ${t.path}").get.collect().isEmpty)
+    spark.sql(s"DROP INDEX bidx ON TABLE ${t.path}")
+    assert(spark.sql(s"SHOW INDEXES ON TABLE ${t.path}").collect().isEmpty)
     assert(t.meta.properties.get("textindex.body").isEmpty)
   }
 
@@ -214,7 +214,7 @@ class TextIndexSpec extends AnyFunSuite {
     val seg0 = Seq((0L, "alpha bravo"), (1L, "alpha kilo"))
     val t = GraftTable.create(spark, s"$root/t", seg0.toDF("id", "body").schema)
     t.insert(seg0.toDF("id", "body"))
-    GraftSql.command(spark, s"CREATE INDEX ridx ON TABLE ${t.path} (body) AS 'lucene'")
+    spark.sql(s"CREATE INDEX ridx ON TABLE ${t.path} (body) AS 'lucene'")
     // this test exercises the MANUAL repair path — opt out of the
     // load-time auto-fold so inserts leave coverage stale on purpose
     t.setProperties(Map("index.autorefresh" -> "false"))
@@ -224,7 +224,7 @@ class TextIndexSpec extends AnyFunSuite {
 
     // new base segment appears; index is stale for it
     t.insert(Seq((10L, "charlie delta")).toDF("id", "body"))
-    GraftSql.command(spark, s"REINDEX INDEX TABLE ridx ON ${t.path}")
+    spark.sql(s"REINDEX INDEX TABLE ridx ON ${t.path}")
     // coverage caught up and the query uses the indexed path
     val q = TextIndex.readMatching(t, "body", "charlie")
     assert(q.select("id").collect().map(_.getLong(0)).toSet == Set(10L))
@@ -234,14 +234,14 @@ class TextIndexSpec extends AnyFunSuite {
       afterRepair.size == idxSegsAfterCreate.size + 1,
       s"expected one appended index segment: $idxSegsAfterCreate -> $afterRepair")
     // … and a second REINDEX with nothing uncovered is a metadata no-op
-    GraftSql.command(spark, s"REINDEX ON ${t.path}")
+    spark.sql(s"REINDEX ON ${t.path}")
     assert(idx.status.visible.map(_.id).toSet == afterRepair)
 
     // WHERE SEGMENT.ID IN (…) restricts the repair set
     t.insert(Seq((20L, "echo fox")).toDF("id", "body"))
     t.insert(Seq((30L, "golf hotel")).toDF("id", "body"))
     val baseNew = t.status.visible.map(_.id).sorted.takeRight(2)
-    GraftSql.command(spark,
+    spark.sql(
       s"REINDEX ON ${t.path} WHERE SEGMENT.ID IN (${baseNew.head})")
     val covered = idx.meta.properties("indexed_segments")
       .split(",").map(_.toLong).toSet
@@ -253,13 +253,13 @@ class TextIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val t = GraftTable.create(spark, s"$root/t",
       Seq((1L, "x")).toDF("id", "body").schema)
-    GraftSql.command(spark, s"CREATE INDEX idb ON TABLE ${t.path} (id) AS 'bloomfilter'")
+    spark.sql(s"CREATE INDEX idb ON TABLE ${t.path} (id) AS 'bloomfilter'")
     assert(t.meta.properties("bloom_columns") == "id")
-    GraftSql.command(spark, s"REFRESH INDEX idb ON TABLE ${t.path}") // no-op, must not throw
-    GraftSql.command(spark, s"DROP INDEX idb ON TABLE ${t.path}")
+    spark.sql(s"REFRESH INDEX idb ON TABLE ${t.path}") // no-op, must not throw
+    spark.sql(s"DROP INDEX idb ON TABLE ${t.path}")
     assert(t.meta.properties.getOrElse("bloom_columns", "") == "")
     // IF EXISTS tolerates a missing name
-    GraftSql.command(spark, s"DROP INDEX IF EXISTS nope ON TABLE ${t.path}")
+    spark.sql(s"DROP INDEX IF EXISTS nope ON TABLE ${t.path}")
   }
 
   test("text_match_with_limit caps at the index layer with early stop") {

@@ -152,10 +152,9 @@ class TextRowGroupSpec extends AnyFunSuite {
     val out = GraftExplain.explain(spark, Si.readWhereIn(t, "k", Seq(10050L)))
     assert(out.contains("SI(k) row-group-grain"), out)
     // SHOW INDEXES surfaces the grain (needs the SQL-DDL registration)
-    GraftSql.command(spark,
+    spark.sql(
       s"CREATE INDEX ksi ON TABLE ${t.path} (k) AS 'carbondata'")
-    val shown = GraftSql.command(spark, s"SHOW INDEXES ON TABLE ${t.path}")
-      .get.collect()
+    val shown = spark.sql(s"SHOW INDEXES ON TABLE ${t.path}").collect()
     assert(shown.exists(_.getString(5).contains("grain: row-group")),
       shown.mkString("\n"))
   }

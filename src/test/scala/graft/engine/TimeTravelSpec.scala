@@ -165,7 +165,7 @@ class TimeTravelSpec extends AnyFunSuite {
       properties = Map("timetravel" -> "true"))
     t.insert(a)
     t.insert(spark.range(50, 80).selectExpr("id AS k"))
-    val rows = GraftSql.command(spark, s"SHOW VERSIONS FOR TABLE $dir").get.collect()
+    val rows = spark.sql(s"SHOW VERSIONS FOR TABLE $dir").collect()
     val versions = rows.map(_.getLong(0))
     assert(versions.head == t.status.version, "newest first, current on top")
     assert(rows.head.getString(2) == "current")
@@ -200,9 +200,7 @@ class TimeTravelSpec extends AnyFunSuite {
     t.restoreTo(vGood)
     assert(t.read.count() == 500L)
     // SQL surface
-    val res = GraftSql.command(spark,
-      s"RESTORE TABLE $dir TO VERSION AS OF $vGood")
-    assert(res.isDefined)
+    spark.sql(s"RESTORE TABLE $dir TO VERSION AS OF $vGood")
     assert(t.read.count() == 500L)
     // new ids minted after vGood are never re-minted post-restore
     val idsBefore = t.status.segments.map(_.id).toSet

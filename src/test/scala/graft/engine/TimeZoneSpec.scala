@@ -67,13 +67,13 @@ class TimeZoneSpec extends AnyFunSuite {
       .head.getLong(0) == 100L, "catalog surface must see version 1")
     // regex surface, same string: SHALLOW CLONE AS OF
     val cDir = s"$wh/clone_tz"
-    GraftSql.command(sess,
+    sess.sql(
       s"CREATE TABLE $cDir SHALLOW CLONE $wh/ns/t TIMESTAMP AS OF '$midStr'")
     assert(GraftTable.at(sess, cDir).read.count() == 100L,
       "regex surface (SHALLOW CLONE) must resolve the same instant → same version")
     // regex surface: RESTORE TO TIMESTAMP AS OF
-    val restored = GraftSql.command(sess,
-      s"RESTORE TABLE $wh/ns/t TO TIMESTAMP AS OF '$midStr'").get.collect()
+    val restored = sess.sql(
+      s"RESTORE TABLE $wh/ns/t TO TIMESTAMP AS OF '$midStr'").collect()
     assert(restored.head.getLong(0) == v1,
       s"RESTORE must resolve to v$v1, got ${restored.head.getLong(0)}")
     assert(t.read.count() == 100L)
@@ -93,7 +93,7 @@ class TimeZoneSpec extends AnyFunSuite {
     t.insert(a)
     Thread.sleep(5)
     t.insert(sess.range(40, 60).selectExpr("id AS k"))
-    val rows = GraftSql.command(sess, s"SHOW VERSIONS FOR TABLE $dir").get.collect()
+    val rows = sess.sql(s"SHOW VERSIONS FOR TABLE $dir").collect()
     // paste each listed commit_time back into the resolver: it must
     // resolve to a version >= the listed one (ties share a stamp), and
     // the newest row's string must resolve to the current version

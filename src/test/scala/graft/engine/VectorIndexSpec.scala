@@ -131,10 +131,10 @@ class VectorIndexSpec extends AnyFunSuite {
     GraftTable.drop(spark, p)
     GraftTable.createAsSelect(spark, p, emb,
       properties = Map("index.autorefresh" -> "false"))
-    GraftSql.command(spark,
+    spark.sql(
       s"CREATE INDEX vx ON TABLE $p (vec_id, embedding) AS 'vector'")
     val t0 = GraftTable.at(spark, p)
-    val shown = GraftSql.command(spark, s"SHOW INDEXES ON TABLE $p").get
+    val shown = spark.sql(s"SHOW INDEXES ON TABLE $p")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(4), r.getString(5)))
     assert(shown.exists { case (n, k, c, st, sync) =>
@@ -146,12 +146,12 @@ class VectorIndexSpec extends AnyFunSuite {
     // lifecycle statements route to the vector maintenance paths; the
     // not-yet-reindexed load shows as out-of-sync in SHOW INDEXES
     t0.insert(emb.withColumn("vec_id", col("vec_id") + lit(50000)))
-    val stale = GraftSql.command(spark, s"SHOW INDEXES ON TABLE $p").get
+    val stale = spark.sql(s"SHOW INDEXES ON TABLE $p")
       .collect().map(_.getString(5))
     assert(stale.exists(_.startsWith("1/2 segments")),
       s"expected 1/2 sync after an unindexed load, got: ${stale.mkString}")
-    GraftSql.command(spark, s"REINDEX INDEX TABLE vx ON TABLE $p")
-    val synced = GraftSql.command(spark, s"SHOW INDEXES ON TABLE $p").get
+    spark.sql(s"REINDEX INDEX TABLE vx ON TABLE $p")
+    val synced = spark.sql(s"SHOW INDEXES ON TABLE $p")
       .collect().map(_.getString(5))
     assert(synced.exists(_.startsWith("2/2 segments")),
       s"expected 2/2 sync after REINDEX, got: ${synced.mkString}")
@@ -159,18 +159,18 @@ class VectorIndexSpec extends AnyFunSuite {
       idxTop(t0, 5, nprobe = 8, rerank = 100000))
     assert(r1 == exactTop(t0, 5))
     assert(lines1.exists(_.contains("2/2 segments served from the index")))
-    GraftSql.command(spark, s"REFRESH INDEX vx ON TABLE $p")
+    spark.sql(s"REFRESH INDEX vx ON TABLE $p")
     assert(idxTop(t0, 5, nprobe = 8, rerank = 100000) == exactTop(t0, 5))
 
-    GraftSql.command(spark, s"DROP INDEX vx ON TABLE $p")
-    assert(GraftSql.command(spark, s"SHOW INDEXES ON TABLE $p").get.count() == 0)
+    spark.sql(s"DROP INDEX vx ON TABLE $p")
+    assert(spark.sql(s"SHOW INDEXES ON TABLE $p").count() == 0)
     intercept[IllegalArgumentException] {
       VectorIndex.search(GraftTable.at(spark, p), "embedding", queries,
         5, 8, 100)
     }
     // a 2-column list is vector-only
     intercept[IllegalArgumentException] {
-      GraftSql.command(spark,
+      spark.sql(
         s"CREATE INDEX bad ON TABLE $p (vec_id, embedding) AS 'carbondata'")
     }
   }
@@ -179,10 +179,10 @@ class VectorIndexSpec extends AnyFunSuite {
     val p = s"${graft.queries.Fixtures.root}/spec/vecidx_def"
     GraftTable.drop(spark, p)
     val t0 = GraftTable.createAsSelect(spark, p, emb) // autorefresh default ON
-    GraftSql.command(spark,
+    spark.sql(
       s"CREATE INDEX vd ON TABLE $p (vec_id, embedding) AS 'vector' " +
         "WITH DEFERRED REFRESH PROPERTIES('nlist'='4', 'm'='4', 'dim'='64')")
-    def shown() = GraftSql.command(spark, s"SHOW INDEXES ON TABLE $p").get
+    def shown() = spark.sql(s"SHOW INDEXES ON TABLE $p")
       .collect().map(r => (r.getString(4), r.getString(5))).head
 
     // registered DISABLED; search stays correct via the exact fallback
@@ -202,7 +202,7 @@ class VectorIndexSpec extends AnyFunSuite {
 
     // the first REFRESH trains with the frozen PROPERTIES and builds;
     // full probe at the CONFIGURED nlist (4) reproduces brute force
-    GraftSql.command(spark, s"REFRESH INDEX vd ON TABLE $p")
+    spark.sql(s"REFRESH INDEX vd ON TABLE $p")
     val (st2, sync2) = shown()
     assert(st2 == "ENABLED" && sync2.startsWith("2/2 segments"),
       s"expected enabled 2/2 after REFRESH, got ($st2, $sync2)")
