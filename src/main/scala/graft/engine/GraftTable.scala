@@ -844,24 +844,37 @@ class GraftTable private (val spark: SparkSession, val path: String)
   def insertOverwriteWhere(cond: org.apache.spark.sql.Column, df: DataFrame): Long =
     Mutation.insertOverwriteWhere(this, cond, df)
 
-  /** Dynamic partition overwrite (hive `partitionOverwriteMode=dynamic`):
-    * replace exactly the partitions present in `df`, keep the rest. The
-    * distinct-tuple collect is bounded by the partition count. (SQL
-    * `INSERT OVERWRITE` in dynamic mode needs a full DSv2 BatchWrite,
-    * which the V1-write source deliberately doesn't claim — this is the
-    * API form.) */
+  /** Dynamic partition overwrite (hive `partitionOverwriteMode=dynamic`)
+    * — the one operation behind both this call and SQL `INSERT
+    * OVERWRITE` in dynamic mode. A table without partition columns
+    * (plain or bucket-only) is overwritten whole, as in hive. Otherwise
+    * exactly the partitions present in `df` are replaced and the rest
+    * kept: the scope is a value predicate over `df`'s distinct partition
+    * tuples (the collect is bounded by the partition count), rewritten
+    * through [[Mutation.insertOverwriteWhere]], so every segment kind
+    * (external, streaming, pre-footer) and bucketed layouts take part.
+    * `df` is evaluated once: the tuples and the written rows come from
+    * the same materialization, so a source that changes between reads
+    * cannot drop a partition without new rows or keep stale rows beside
+    * new ones. Returns #rows replaced. */
   def insertOverwriteDynamic(df: DataFrame): Long = {
     val pCols = meta.partitionColumns
-    require(pCols.nonEmpty, "dynamic overwrite needs a partitioned table")
-    val tuples = df.select(pCols.map(col): _*).distinct().collect()
-    if (tuples.isEmpty) { insert(df); 0L }
+    if (pCols.isEmpty) {
+      val replaced = countStar
+      insert(df, overwrite = true)
+      return replaced
+    }
+    val pinned = df.select(schema.fields.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)).toSeq: _*).localCheckpoint()
+    val tuples = pinned.select(pCols.map(col): _*).distinct().collect()
+    if (tuples.isEmpty) 0L
     else {
       val cond = tuples.map { r =>
         pCols.zipWithIndex.map { case (c, i) =>
           if (r.isNullAt(i)) col(c).isNull else col(c) === lit(r.get(i))
         }.reduce(_ && _)
       }.reduce(_ || _)
-      insertOverwriteWhere(cond, df)
+      insertOverwriteWhere(cond, pinned)
     }
   }
 
@@ -1809,7 +1822,8 @@ class GraftTable private (val spark: SparkSession, val path: String)
           val tmp = new org.apache.hadoop.fs.Path(dir,
             s".fold-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
           val res: Boolean = try {
-            df.write.mode("overwrite").parquet(tmp.toString)
+            df.write.mode("overwrite").options(SegmentWriter.writerOptions(meta))
+              .parquet(tmp.toString)
             Failpoints.hit("fold.tmpWritten", path)
             val part = layout.fs.listStatus(tmp)
               .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))

@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, UpdateAction, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, OverwritePartitionsDynamic, UpdateAction, UpdateTable}
+import org.apache.spark.sql.connector.write.V1Write
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation, OverwriteByExpressionExecV1}
 import org.apache.spark.sql.functions.expr
 
 /** SQL `UPDATE <table> SET ... WHERE ...` for carbonish catalog tables.
@@ -24,7 +25,8 @@ import org.apache.spark.sql.functions.expr
   * [[graft.engine.Mutation]] path — only segments containing matching
   * rows are rewritten, so a point UPDATE on a 100 TB table touches ~1
   * segment. `DELETE FROM` needs no strategy: the source implements DSv2
-  * `SupportsDelete` and Spark plans it natively.
+  * `SupportsDelete` and Spark plans it natively. MERGE INTO and
+  * dynamic-mode INSERT OVERWRITE are claimed here too (cases below).
   *
   * Reference semantics: CarbonSpark2SqlParser.scala:239 (deleteRecords)
   * and :259 (updateTable) — there a bespoke parser; here Spark's parser +
@@ -90,6 +92,17 @@ class GraftDmlStrategy extends SparkStrategy {
             conv(m.notMatchedBySourceActions)) :: Nil
         case None => Nil
       }
+    // SQL `INSERT OVERWRITE` under partitionOverwriteMode=dynamic. Spark
+    // has no V1 fallback for OverwritePartitionsDynamic (its own plan
+    // calls Write.toBatch); the source's write is the V1 one, whose
+    // dynamic mode is GraftTable.insertOverwriteDynamic, so run it
+    // through Spark's V1 fallback exec and refresh cached plans over
+    // the table the way the built-in V1 fallbacks do
+    case OverwritePartitionsDynamic(r: DataSourceV2Relation, query, _, _, Some(w: V1Write))
+        if r.table.isInstanceOf[CarbonishTable] =>
+      val session = org.apache.spark.sql.classic.SparkSession.active
+      OverwriteByExpressionExecV1(r.table.asInstanceOf[CarbonishTable], query,
+        () => session.sharedState.cacheManager.recacheByPlan(session, r), w) :: Nil
     case _ => Nil
   }
 

@@ -28,6 +28,21 @@ object SegmentWriter {
     case _ => false
   }
 
+  /** The table's parquet writer options, for every data file graft
+    * writes (segment loads, rewrites, delta folds, streaming batches).
+    * `parquet.*` table properties pass through — row-group size
+    * (parquet.block.size), page size, bloom NDV hints etc. are per-table
+    * tuning knobs exactly like the reference's table-level
+    * TBLPROPERTIES — and `bloom_columns=c1,c2` (the CREATE INDEX … AS
+    * 'bloomfilter' analog: the reference's bloom CG index collapses onto
+    * parquet's) layers per-column bloom filter enables on top. */
+  def writerOptions(meta: TableMeta): Map[String, String] = {
+    val bloomCols = meta.properties.get("bloom_columns").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    meta.properties.filter(_._1.startsWith("parquet.")) ++
+      bloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
+  }
+
   /** Write `df` as segment `id` under `layout`, returning its metadata
     * (not yet committed to tablestatus).
     *
@@ -129,28 +144,12 @@ object SegmentWriter {
     val observed = sorted.observe(obs, aggs.head, aggs.tail: _*)
 
     val tmp = layout.tmpSegmentDir(id)
-    // CREATE INDEX … AS 'bloomfilter' analog: table property
-    // bloom_columns=c1,c2 turns on parquet bloom filters for those
-    // columns (the reference's bloom CG index collapses onto parquet's)
-    val bloomCols = meta.properties.get("bloom_columns")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     // partitioned: mirror columns drive the dir split; the real columns
     // stay in the data files (partitionBy drops only the mirrors).
     // bucketed: the __b id column splits bucket dirs the same way.
     val toWrite = pCols.foldLeft(observed)((d, c) =>
       d.withColumn(Partitions.mirror(c), col(c)))
-    // parquet.* table properties pass through as writer options —
-    // row-group size (parquet.block.size), page size, bloom NDV hints
-    // etc. are per-table tuning knobs exactly like the reference's
-    // table-level TBLPROPERTIES; bloom_columns then layers its
-    // per-column enables on top.
-    val parquetOpts = meta.properties.filter(_._1.startsWith("parquet."))
-    val writer0 = parquetOpts.foldLeft(toWrite.write.mode("overwrite")) {
-      case (w, (k, v)) => w.option(k, v)
-    }
-    val writer = bloomCols.foldLeft(writer0) { (w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }
+    val writer = toWrite.write.mode("overwrite").options(writerOptions(meta))
     val dirCols = pCols.map(Partitions.mirror) ++
       (if (bucketSpec.isDefined) Seq("__b") else Nil)
     (if (dirCols.isEmpty) writer else writer.partitionBy(dirCols: _*))

@@ -102,8 +102,8 @@ object StatValue {
   /** Fold stored canonical values to their min/max under `dt`'s
     * comparison family. None = empty input or an incomparable pair —
     * callers must drop the stats entry rather than guess (shared by
-    * file-retirement, footer lifting and the BatchWrite commit, so the
-    * incomparable contract stays identical in all three). */
+    * file-retirement and footer lifting, so the incomparable contract
+    * stays identical in both). */
   def foldStored(
       dt: org.apache.spark.sql.types.DataType,
       vs: Seq[String],

@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, InsertableRelation}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.{DataFrame, SQLContext}
+import org.apache.spark.sql.DataFrame
 import org.apache.hadoop.fs.Path
 
 import java.util
@@ -32,45 +32,9 @@ import scala.jdk.CollectionConverters._
   * pushdown, nested-column pruning, row-group/page skipping and
   * whole-stage codegen are all inherited rather than re-implemented.
   */
-class CarbonishSource extends TableProvider with DataSourceRegister
-    with org.apache.spark.sql.sources.CreatableRelationProvider {
+class CarbonishSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "carbonish"
   override def supportsExternalMetadata(): Boolean = true
-
-  /** `df.write.format("carbonish").save(path)` on a FRESH path routes
-    * through the V1 CreatableRelationProvider hook (the DSv2 path needs
-    * an inferable schema, which a fresh table doesn't have): create the
-    * table from the frame's schema — `.option("sort_columns", "a,b")`
-    * declares the sort — then insert per SaveMode. */
-  override def createRelation(
-      sqlContext: SQLContext,
-      mode: org.apache.spark.sql.SaveMode,
-      parameters: Map[String, String],
-      data: DataFrame): org.apache.spark.sql.sources.BaseRelation = {
-    import org.apache.spark.sql.SaveMode
-    val spark = data.sparkSession
-    val path = parameters.getOrElse("path",
-      throw new IllegalArgumentException("carbonish: 'path' option required"))
-    val layout = new TableLayout(path, spark.sessionState.newHadoopConf())
-    val exists = layout.exists
-    if (exists && mode == SaveMode.ErrorIfExists)
-      throw new IllegalStateException(s"carbonish table already exists at $path")
-    if (!(exists && mode == SaveMode.Ignore)) {
-      val t =
-        if (exists) GraftTable.at(spark, path)
-        else {
-          val sortCols = parameters.get("sort_columns").toSeq
-            .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-          GraftTable.create(spark, path, data.schema, sortCols)
-        }
-      t.insert(data, overwrite = mode == SaveMode.Overwrite)
-    }
-    val outerCtx = sqlContext
-    new org.apache.spark.sql.sources.BaseRelation {
-      override def sqlContext: SQLContext = outerCtx
-      override def schema: StructType = data.schema
-    }
-  }
 
   private def tablePath(options: CaseInsensitiveStringMap): String = {
     val p = Option(options.get("path")).getOrElse {
@@ -119,10 +83,11 @@ class CarbonishTable(path: String, tableSchema: StructType,
     if (asOfVersion.isEmpty) tableSchema
     else StructType(tableSchema.fields.map(_.copy(nullable = true)))
   override def schema(): StructType = servedSchema
-  // append/truncate/filter-overwrite run through the V1 write (the
-  // planner dispatches per Write instance); BATCH_WRITE+OVERWRITE_DYNAMIC
-  // exist for the one plan that hard-requires a real BatchWrite —
-  // INSERT OVERWRITE in dynamic partition mode (DynamicOverwriteWrite)
+  // every write runs through the V1 write. BATCH_WRITE and
+  // OVERWRITE_DYNAMIC are claimed only because Spark's capability check
+  // demands both before it lets INSERT OVERWRITE in dynamic partition
+  // mode (OverwritePartitionsDynamic) reach the planner, where
+  // GraftDmlStrategy runs it through the V1 write as well
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.V1_BATCH_WRITE,
@@ -296,10 +261,11 @@ class CarbonishTable(path: String, tableSchema: StructType,
   }
 
   /** Append / truncate-overwrite / filter-overwrite (the v2 plan for
-    * `INSERT OVERWRITE … PARTITION (p=v)` static mode) — all routed to
-    * the segment commit protocol. Filter overwrites are atomic
-    * retire-and-append swaps via
-    * [[graft.engine.Mutation.insertOverwriteWhere]]. */
+    * `INSERT OVERWRITE … PARTITION (p=v)` static mode) / dynamic
+    * partition overwrite — all routed to the segment commit protocol.
+    * Filter overwrites are atomic retire-and-append swaps via
+    * [[graft.engine.Mutation.insertOverwriteWhere]]; dynamic overwrites
+    * are [[GraftTable.insertOverwriteDynamic]]. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate
         with org.apache.spark.sql.connector.write.SupportsOverwrite
@@ -314,28 +280,17 @@ class CarbonishTable(path: String, tableSchema: StructType,
         this
       }
       override def overwriteDynamicPartitions(): WriteBuilder = { mode = "dynamic"; this }
-      override def build(): Write =
-        if (mode == "dynamic") {
-          // hive semantics: with no (hive) partition columns, dynamic
-          // overwrite degenerates to a whole-table overwrite — notably
-          // for bucket-only tables, whose bucket transform makes Spark
-          // plan OverwritePartitionsDynamic (and whose layout the V1
-          // segment writer preserves, unlike the BatchWrite path)
-          val layout = new TableLayout(path, SparkSession.active.sessionState.newHadoopConf())
-          if (layout.exists && layout.readTableMeta().partitionColumns.isEmpty) {
-            mode = "truncate"; buildV1
-          } else new DynamicOverwriteWrite(path, info)
-        }
-        else buildV1
-      private def buildV1: Write = new V1Write {
+      override def build(): Write = new V1Write {
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {
             override def insert(data: DataFrame, ignored: Boolean): Unit = {
               val spark = data.sparkSession
               val layout = new TableLayout(path, spark.sessionState.newHadoopConf())
               // `df.write.format("carbonish").save(path)` on a fresh path
-              // creates the table, like any Spark file source; declare
-              // sort columns via .option("sort_columns", "a,b")
+              // (append or overwrite mode) creates the table from the
+              // frame's schema, like any Spark file source; declare sort
+              // and partition columns via .option("sort_columns", "a,b")
+              // and .option("partition_columns", "p")
               val t =
                 if (layout.exists) GraftTable.at(spark, path)
                 else {
@@ -348,6 +303,7 @@ class CarbonishTable(path: String, tableSchema: StructType,
               mode match {
                 case "append" => t.insert(data, overwrite = false)
                 case "truncate" => t.insert(data, overwrite = true)
+                case "dynamic" => t.insertOverwriteDynamic(data)
                 case "filter" =>
                   val cond = overwriteFilters.map(filterToColumn).reduceOption(_ && _)
                     .getOrElse(org.apache.spark.sql.functions.lit(true))

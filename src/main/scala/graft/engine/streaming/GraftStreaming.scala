@@ -63,7 +63,8 @@ object GraftStreaming {
     }.toSeq
     val tmp = layout.tmpSegmentDir(segId)
     aligned.observe(obs, aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").parquet(tmp.toString)
+      .write.mode("overwrite").options(SegmentWriter.writerOptions(t.meta))
+      .parquet(tmp.toString)
     val m = obs.get
     val n = m("__n").asInstanceOf[Long]
 

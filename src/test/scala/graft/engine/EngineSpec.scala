@@ -34,6 +34,20 @@ object TestSpark {
     s
   }
 
+  /** Parquet bloom filter present on column `c` in every row group of
+    * every file of segment `seg`. */
+  def bloomOn(t: GraftTable, seg: graft.engine.format.SegmentMeta, c: String): Boolean = {
+    import scala.jdk.CollectionConverters._
+    t.layout.segmentFilePaths(seg).forall { file =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file), new org.apache.hadoop.conf.Configuration()))
+      try reader.getFooter.getBlocks.asScala.forall { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == c).exists(_.getBloomFilterOffset > 0)
+      } finally reader.close()
+    }
+  }
+
   /** Unwrap the carbonish runtime-filtering scan to the delegated
     * parquet scan (plan-inspection helper for the specs). */
   def parquetScanOf(s: org.apache.spark.sql.connector.read.Scan)

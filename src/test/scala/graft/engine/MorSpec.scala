@@ -149,6 +149,21 @@ class MorSpec extends AnyFunSuite {
     assert(t.read.filter(col("k").isin(5L, 6L)).count() == 0)
   }
 
+  test("a delta fold keeps the table's parquet bloom filters") {
+    val src = spark.range(0, 4000).selectExpr("id AS k", "md5(CAST(id AS STRING)) AS v")
+    val t = GraftTable.create(spark, tmp(), src.schema, sortColumns = Seq("k"),
+      properties = Map("global_sort_partitions" -> "1", "iud_mode" -> "mor",
+        "bloom_columns" -> "v"))
+    t.insert(src)
+    assert(TestSpark.bloomOn(t, t.status.visible.head, "v"))
+    assert(t.delete(col("k") < 2000L) == 2000L)
+    assert(t.foldDeltas(minFraction = 0.3) == 1)
+    val folded = t.status.visible.head
+    assert(folded.deltas.isEmpty && folded.files.forall(_.contains("-fold-")), folded.files.toString)
+    assert(TestSpark.bloomOn(t, folded, "v"), "the folded file must keep its bloom filter on v")
+    assert(t.read.count() == 2000)
+  }
+
   test("foldDeltas rewrites a heavily-deleted file clean and restores columnar scans") {
     val t = mk(Map("horizontal_compaction_threshold" -> "100"))
     def scanColumnar(): Boolean =

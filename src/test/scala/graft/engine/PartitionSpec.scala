@@ -3,7 +3,8 @@ package graft.engine
 import graft.engine.format.{Partitions, SegmentStatus}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Hive-style partitioned tables: per-value file layout inside segments,
   * file-grain pruning, SHOW/ADD/DROP PARTITION through Spark's v2
@@ -24,6 +25,29 @@ class PartitionSpec extends AnyFunSuite {
     t.insert(src)
     t
   }
+
+  private def dynamicMode[A](body: => A): A = {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "dynamic")
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** A catalog over a fresh warehouse, with namespace `ns`. */
+  private def warehouse(catalog: String): String = {
+    val wh = Files.createTempDirectory("graft_pwh_").toString
+    spark.conf.set(s"spark.sql.catalog.$catalog", "graft.engine.catalog.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$catalog.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $catalog.ns")
+    wh
+  }
+
+  private def rowsOf(sql: String): Seq[(Int, String)] =
+    spark.sql(sql).collect().map(r => (r.getInt(0), r.getString(1))).toSeq.sorted
 
   private def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.sql.execution.SparkPlan
@@ -140,15 +164,9 @@ class PartitionSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(afterStatic == Seq((1, "a"), (9, "b")), afterStatic.toString)
 
-    // dynamic via SQL: the real DSv2 BatchWrite path
-    // (OverwritePartitionsDynamic → DynamicOverwriteWrite)
-    val old = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try spark.sql("INSERT OVERWRITE gp2.ns.ow VALUES (7, 'a'), (8, 'c')")
-    finally old match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // dynamic via SQL (OverwritePartitionsDynamic → the V1 write's
+    // GraftTable.insertOverwriteDynamic)
+    dynamicMode(spark.sql("INSERT OVERWRITE gp2.ns.ow VALUES (7, 'a'), (8, 'c')"))
     val afterDyn = spark.sql("SELECT k, p FROM gp2.ns.ow ORDER BY k")
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(afterDyn == Seq((7, "a"), (8, "c"), (9, "b")), afterDyn.toString)
@@ -160,7 +178,7 @@ class PartitionSpec extends AnyFunSuite {
     val afterApi = spark.sql("SELECT k, p FROM gp2.ns.ow ORDER BY k")
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(afterApi == Seq((5, "c"), (6, "d"), (7, "a"), (9, "b")), afterApi.toString)
-    // new-segment metadata from the BatchWrite path is exact
+    // new-segment metadata is exact
     assert(t.countStar == 4)
   }
 
@@ -276,4 +294,119 @@ class PartitionSpec extends AnyFunSuite {
     val files = plannedFiles(t.read.filter(col("p") === 0).select("k"))
     assert(files.nonEmpty && files.forall(_.contains("__p_p=0")))
   }
+
+  /** Dynamic-mode SQL `INSERT OVERWRITE` on a table created by `ddl`
+    * (with `%s` for the table name) equals `insertOverwriteDynamic` on a
+    * twin table, in rows and in the partition/bucket directories its
+    * files sit in; returns those rows and directories. */
+  private def sqlEqualsApi(catalog: String, ddl: String): (Seq[(Int, String)], Set[String]) = {
+    val wh = warehouse(catalog)
+    for (n <- Seq("s", "a")) {
+      spark.sql(ddl.format(s"$catalog.ns.$n"))
+      spark.sql(s"INSERT INTO $catalog.ns.$n VALUES (1, 'a'), (2, 'b'), (3, 'b'), (4, 'c')")
+    }
+    dynamicMode(spark.sql(s"INSERT OVERWRITE $catalog.ns.s VALUES (7, 'a'), (8, 'd')"))
+    import spark.implicits._
+    GraftTable.at(spark, s"$wh/ns/a").insertOverwriteDynamic(Seq((7, "a"), (8, "d")).toDF("k", "p"))
+    val viaSql = rowsOf(s"SELECT k, p FROM $catalog.ns.s")
+    assert(viaSql == rowsOf(s"SELECT k, p FROM $catalog.ns.a"))
+    def dirs(n: String): Set[String] = GraftTable.at(spark, s"$wh/ns/$n").status.visible
+      .flatMap(_.files.map(f => f.substring(0, math.max(0, f.lastIndexOf('/'))))).toSet
+    assert(dirs("s") == dirs("a"), s"${dirs("s")} vs ${dirs("a")}")
+    assert(GraftTable.at(spark, s"$wh/ns/s").countStar == viaSql.size)
+    (viaSql, dirs("s"))
+  }
+
+  test("dynamic INSERT OVERWRITE on an unpartitioned table overwrites it whole, SQL = API") {
+    val (rows, dirs) = sqlEqualsApi("gdu", "CREATE TABLE %s (k INT, p STRING) USING carbonish")
+    assert(rows == Seq((7, "a"), (8, "d")), rows.toString)
+    assert(dirs == Set(""), dirs.toString)
+  }
+
+  test("dynamic INSERT OVERWRITE on a bucket-only table overwrites it whole, SQL = API") {
+    val (rows, dirs) = sqlEqualsApi("gdb",
+      "CREATE TABLE %s (k INT, p STRING) USING carbonish PARTITIONED BY (bucket(4, k))")
+    assert(rows == Seq((7, "a"), (8, "d")), rows.toString)
+    assert(dirs.nonEmpty && dirs.forall(_.startsWith("__b=")), dirs.toString)
+  }
+
+  test("dynamic INSERT OVERWRITE on a bucketed partitioned table, SQL = API") {
+    val (rows, dirs) = sqlEqualsApi("gdp",
+      "CREATE TABLE %s (k INT, p STRING) USING carbonish PARTITIONED BY (p, bucket(4, k))")
+    assert(rows == Seq((2, "b"), (3, "b"), (4, "c"), (7, "a"), (8, "d")), rows.toString)
+    assert(dirs.nonEmpty && dirs.forall(d => d.startsWith("__p_p=") && d.contains("/__b=")),
+      dirs.toString)
+  }
+
+  test("SQL dynamic overwrite writes its segment with bloom filters and full stats") {
+    val wh = warehouse("gdl")
+    spark.sql("CREATE TABLE gdl.ns.bl (k INT, v STRING, x DOUBLE, p STRING) USING carbonish " +
+      "PARTITIONED BY (p) TBLPROPERTIES ('bloom_columns'='v', 'sort_columns'='k')")
+    spark.sql("INSERT INTO gdl.ns.bl SELECT CAST(id AS INT), md5(CAST(id AS STRING)), id * 0.5, " +
+      "IF(id % 2 = 0, 'a', 'b') FROM range(2000)")
+    dynamicMode(spark.sql("INSERT OVERWRITE gdl.ns.bl SELECT CAST(id AS INT), md5(CAST(id AS STRING)), " +
+      "id * 0.5, 'b' FROM range(5000, 6000)"))
+    val t = GraftTable.at(spark, s"$wh/ns/bl")
+    assert(t.read.filter(col("p") === "b").count() == 1000)
+    assert(t.read.filter(col("p") === "a").count() == 1000)
+    val seg = t.status.visible.maxBy(_.id)
+    assert(seg.rowCount == 1000 && seg.files.forall(_.startsWith("__p_p=b")), seg.files.toString)
+    assert(TestSpark.bloomOn(t, seg, "v"), "the overwrite's files must carry the bloom filter on v")
+    assert(seg.stats.keySet == Set("k", "v", "x", "p"), seg.stats.keySet.toString)
+  }
+
+  test("dynamic overwrite replaces a partition's rows held by an external segment") {
+    val wh = warehouse("gde")
+    spark.sql("CREATE TABLE gde.ns.ex (k INT, p STRING) USING carbonish PARTITIONED BY (p)")
+    spark.sql("INSERT INTO gde.ns.ex VALUES (1, 'a'), (2, 'b')")
+    // a flat parquet folder (no __p_ dirs) holding partition-b rows
+    val ext = Files.createTempDirectory("graft_pext_").toString
+    import spark.implicits._
+    Seq((3, "b"), (4, "b")).toDF("k", "p").write.mode("overwrite").parquet(ext)
+    GraftTable.at(spark, s"$wh/ns/ex").addSegment(ext)
+    assert(rowsOf("SELECT k, p FROM gde.ns.ex") == Seq((1, "a"), (2, "b"), (3, "b"), (4, "b")))
+    dynamicMode(spark.sql("INSERT OVERWRITE gde.ns.ex VALUES (9, 'b')"))
+    val rows = rowsOf("SELECT k, p FROM gde.ns.ex")
+    assert(rows == Seq((1, "a"), (9, "b")), rows.toString)
+  }
+
+  test("insertOverwriteDynamic evaluates its input once") {
+    val src = spark.range(0, 6).selectExpr("id AS k", "IF(id < 3, 'a', 'b') AS p")
+    val t = GraftTable.create(spark, tmp(), src.schema, partitionColumns = Seq("p"))
+    t.insert(src)
+    // the partition value flips after the first evaluation
+    PartitionSpec.evals.set(0)
+    val flip = udf(() => if (PartitionSpec.evals.getAndIncrement() == 0) "a" else "b")
+      .asNondeterministic()
+    t.insertOverwriteDynamic(spark.range(100, 102).coalesce(1)
+      .select(col("id").as("k"), flip().as("p")))
+    val rows = t.read.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    val landed = rows.filter(_._1 >= 100).map(_._2).toSet
+    assert(rows.count(_._1 >= 100) == 2, rows.toString)
+    // old rows went exactly from the partitions the new rows landed in
+    val oldKept = rows.filter(_._1 < 100)
+    val expectOld = (0L until 6L).map(k => (k, if (k < 3) "a" else "b"))
+      .filterNot(r => landed(r._2))
+    assert(oldKept == expectOld, s"landed in $landed: $rows")
+  }
+
+  test("one segment writer: no DSv2 data writer or V1 relation provider in src/main") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"expected the sources under ${main.toAbsolutePath}")
+    val implementsIt = """\b(extends|with)\s+[\w.]*\b(DataWriter|DataWriterFactory|BatchWrite|CreatableRelationProvider)\b""".r
+    val files = Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = for {
+      p <- files
+      (l, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if implementsIt.findFirstIn(l).isDefined || l.contains("prepareWrite") ||
+        (l.contains("parquet.bloom.filter.enabled") &&
+          p.getFileName.toString != "SegmentWriter.scala")
+    } yield s"$p:${i + 1}: ${l.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+}
+
+object PartitionSpec {
+  private val evals = new java.util.concurrent.atomic.AtomicInteger(0)
 }
