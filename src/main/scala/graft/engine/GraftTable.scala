@@ -115,10 +115,9 @@ class GraftTable private (val spark: SparkSession, val path: String)
 
   /** TIME TRAVEL (r17, beyond the reference — Delta/Iceberg `VERSION AS
     * OF`): the table exactly as of commit-log version `version`,
-    * resolved via [[TableLayout.statusAt]] (checkpointed tables replay
-    * ckpt + delta tail; inline tables read their timetravel='true'
-    * versioned snapshots). The same scan as the catalog's `SELECT …
-    * VERSION AS OF v`: the as-of segment list drives the DSv2 scan's
+    * resolved via [[TableLayout.statusAt]] (checkpoint + delta tail
+    * replay; every table, no opt-in). The same scan as the catalog's
+    * `SELECT … VERSION AS OF v`: the as-of segment list drives the DSv2 scan's
     * pruning, and as-of merge-on-read delta lists mask exactly the rows
     * that were dead AT that version. Served under the CURRENT schema
     * with every column nullable (columns added or renamed since read
@@ -1448,39 +1447,33 @@ class GraftTable private (val spark: SparkSession, val path: String)
         .filter(f => now - f.getModificationTime > 3600 * 1000)
         .foreach(f => fs.delete(f.getPath, false))
     } catch { case scala.util.control.NonFatal(_) => }
-    // checkpointed-commit-log GC: a log file is live while any reader
-    // newer than one checkpoint interval can reach it — that is
-    // ckpt-{ckptV}, ckpt-{prevCkptV} and the deltas past prevCkptV.
-    // Everything older aged out two generations ago; names with a
-    // version BEYOND the manifest are crashed-commit orphans (their
-    // retry overwrites them in place). Both only reclaim past the
+    // commit-log GC, one horizon for every table: the newest checkpoint
+    // at or below version − graft.timetravel.retain and every log file
+    // newer than it stay, so statusAt replays at least the last
+    // `retain` versions. The manifest's ckptV and prevCkptV and the
+    // deltas past them stay too: a reader that read the manifest just
+    // before a rollover flip still assembles from them. Older files
+    // (v-<n>.json snapshots older releases wrote included), names with a
+    // version BEYOND the manifest (crashed-commit orphans; their retry
+    // overwrites them in place) and crashed staging files go, after the
     // same 1-hour grace every other sweep uses.
-    // (gated on the DIRECTORY, not on st.ckptV: a transition commit
-    // that crashed between its first snapshot write and the manifest
-    // rename leaves an orphan ckpt file under a still-INLINE manifest
-    // — with ckptV=-1 every log file is fodder, which is correct)
     try {
       if (fs.exists(layout.logDir)) {
         val snap = layout.readStatus()
-        val LogName = """(ckpt|delta|v)-(\d+)\.jsonl?""".r
-        fs.listStatus(layout.logDir)
+        val files = fs.listStatus(layout.logDir)
+        val horizonCkpt = files.map(_.getPath.getName).collect {
+          case graft.engine.format.TableLayout.LogName("ckpt", v)
+            if v.toLong <= snap.version -
+              graft.engine.format.TableLayout.timetravelRetainVersions => v.toLong
+        }.maxOption
+        val floor = horizonCkpt.fold(-1L)(h =>
+          (h +: Seq(snap.ckptV, snap.prevCkptV).filter(_ >= 0)).min)
+        val Versioned = """[a-z]+-(\d+)\.jsonl?""".r
+        files
           .filter(f => now - f.getModificationTime > 3600 * 1000)
           .filter { f =>
             f.getPath.getName match {
-              case LogName("ckpt", v) =>
-                val n = v.toLong
-                n != snap.ckptV && n != snap.prevCkptV
-              case LogName("delta", v) =>
-                val n = v.toLong
-                snap.ckptV < 0 || n <= snap.prevCkptV || n > snap.version
-              case LogName("v", v) =>
-                // inline-era time-travel snapshots: bounded retention
-                // behind the current version; names beyond the manifest
-                // are crashed-commit orphans
-                val n = v.toLong
-                n <= snap.version -
-                  graft.engine.format.TableLayout.timetravelRetainVersions ||
-                  n > snap.version
+              case Versioned(v) => v.toLong < floor || v.toLong > snap.version
               case name => name.contains(".tmp-") // crashed log writes
             }
           }

@@ -217,7 +217,7 @@ private[engine] object MetaJson {
       case t => throw new IllegalStateException(s"expected array, got $t")
     }
 
-  /** Whole-document TableStatus (inline form / ckpt-*.json / jsonl header). */
+  /** Whole-document TableStatus (manifest / older ckpt-*.json / jsonl header). */
   def tableStatus(p: JsonParser): TableStatus = {
     if (p.currentToken() == null) p.nextToken()
     expect(p, JsonToken.START_OBJECT)

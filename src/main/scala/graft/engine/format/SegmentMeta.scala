@@ -138,34 +138,33 @@ object SegmentMeta {
 /** The atomic commit log: full list of segments ever created (until
   * CLEAN FILES garbage-collects terminal ones).
   *
-  * Two on-disk forms, distinguished by `ckptV` (r16, the 1M-segment
-  * horizon — the same snapshot+tail shape the reference keeps as
-  * tablestatus + tablestatus.history, SegmentStatusManager.java):
+  * On disk the file is a MANIFEST (the same snapshot+tail shape the
+  * reference keeps as tablestatus + tablestatus.history,
+  * SegmentStatusManager.java, and Delta Lake's checkpoint + commit
+  * files): `segments` is empty and the real list is
+  * `_meta/log/ckpt-<ckptV>.jsonl` (a full snapshot, immutable) plus one
+  * `_meta/log/delta-<v>.json` per commit for v in (ckptV, version]. A
+  * commit writes O(changed segments), not O(table); a cold read is
+  * snapshot + bounded tail; any retained version replays from the
+  * newest checkpoint at or below it. A manifest with `ckptV < 0` is the
+  * single-file form older releases wrote (full `segments` inline); it
+  * stays readable and its next commit converts it.
   *
-  *  - INLINE (`ckptV < 0`): `segments` is the full list, rewritten by
-  *    every commit — the historical form, kept for small tables where
-  *    a full rewrite is cheaper than managing a log directory.
-  *  - CHECKPOINTED (`ckptV >= 0`): the file is a MANIFEST — `segments`
-  *    is empty on disk and the real list is
-  *    `_meta/log/ckpt-<ckptV>.json` (a full snapshot, immutable) plus
-  *    one `_meta/log/delta-<v>.json` per commit for
-  *    v in (ckptV, version]. A commit then writes O(changed segments),
-  *    not O(table); a cold read is snapshot + bounded tail.
-  *
-  * IN MEMORY `segments` is always the fully-assembled list, whichever
-  * form the disk holds — [[TableLayout]] assembles on read and strips
-  * on manifest write; nothing outside it sees the split. */
+  * IN MEMORY `segments` is always the fully-assembled list —
+  * [[TableLayout]] assembles on read and strips on manifest write;
+  * nothing outside it sees the split. */
 @com.fasterxml.jackson.annotation.JsonPropertyOrder(Array("version", "committedAt"))
 case class TableStatus(
     version: Long,
     segments: Seq[SegmentMeta],
     /** version of the checkpoint snapshot this manifest builds on;
-      * -1 = inline form (plain Long: scala defaults survive jackson,
-      * Option[Long] would round-trip as Option[Integer]) */
+      * -1 = an older release's single-file form, or no commit yet
+      * (plain Long: scala defaults survive jackson, Option[Long] would
+      * round-trip as Option[Integer]) */
     ckptV: Long = -1L,
-    /** the checkpoint before that — log files at or below it are
-      * unreferenced by ANY reader newer than one checkpoint interval
-      * and become CLEAN FILES fodder */
+    /** the checkpoint before that — CLEAN FILES keeps it and the
+      * deltas past it for a reader that read the manifest just before
+      * a rollover flip */
     prevCkptV: Long = -1L,
     /** random id minted with each checkpoint and carried by every
       * manifest built on it — the incremental read path's guard against
@@ -209,10 +208,10 @@ case class TableStatus(
   }
 }
 
-/** One commit's change set in the checkpointed form: entries new or
-  * changed since the parent version (`upserts`, replacing in place by
-  * id with new ids appended in order) and ids dropped (`removes`).
-  * Replay of ckpt + deltas reproduces the inline `segments` list
+/** One commit's change set: entries new or changed since the parent
+  * version (`upserts`, replacing in place by id with new ids appended
+  * in order) and ids dropped (`removes`). Replay of ckpt + deltas
+  * reproduces the committed `segments` list
   * byte-for-byte — the committer VERIFIES that before publishing and
   * falls back to a fresh checkpoint for any commit the delta form
   * cannot represent (e.g. a reorder). */

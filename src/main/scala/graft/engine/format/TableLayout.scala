@@ -31,21 +31,17 @@ class TableLayout(val tablePath: String, conf: Configuration) {
   private val statusPath = new Path(metaDir, "tablestatus.json")
   private val tableMetaPath = new Path(metaDir, "tablemeta.json")
   private val lockPath = new Path(metaDir, ".lock")
-  /** Checkpoint + delta files of the checkpointed commit-log form
-    * (see [[TableStatus]]); only populated past the inline threshold. */
+  /** Checkpoint + delta files of the commit log (see [[TableStatus]]). */
   val logDir = new Path(metaDir, "log")
+  /** Whole-JSON checkpoint that older releases wrote for small tables;
+    * read, never written. */
   private def ckptPath(v: Long) = new Path(logDir, s"ckpt-$v.json")
-  /** Large checkpoints (≥ [[TableLayout.ckptJsonlMinSegments]]) write
-    * as JSON LINES — one SegmentMeta per line behind a header line —
-    * so a cold read can parse line chunks on all cores instead of one
-    * (jackson parse of a 1M-entry whole-JSON snapshot was ~9 s single-
-    * threaded). Small checkpoints keep the whole-JSON form. */
+  /** Checkpoints write as JSON LINES — one SegmentMeta per line behind
+    * a header line — so a cold read can parse line chunks on all cores
+    * instead of one (jackson parse of a 1M-entry whole-JSON snapshot
+    * was ~9 s single-threaded). */
   private def ckptJsonlPath(v: Long) = new Path(logDir, s"ckpt-$v.jsonl")
   private def deltaPath(v: Long) = new Path(logDir, s"delta-$v.json")
-  /** Versioned full snapshot for TIME TRAVEL on inline-form tables with
-    * TBLPROPERTY timetravel='true' (see [[statusAt]]); checkpointed
-    * tables time-travel through ckpt + delta replay instead. */
-  private def vPath(v: Long) = new Path(logDir, s"v-$v.json")
 
   // cached: FileSystem.get walks the Hadoop FS cache (conf hash) on
   // every call — at 100k-file planning loops that lookup alone was a
@@ -339,8 +335,8 @@ class TableLayout(val tablePath: String, conf: Configuration) {
     * the immediately-previous COMPLETE snapshot (same as reading a
     * moment earlier). Commit paths use this under the table lock too
     * (see [[commit]]) — there the stamp match is exact, not racy.
-    * In the checkpointed form a warm miss (manifest moved forward)
-    * applies only the NEW delta tail to the cached snapshot. */
+    * A warm miss (manifest moved forward) applies only the NEW delta
+    * tail to the cached snapshot. */
   def readStatus(): TableStatus =
     if (fs.exists(statusPath))
       MetaCache.statusForIncr(root.toString, statusPath,
@@ -351,39 +347,38 @@ class TableLayout(val tablePath: String, conf: Configuration) {
     if (fs.exists(statusPath)) readStatusAssembled(None)
     else TableStatus(0L, Nil)
 
-  /** Parse the on-disk log and, for the checkpointed form, assemble the
-    * full segment list: checkpoint snapshot + delta tail. `prior` (a
-    * stamp-stale previous snapshot of this table, from [[MetaCache]])
-    * lets the warm path start from its own last assembly and parse only
-    * the deltas beyond it — guarded by the checkpoint's random id so a
-    * drop-and-recreate at the same path can never splice incarnations. */
+  /** Parse the manifest and assemble the full segment list: checkpoint
+    * snapshot + delta tail. `prior` (a stamp-stale previous snapshot of
+    * this table, from [[MetaCache]]) lets the warm path start from its
+    * own last assembly and parse only the deltas beyond it — guarded by
+    * the checkpoint's random id so a drop-and-recreate at the same path
+    * can never splice incarnations. A manifest with `ckptV < 0` is the
+    * single-file form older releases wrote: it carries the full list
+    * itself until its next commit converts it. */
   private def readStatusAssembled(prior: Option[TableStatus]): TableStatus = {
-    val probe = java.lang.Boolean.getBoolean("graft.meta.probe")
-    def ph[T](l: String)(b: => T): T =
-      if (!probe) b else {
-        val t0 = System.nanoTime(); val r = b
-        System.err.println(f"[asm-probe] $l: ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
-    val m = ph("manifest")(readJson(statusPath, classOf[TableStatus]))
+    val m = readJson(statusPath, classOf[TableStatus])
     if (m.ckptV < 0) m
     else {
       val base = prior match {
         case Some(p) if p.ckptId == m.ckptId && p.ckptV == m.ckptV &&
           p.version <= m.version => p
-        case _ =>
-          if (metaFs.exists(ckptJsonlPath(m.ckptV))) ph("ckpt-jsonl")(readCkptJsonl(m.ckptV))
-          else ph("ckpt-json")(readJson(ckptPath(m.ckptV), classOf[TableStatus]))
+        case _ => readCkpt(m.ckptV)
       }
       var segs = base.segments
       var v = base.version
       while (v < m.version) {
         v += 1
-        val d = ph(s"delta-$v read")(readJson(deltaPath(v), classOf[StatusDelta]))
-        segs = ph(s"delta-$v apply")(TableLayout.applyDelta(segs, d))
+        segs = TableLayout.applyDelta(segs, readJson(deltaPath(v), classOf[StatusDelta]))
       }
       m.copy(segments = segs)
     }
   }
+
+  /** The checkpoint snapshot at version `v` (JSONL, or an older
+    * release's whole-JSON form). */
+  private def readCkpt(v: Long): TableStatus =
+    if (metaFs.exists(ckptJsonlPath(v))) readCkptJsonl(v)
+    else readJson(ckptPath(v), classOf[TableStatus])
 
   /** JSONL checkpoint: header line = the TableStatus envelope (version,
     * empty segments), then one compact SegmentMeta per line. Same
@@ -443,17 +438,11 @@ class TableLayout(val tablePath: String, conf: Configuration) {
     // reader only for checkpoints too large for one array (>1.5 GB,
     // ~4M segments — far past the rollover sizing).
     val p = ckptJsonlPath(v)
-    val probe = java.lang.Boolean.getBoolean("graft.meta.probe")
-    def ph[T](l: String)(b: => T): T =
-      if (!probe) b else {
-        val t0 = System.nanoTime(); val r = b
-        System.err.println(f"[ckpt-probe] $l: ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
     val len = metaFs.getFileStatus(p).getLen
     if (len > (1L << 30) + (1L << 29)) return readCkptJsonlStreaming(p)
     val bytes = new Array[Byte](len.toInt)
     val in = metaFs.open(p)
-    try ph("readFully")(in.readFully(0L, bytes)) finally in.close()
+    try in.readFully(0L, bytes) finally in.close()
     // line offsets: (start, end) pairs of non-empty lines
     val starts = new java.util.ArrayList[Int](1 << 16)
     val ends = new java.util.ArrayList[Int](1 << 16)
@@ -466,13 +455,13 @@ class TableLayout(val tablePath: String, conf: Configuration) {
       i = j + 1
     }
     require(starts.size > 0, s"empty checkpoint $p")
-    try ph("parse") {
+    try {
       val header = MetaJson.tableStatusOf(new java.io.ByteArrayInputStream(
         bytes, starts.get(0), ends.get(0) - starts.get(0)))
       val bodyN = starts.size - 1
       val nThreads = TableLayout.metaPoolThreads
       val segs: IndexedSeq[SegmentMeta] =
-        if (bodyN < Integer.getInteger("graft.meta.serial.below", 20000) || nThreads == 1) {
+        if (bodyN < TableLayout.SerialParseBelow || nThreads == 1) {
           (1 to bodyN).map(k =>
             MetaJson.segmentMetaOf(bytes, starts.get(k), ends.get(k) - starts.get(k)))
         } else {
@@ -549,78 +538,65 @@ class TableLayout(val tablePath: String, conf: Configuration) {
       lines.view.slice(1, lines.size).map(l => reader.readValue[SegmentMeta](l)).toIndexedSeq)
   }
 
-  /** Whether this table opted into inline-form versioned snapshots
-    * (TBLPROPERTY timetravel='true'). One MetaCache-validated stat call
-    * per commit. */
-  private def timetravelEnabled: Boolean =
-    try readTableMeta().properties.get("timetravel").exists(_.equalsIgnoreCase("true"))
-    catch { case scala.util.control.NonFatal(_) => false }
-
   /** TIME TRAVEL: the table status exactly as of commit version `v`
     * (r17, beyond the reference — the Delta/Iceberg `VERSION AS OF`
-    * capability, built on this log's own retention):
-    *
-    *  - CHECKPOINTED tables replay the newest retained checkpoint at or
-    *    below `v` plus its delta tail — the horizon is
-    *    `[prevCkptV, version]` (one to two checkpoint generations,
-    *    sized by graft.status.checkpoint.every), with zero extra write
-    *    cost per commit.
-    *  - INLINE tables with timetravel='true' read the versioned
-    *    snapshot their commits staged; retention =
-    *    [[TableLayout.timetravelRetainVersions]] (CLEAN FILES reclaims
-    *    older ones).
-    *
-    * Versions past the horizon fail LOUDLY. Data files must also still
-    * exist: CLEAN FILES' clean_files_retention_ms bounds how far back
-    * retired segments remain physically readable — the effective
-    * horizon is min(log horizon, data retention), the same contract
-    * Delta's VACUUM imposes. */
+    * capability, built on this log's own retention): the newest
+    * checkpoint at or below `v` in the log directory plus its delta
+    * tail. Every table keeps at least its last
+    * [[TableLayout.timetravelRetainVersions]] versions until CLEAN
+    * FILES reclaims older log files; a version whose checkpoint or
+    * deltas are gone fails LOUDLY. Data files must also still exist:
+    * CLEAN FILES' clean_files_retention_ms bounds how far back retired
+    * segments remain physically readable — the effective horizon is
+    * min(log horizon, data retention), the same contract Delta's VACUUM
+    * imposes. */
   def statusAt(v: Long): TableStatus = {
     val cur = readStatus()
     if (v == cur.version) return cur
     require(v >= 0 && v <= cur.version,
       s"version $v out of range [0, ${cur.version}] for $tablePath")
-    if (cur.ckptV >= 0) {
-      val from =
-        if (v >= cur.ckptV) cur.ckptV
-        else if (cur.prevCkptV >= 0 && v >= cur.prevCkptV) cur.prevCkptV
-        else -1L
-      if (from >= 0) {
-        val base =
-          if (metaFs.exists(ckptJsonlPath(from))) readCkptJsonl(from)
-          else readJson(ckptPath(from), classOf[TableStatus])
-        var segs = base.segments
-        var ts = base.committedAt // ckpt header carries v=from's stamp
-        var i = from
-        while (i < v) {
-          i += 1
-          val d = readJson(deltaPath(i), classOf[StatusDelta])
-          segs = TableLayout.applyDelta(segs, d)
-          ts = d.committedAt
-        }
-        return cur.copy(version = v, segments = segs, committedAt = ts)
+    def aged = new IllegalStateException(
+      s"version $v has aged out of the time-travel horizon for $tablePath (the log " +
+        s"keeps the last ${TableLayout.timetravelRetainVersions} versions until CLEAN FILES)")
+    val from =
+      if (cur.ckptV >= 0 && v >= cur.ckptV) cur.ckptV
+      else logFiles().collect { case ("ckpt", n, _) if n <= v => n }
+        .maxOption.getOrElse(throw aged)
+    try {
+      val base = readCkpt(from)
+      var segs = base.segments
+      var ts = base.committedAt // ckpt header carries v=from's stamp
+      var i = from
+      while (i < v) {
+        i += 1
+        val d = readJson(deltaPath(i), classOf[StatusDelta])
+        segs = TableLayout.applyDelta(segs, d)
+        ts = d.committedAt
+      }
+      cur.copy(version = v, segments = segs, committedAt = ts)
+    } catch { case _: java.io.FileNotFoundException => throw aged }
+  }
+
+  /** (kind, version, file) of every `ckpt-<v>` and `delta-<v>` file in
+    * the log directory. */
+  private def logFiles(): Seq[(String, Long, org.apache.hadoop.fs.FileStatus)] =
+    if (!fs.exists(logDir)) Nil
+    else fs.listStatus(logDir).toSeq.flatMap { f =>
+      f.getPath.getName match {
+        case TableLayout.LogName(kind, n) => Some((kind, n.toLong, f))
+        case _ => None
       }
     }
-    if (metaFs.exists(vPath(v))) return readJson(vPath(v), classOf[TableStatus])
-    throw new IllegalStateException(
-      s"version $v has aged out of the time-travel horizon for $tablePath (" +
-        (if (cur.ckptV >= 0)
-          s"checkpointed log retains [${math.max(cur.prevCkptV, 0)}, ${cur.version}]"
-        else
-          "inline log retains versioned snapshots only with TBLPROPERTY " +
-            "timetravel='true', bounded by graft.timetravel.retain") + ")")
-  }
 
   /** Rewrite-provenance edges observable in the log over
     * `(a.version, b.version]` plus both endpoint snapshots:
     * `rewriteFp → rewriteOf` facts ([[SegmentMeta.rewriteOf]]) the
     * change-data feed composes segment identity through. Metadata-only
-    * — checkpointed logs read the O(range) delta tail (the same files
-    * a statusAt replay reads), inline logs read whatever versioned
-    * snapshots are retained. Intermediate versions matter for CHAINED
+    * — each intermediate version's delta, or its checkpoint when the
+    * commit wrote a snapshot. Intermediate versions matter for CHAINED
     * in-place rewrites (horizontal delta merge at v, delta fold at
     * v+1: the middle state's edge lives only in v's upsert); a missing
-    * intermediate (aged-out snapshot, checkpoint boundary) just drops
+    * intermediate (aged out of the log) just drops
     * that edge — the reader degrades to a conservative scan, never to
     * wrong rows. Ranges past `maxWalk` commits skip the intermediate
     * walk entirely for the same reason. */
@@ -633,16 +609,12 @@ class TableLayout(val tablePath: String, conf: Configuration) {
     collect(a.segments)
     collect(b.segments)
     if (b.version - a.version <= maxWalk) {
-      val cur = readStatus()
       var v = a.version + 1
       while (v < b.version) {
-        if (cur.ckptV >= 0) {
-          val p = deltaPath(v)
-          if (metaFs.exists(p)) collect(readJson(p, classOf[StatusDelta]).upserts)
-        } else {
-          val p = vPath(v)
-          if (metaFs.exists(p)) collect(readJson(p, classOf[TableStatus]).segments)
-        }
+        val p = deltaPath(v)
+        if (metaFs.exists(p)) collect(readJson(p, classOf[StatusDelta]).upserts)
+        else try collect(readCkpt(v).segments)
+        catch { case _: java.io.FileNotFoundException => }
         v += 1
       }
     }
@@ -715,162 +687,97 @@ class TableLayout(val tablePath: String, conf: Configuration) {
     * its version's commit by the staging delay). Driver-side listing
     * of the bounded log dir only. */
   def versionAtTimestamp(tsMillis: Long): Long = {
-    val cur = readStatus()
-    val cand = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val (sm, _) = statusStamp()
-    if (sm > 0 || cur.committedAt > 0)
-      cand += ((cur.version, if (cur.committedAt > 0) cur.committedAt else sm))
-    if (fs.exists(logDir)) {
-      // ckpt files cover the rare snapshot-form commits (transition /
-      // unreplayable) that write no delta at their own version
-      val Name = """(ckpt|delta|v)-(\d+)\.jsonl?""".r
-      fs.listStatus(logDir).foreach { f =>
-        f.getPath.getName match {
-          case Name(_, n) if n.toLong <= cur.version =>
-            cand += ((n.toLong,
-              readCommittedAtHeader(f).getOrElse(f.getModificationTime)))
-          case _ =>
-        }
-      }
-    }
+    val cand = retainedVersions()
     val ok = cand.filter(_._2 <= tsMillis)
     require(ok.nonEmpty,
       s"no retained version of $tablePath is as old as $tsMillis " +
-        s"(earliest retained commit stamp: ${if (cand.isEmpty) "none" else cand.map(_._2).min.toString})")
+        s"(earliest retained commit stamp: ${cand.map(_._2).min})")
     ok.map(_._1).max
   }
 
   /** Retained time-travel coordinates for SHOW VERSIONS: (version,
     * commit stamp millis, source), newest first — "current" (the
-    * manifest), "delta"/"snapshot" (checkpointed-log replay points),
-    * "v" (inline versioned snapshots). Driver-side listing of the
-    * bounded log dir; each version appears once. */
+    * manifest), then every version [[statusAt]] can replay: "snapshot"
+    * (a checkpoint at that version) or "delta" (the previous version's
+    * state plus its delta). Driver-side listing of the bounded log dir;
+    * each version appears once. */
   def retainedVersions(): Seq[(Long, Long, String)] = {
     val cur = readStatus()
-    val out = scala.collection.mutable.LinkedHashMap.empty[Long, (Long, String)]
     val (sm, _) = statusStamp()
-    out(cur.version) = (if (cur.committedAt > 0) cur.committedAt else sm, "current")
-    if (fs.exists(logDir)) {
-      val Name = """(ckpt|delta|v)-(\d+)\.jsonl?""".r
-      val floor = if (cur.ckptV >= 0) math.max(cur.prevCkptV, 0L) else 0L
-      fs.listStatus(logDir).foreach { f =>
-        f.getPath.getName match {
-          case Name(kind, n0) =>
-            val n = n0.toLong
-            val reachable =
-              if (kind == "v") n <= cur.version
-              else cur.ckptV >= 0 && n >= floor && n <= cur.version
-            if (reachable && !out.contains(n))
-              out(n) = (readCommittedAtHeader(f)
-                  .getOrElse(f.getModificationTime),
-                if (kind == "ckpt") "snapshot" else kind)
-          case _ =>
-        }
+    val byVersion = logFiles().filter(_._2 < cur.version).groupBy(_._2)
+    val reachable = scala.collection.mutable.Set.empty[Long]
+    val past = byVersion.keys.toSeq.sorted.flatMap { n =>
+      val ckpt = byVersion(n).find(_._1 == "ckpt")
+      if (ckpt.isEmpty && !reachable(n - 1)) None
+      else {
+        reachable += n
+        val f = ckpt.getOrElse(byVersion(n).head)._3
+        Some((n, readCommittedAtHeader(f).getOrElse(f.getModificationTime),
+          if (ckpt.isDefined) "snapshot" else "delta"))
       }
     }
-    out.toSeq.map { case (v, (ts, k)) => (v, ts, k) }.sortBy(-_._1)
+    ((cur.version, if (cur.committedAt > 0) cur.committedAt else sm, "current") +:
+      past.reverse)
   }
 
-  /** Stage a full snapshot of `full` at log version `v` — JSONL past
-    * [[TableLayout.ckptJsonlMinSegments]] (parallel cold read), plain
-    * JSON below. The OTHER format's sibling at this version is deleted
-    * before the manifest publish: version numbers can repeat across a
-    * crashed commit and its successor (both allocate base.version+1),
-    * and a table that crossed the size threshold in between would
-    * otherwise leave a stale other-format orphan that the reader's
-    * format probe could prefer over the real snapshot — a data
-    * resurrection. The delete makes the collision structurally
-    * impossible. (delete failures PROPAGATE: publishing over a live
-    * stale sibling is the one outcome worse than a failed commit) */
-  private def writeSnapshotFiles(v: Long, full: TableStatus): Unit = {
-    if (full.segments.size >= TableLayout.ckptJsonlMinSegments) {
-      writeCkptJsonl(ckptJsonlPath(v), full)
-      metaFs.delete(ckptPath(v), false)
-    } else {
-      writeJsonAtomic(ckptPath(v),
-        full.copy(ckptV = -1L, prevCkptV = -1L, ckptId = ""))
-      metaFs.delete(ckptJsonlPath(v), false)
-    }
-    // same version-collision discipline for a time-travel v-file: a
-    // commit that crashed at this version in the INLINE era may have
-    // left one; statusAt must never serve it for a version this
-    // checkpoint now owns
-    metaFs.delete(vPath(v), false)
-    graft.engine.Failpoints.hit("meta.checkpointWritten", tablePath)
-  }
-
-  /** Write one commit's result. INLINE tables rewrite the whole file
-    * (historical behavior, cheapest while small). Past
-    * [[TableLayout.inlineMaxSegments]] the log is CHECKPOINTED: the
-    * commit writes one O(changed-segments) delta file (plus the KB
-    * manifest rename) — a full snapshot is written UNDER THE LOCK only
-    * at the inline→checkpoint transition (no delta base exists yet) or
-    * for the rare change the delta form cannot replay faithfully
-    * (reorder). Periodic checkpoint ROLLOVER happens OUTSIDE the lock
-    * (r17, VERDICT r16 #2 — the every-64th-commit O(table) serialize
-    * was a multi-second writer stall at 1M segments): see
+  /** Write one commit's result: one O(changed-segments) delta file plus
+    * the KB manifest rename. A full snapshot is written UNDER THE LOCK
+    * when no delta base exists — a table's first commit, or the first
+    * commit on a single-file log an older release wrote — for a change
+    * the delta form cannot replay faithfully (reorder), and for a change
+    * that adds or rewrites more than about a quarter of the segments.
+    * Periodic checkpoint ROLLOVER happens OUTSIDE the lock (r17,
+    * VERDICT r16 #2 — the every-64th-commit O(table) serialize was a
+    * multi-second writer stall at 1M segments): see
     * [[rolloverCheckpoint]]. Returns the canonical assembled value and
     * whether the caller should roll a checkpoint after releasing the
     * lock. */
   private def publishStatus(
       next0: TableStatus, base: TableStatus): (TableStatus, Boolean) = {
-    // Commit wall-clock, persisted in every log form this publish
+    // Commit wall-clock, persisted in every log file this publish
     // writes (r18, advisor r17): TIMESTAMP AS OF must survive a table
     // whose file mtimes were rewritten by copy/backup tooling.
     val next = next0.copy(committedAt = System.currentTimeMillis())
-    var rollAfter = false
-    val canonical: TableStatus =
-      if (base.ckptV < 0 && next.segments.size <= TableLayout.inlineMaxSegments) {
-        val c = next.copy(ckptV = -1L, prevCkptV = -1L, ckptId = "")
-        // TIME TRAVEL (opt-in): inline commits rewrite the whole log,
-        // so old versions vanish — tables with timetravel='true' stage
-        // a versioned snapshot BEFORE the manifest rename (a crashed
-        // commit's orphan is overwritten by its successor at the same
-        // version, the same contract every delta rides). Checkpointed
-        // tables skip this: ckpt + delta replay already retains the
-        // horizon at O(changed) cost per commit.
-        if (timetravelEnabled) {
-          fs.mkdirs(logDir)
-          writeJsonAtomic(vPath(next.version), c)
-        }
-        c
-      } else {
+    // an OVERSIZED delta (bulk ingest, a rewrite of most segments —
+    // upserts of more than ~a quarter of the table) is written as a
+    // full snapshot instead: the snapshot costs at most ~4x the delta
+    // it replaces, and a table-sized delta would otherwise sit beside a
+    // table-sized checkpoint and be re-parsed single-threaded by every
+    // cold assembly until the next rollover. Removes are bare ids, so a
+    // mass clean stays a small delta and never serializes the table
+    // under the lock.
+    val delta =
+      if (base.ckptV < 0) None // no delta base exists yet
+      else TableLayout.computeDelta(base.segments, next.segments, next.version)
+        .filter(_.upserts.size.toLong * 4L < next.segments.size.toLong + 4L)
+    val canonical = delta match {
+      case Some(d0) =>
+        // version numbers repeat across a crashed commit and its
+        // successor (both allocate base.version+1): a snapshot a crashed
+        // commit left at this version must not outlive this delta, or
+        // statusAt — which replays from the newest checkpoint it lists —
+        // would serve it. (delete failures PROPAGATE: publishing over a
+        // live stale checkpoint is worse than a failed commit)
+        metaFs.delete(ckptJsonlPath(next.version), false)
+        metaFs.delete(ckptPath(next.version), false)
+        val d = d0.copy(committedAt = next.committedAt)
+        writeJsonAtomic(deltaPath(next.version), d)
+        graft.engine.Failpoints.hit("meta.deltaWritten", tablePath)
+        next.copy(ckptV = base.ckptV, prevCkptV = base.prevCkptV, ckptId = base.ckptId)
+      case None =>
         fs.mkdirs(logDir)
-        val delta =
-          if (base.ckptV < 0) None // transition: no delta base exists yet
-          else TableLayout.computeDelta(base.segments, next.segments, next.version)
-        delta match {
-          case Some(d0) =>
-            val d = d0.copy(committedAt = next.committedAt)
-            writeJsonAtomic(deltaPath(next.version), d)
-            graft.engine.Failpoints.hit("meta.deltaWritten", tablePath)
-            // roll a fresh checkpoint (outside the lock) when the tail
-            // is due, or when this delta is OVERSIZED (bulk ingest,
-            // mass clean — more than ~a quarter of the table): left
-            // alone, one bulk commit plants a table-sized delta every
-            // cold assembly re-parses single-threaded until the next
-            // scheduled rollover
-            rollAfter =
-              (next.version - base.ckptV) >= TableLayout.checkpointEvery ||
-                (d.upserts.size + d.removes.size).toLong * 4L >=
-                  next.segments.size.toLong + 4L
-            next.copy(ckptV = base.ckptV, prevCkptV = base.prevCkptV,
-              ckptId = base.ckptId)
-          case None =>
-            // full snapshot under the lock: transition or unreplayable
-            writeSnapshotFiles(next.version, next)
-            next.copy(ckptV = next.version, prevCkptV = base.ckptV,
-              ckptId = UUID.randomUUID().toString.take(12))
-        }
-      }
-    val diskForm =
-      if (canonical.ckptV < 0) canonical else canonical.copy(segments = Nil)
-    writeJsonAtomic(statusPath, diskForm, pad = (next.version % 37).toInt)
+        writeCkptJsonl(ckptJsonlPath(next.version), next)
+        graft.engine.Failpoints.hit("meta.checkpointWritten", tablePath)
+        next.copy(ckptV = next.version, prevCkptV = base.ckptV,
+          ckptId = UUID.randomUUID().toString.take(12))
+    }
+    writeJsonAtomic(statusPath, canonical.copy(segments = Nil), pad = (next.version % 37).toInt)
     // write-through: the committer's JVM serves its own commit
     // immediately, regardless of filesystem timestamp granularity
     try MetaCache.putStatus(root.toString, fs.getFileStatus(statusPath), canonical)
     catch { case scala.util.control.NonFatal(_) => MetaCache.drop(Some(root.toString)) }
-    (canonical, rollAfter)
+    // roll a fresh checkpoint (outside the lock) when the tail is due
+    (canonical, canonical.version - canonical.ckptV >= TableLayout.checkpointEvery)
   }
 
   /** Roll a fresh checkpoint WITHOUT holding the table lock across the
@@ -904,23 +811,16 @@ class TableLayout(val tablePath: String, conf: Configuration) {
     // rollover's staging, and the stale branch deletes only the file
     // THIS rollover wrote. The `.tmp-` infix keeps a crashed staging
     // inside the log GC's existing orphan sweep.
-    val jsonl = canonical.segments.size >= TableLayout.ckptJsonlMinSegments
-    val finalPath = if (jsonl) ckptJsonlPath(v) else ckptPath(v)
+    val finalPath = ckptJsonlPath(v)
     val staged = new Path(finalPath.getParent,
       s".${finalPath.getName}.tmp-roll-${UUID.randomUUID().toString.take(8)}")
-    if (jsonl) writeCkptJsonl(staged, canonical)
-    else writeJsonAtomic(staged,
-      canonical.copy(ckptV = -1L, prevCkptV = -1L, ckptId = ""))
+    writeCkptJsonl(staged, canonical)
     withLock {
       val cur = commitBaseStatus()
       if (cur.ckptV >= 0 && cur.ckptId == canonical.ckptId &&
           cur.ckptV < v && v <= cur.version) {
-        // flip the staged snapshot live: sibling-format and inline-era
-        // orphans at v die first (the collision discipline
-        // writeSnapshotFiles documents), then one atomic rename + the
-        // KB manifest write — all ms-scale metadata ops under the lock
-        metaFs.delete(if (jsonl) ckptPath(v) else ckptJsonlPath(v), false)
-        metaFs.delete(vPath(v), false)
+        // flip the staged snapshot live: one atomic rename + the KB
+        // manifest write — ms-scale metadata ops under the lock
         metaFs.delete(finalPath, false)
         require(metaFs.rename(staged, finalPath),
           s"checkpoint rollover rename $staged -> $finalPath failed")
@@ -984,8 +884,8 @@ class TableLayout(val tablePath: String, conf: Configuration) {
       val (next0, hist) = update(base)
       // No-change commits don't publish (r16): an idle maintenance loop
       // (CLEAN FILES with nothing to reclaim, a no-op compaction check)
-      // must not churn the manifest — and in the checkpointed form each
-      // churn would be a new delta file. The comparison rides the
+      // must not churn the manifest — each churn would be a new delta
+      // file. The comparison rides the
       // case-class `eq` fast path on untouched entries.
       val canonical =
         if ((next0 eq base) || next0 == base) base
@@ -1210,6 +1110,9 @@ object TableLayout {
     * it they write compact — indentation on a 100k-segment commit log
     * doubles bytes and cold-parse time for zero information. */
   val PrettyMaxBytes: Int = 4 * 1024 * 1024
+  /** Checkpoints with fewer entries than this parse on the calling
+    * thread; the pool hand-off costs more than it saves below it. */
+  private val SerialParseBelow = 20000
 
   /** Lock-file staleness horizon for crashed-holder takeover. Commits
     * hold the lock for milliseconds, so 5 minutes is ~10^4 margin;
@@ -1292,31 +1195,20 @@ object TableLayout {
   private[engine] val committedAtCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
 
-  /** Segment count past which the commit log switches from the inline
-    * full-rewrite form to checkpoint + delta files (~4.5 MB of JSON at
-    * the default — below it a single-file rewrite is both cheaper and
-    * simpler to reason about). Read per commit so tests can exercise
-    * the checkpointed machinery on small tables. */
-  def inlineMaxSegments: Int =
-    Integer.getInteger("graft.status.inline.max", 10000)
-  /** Commits between full snapshots in the checkpointed form — the
-    * bound on a cold read's delta tail. */
+  /** Checkpoint (`ckpt-<v>.jsonl`, or an older release's `.json`) and
+    * delta (`delta-<v>.json`) file names in the log directory. */
+  private[engine] val LogName = """(ckpt|delta)-(\d+)\.jsonl?""".r
+  /** Commits between full snapshots — the bound on a cold read's delta
+    * tail. */
   def checkpointEvery: Int =
     Integer.getInteger("graft.status.checkpoint.every", 64)
-  /** Segment count from which checkpoint snapshots write as JSONL so a
-    * cold read can parse on all cores (see writeCkptJsonl). */
-  def ckptJsonlMinSegments: Int =
-    Integer.getInteger("graft.status.ckpt.jsonl.min", 100000)
   /** History-ledger rotation threshold: the hot file rotates to its
     * single `.1` predecessor past this size, bounding SHOW HISTORY
     * SEGMENTS reads (and disk) at ~2x this value. */
   def historyMaxBytes: Long =
     java.lang.Long.getLong("graft.history.max.bytes", 64L * 1024 * 1024)
-  /** Inline-form time-travel retention: versioned snapshots older than
-    * this many versions behind the current one are CLEAN FILES fodder.
-    * Disk bound ≈ retain x inline log size (an inline log is ≤ ~4.5 MB
-    * by construction — past that the table is checkpointed and
-    * time-travels through ckpt+delta replay instead). */
+  /** Time-travel horizon: CLEAN FILES keeps the log files that replay
+    * at least the last this-many versions (see [[statusAt]]). */
   def timetravelRetainVersions: Long =
     java.lang.Long.getLong("graft.timetravel.retain", 128L)
 

@@ -25,6 +25,17 @@ object LifecycleQueries {
     s"${Fixtures.root}/${new java.io.File(sfDir).getName}/$name"
   private def layoutOf(s: SparkSession, p: String) =
     new graft.engine.format.TableLayout(p, s.sessionState.newHadoopConf())
+  /** Versions a fixture recorded in its mark file (comma-separated). */
+  private def marked(mark: java.io.File): Seq[Long] =
+    new String(java.nio.file.Files.readAllBytes(mark.toPath)).trim.split(",").map(_.toLong).toSeq
+  /** Whether a kept fixture still serves its query: the table has
+    * visible rows and every version its mark file records still
+    * replays (a fixture whose versions aged out of the log is rebuilt). */
+  private def servesAsOf(l: graft.engine.format.TableLayout, mark: java.io.File): Boolean =
+    l.exists && mark.exists() && {
+      try { marked(mark).foreach(l.statusAt); l.readStatus().visible.nonEmpty }
+      catch { case scala.util.control.NonFatal(_) => false }
+    }
 
   /** customer ingested via LOAD DATA CSV (header, FORCE bad-record
     * action — the reference default): exercises the CSV parse → sorted
@@ -407,8 +418,8 @@ object LifecycleQueries {
 
   /** TIME-TRAVEL lifecycle (r17, beyond the reference — Delta/Iceberg
     * `VERSION AS OF` over this engine's own commit log): orders loaded
-    * whole with timetravel='true', the as-of version captured, then a
-    * third of the rows DELETED copy-on-write. The query reads the
+    * whole, the as-of version captured, then a third of the rows
+    * DELETED copy-on-write. The query reads the
     * PRE-DELETE version back out of the versioned log — the oracle is
     * the FULL orders table, so a green row proves the as-of read
     * resurrects the retired segments exactly (reading the current
@@ -417,18 +428,11 @@ object LifecycleQueries {
     val p = path(d, "lc_timetravel")
     val vMark = new java.io.File(s"${p}_v1.txt")
     val l = layoutOf(s, p)
-    val ok = l.exists && vMark.exists() && {
-      try l.readStatus().visible.nonEmpty
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
-    if (ok)
-      (GraftTable.at(s, p),
-        new String(java.nio.file.Files.readAllBytes(vMark.toPath)).trim.toLong)
+    if (servesAsOf(l, vMark)) (GraftTable.at(s, p), marked(vMark).head)
     else {
       if (l.exists) GraftTable.drop(s, p)
       val src = t(s, d, "orders")
-      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"),
-        properties = Map("timetravel" -> "true"))
+      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"))
       tbl.insert(src)
       val v1 = tbl.status.version
       // the current state diverges: CoW delete retires the loaded
@@ -440,10 +444,10 @@ object LifecycleQueries {
   }
 
   /** SHALLOW CLONE AS OF lifecycle (r18, beyond the reference —
-    * Delta's CLONE capability): orders loaded whole with
-    * timetravel='true', a third CoW-deleted (the mis-step), then the
-    * PRE-delete version shallow-cloned aside — ONE metadata commit,
-    * zero data movement (the clone's segments reference the source's
+    * Delta's CLONE capability): orders loaded whole, a third
+    * CoW-deleted (the mis-step), then the PRE-delete version
+    * shallow-cloned aside — ONE metadata commit, zero data movement
+    * (the clone's segments reference the source's
     * files in place as externals). The query reads the CLONE; the
     * oracle is the FULL orders table, so a green row proves the clone
     * pins the as-of version's files exactly while the live table stays
@@ -461,8 +465,7 @@ object LifecycleQueries {
       if (layoutOf(s, p).exists) GraftTable.drop(s, p)
       if (lc.exists) GraftTable.drop(s, cp)
       val src = t(s, d, "orders")
-      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"),
-        properties = Map("timetravel" -> "true"))
+      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"))
       tbl.insert(src)
       val v1 = tbl.status.version
       graft.engine.Mutation.delete(tbl, col("o_orderkey") % 3 === 2)
@@ -499,7 +502,7 @@ object LifecycleQueries {
   }
 
   /** DEEP CLONE surviving a source vacuum (r19, VERDICT r18 Next #6):
-    * orders with timetravel, a third CoW-deleted (the mis-step), the
+    * orders, a third CoW-deleted (the mis-step), the
     * PRE-delete version DEEP-cloned via the SQL surface (full copy —
     * the clone owns every byte), then the SOURCE aged and CLEAN FILES
     * run so the pre-delete files a SHALLOW clone would still reference
@@ -522,8 +525,7 @@ object LifecycleQueries {
       if (lc.exists) GraftTable.drop(s, cp)
       if (mark.exists()) mark.delete()
       val src = t(s, d, "orders")
-      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"),
-        properties = Map("timetravel" -> "true"))
+      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"))
       tbl.insert(src)
       val v1 = tbl.status.version
       graft.engine.Mutation.delete(tbl, col("o_orderkey") % 3 === 2)
@@ -543,8 +545,8 @@ object LifecycleQueries {
   }
 
   /** CHANGE DATA FEED (r19, beyond the reference — Delta's
-    * table_changes without stored change files): orders with
-    * timetravel, loaded whole (v1), a third CoW-deleted, then a
+    * table_changes without stored change files): orders loaded
+    * whole (v1), a third CoW-deleted, then a
     * doubled-price batch of the mod-10==5 rows re-inserted (v3). The
     * query reads `readChanges(v1, v3)` — net multiset diff computed
     * from the commit log with the scan pruned to CHURNED segments —
@@ -558,20 +560,14 @@ object LifecycleQueries {
     val p = path(d, "lc_cdf")
     val mark = new java.io.File(s"${p}_v.txt")
     val l = layoutOf(s, p)
-    val ok = l.exists && mark.exists() && {
-      try l.readStatus().visible.nonEmpty
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
-    if (ok) {
-      val vs = new String(java.nio.file.Files.readAllBytes(mark.toPath))
-        .trim.split(",").map(_.toLong)
+    if (servesAsOf(l, mark)) {
+      val vs = marked(mark)
       (GraftTable.at(s, p), vs(0), vs(1))
     } else {
       if (l.exists) GraftTable.drop(s, p)
       if (mark.exists()) mark.delete()
       val src = t(s, d, "orders")
-      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"),
-        properties = Map("timetravel" -> "true"))
+      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"))
       tbl.insert(src)
       val v1 = tbl.status.version
       graft.engine.Mutation.delete(tbl, col("o_orderkey") % 3 === 2)
@@ -585,8 +581,8 @@ object LifecycleQueries {
 
   /** MIXED-FORMAT TIME TRAVEL (r18, VERDICT r17 #7): supplier split
     * across a managed parquet segment plus ADD SEGMENT csv and json
-    * foreigns (the [[supplierMixed]] shape) with timetravel='true',
-    * the as-of version captured, then the CSV FOREIGN segment retired
+    * foreigns (the [[supplierMixed]] shape), the as-of version
+    * captured, then the CSV FOREIGN segment retired
     * (the mis-step). The query reads the pre-retire version — the
     * oracle is the FULL supplier table, so a green row proves the
     * as-of read resurrects a foreign-format segment through the same
@@ -596,19 +592,12 @@ object LifecycleQueries {
     val p = path(d, "lc_ttmixed")
     val vMark = new java.io.File(s"${p}_v1.txt")
     val l = layoutOf(s, p)
-    val ok = l.exists && vMark.exists() && {
-      try l.readStatus().visible.nonEmpty
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
-    if (ok)
-      (GraftTable.at(s, p),
-        new String(java.nio.file.Files.readAllBytes(vMark.toPath)).trim.toLong)
+    if (servesAsOf(l, vMark)) (GraftTable.at(s, p), marked(vMark).head)
     else {
       if (l.exists) GraftTable.drop(s, p)
       val src = t(s, d, "supplier")
       val tbl = GraftTable.createAsSelect(s, p,
-        src.filter(col("s_suppkey") % 3 === 0), Seq("s_suppkey"),
-        properties = Map("timetravel" -> "true"))
+        src.filter(col("s_suppkey") % 3 === 0), Seq("s_suppkey"))
       val csvDir = s"${p}_csv"
       src.filter(col("s_suppkey") % 3 === 1).coalesce(1)
         .write.mode("overwrite").option("header", "true").csv(csvDir)
@@ -638,8 +627,7 @@ object LifecycleQueries {
     else {
       if (l.exists) GraftTable.drop(s, p)
       val src = t(s, d, "orders")
-      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"),
-        properties = Map("timetravel" -> "true"))
+      val tbl = GraftTable.create(s, p, src.schema, Seq("o_orderkey"))
       tbl.insert(src)
       val vGood = tbl.status.version
       graft.engine.Mutation.delete(tbl, col("o_orderkey") % 3 === 1)

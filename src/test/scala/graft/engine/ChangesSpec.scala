@@ -274,13 +274,14 @@ class ChangesSpec extends AnyFunSuite {
     assert(t.compact("MAJOR").nonEmpty)
     val v2 = t.status.version
     // simulate a pre-r20 log: strip the provenance fields from every
-    // entry (one more commit) and drop the intermediate snapshot the
-    // edge walk would read
+    // entry (one more commit) and drop the intermediate log file the
+    // edge walk would read (a delta, or the checkpoint a compaction of
+    // most of the table writes instead)
     t.layout.commit(st => st.copy(segments =
       st.segments.map(_.copy(rewriteOf = Nil, rewriteFp = ""))))
     val v3 = t.status.version
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$dir/_meta/log/v-$v2.json"))
+    Seq(s"delta-$v2.json", s"ckpt-$v2.jsonl").foreach(f =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/_meta/log/$f")))
     val diff = t.readChanges(v1, v3)
     assert(diff.count() == 0, "compaction still nets to zero rows")
     assert(plannedFiles(diff).nonEmpty,

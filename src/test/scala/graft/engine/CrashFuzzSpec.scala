@@ -295,16 +295,26 @@ class CrashFuzzSpec extends AnyFunSuite {
   }
 
   test("kill during checkpointed-log commits: checkpoint / delta written, manifest pending") {
-    // shrink the inline threshold so a 3-segment table exercises the
-    // checkpointed machinery (suites run sequentially in this JVM, so
-    // the property window is race-free; semantics are identical in
-    // either form by design)
-    System.setProperty("graft.status.inline.max", "2")
+    // a short checkpoint interval so a 3-segment table rolls (suites
+    // run sequentially in this JVM, so the property window is
+    // race-free)
     System.setProperty("graft.status.checkpoint.every", "4")
     try {
-      // transition commit: crossing the threshold writes the FIRST full
-      // snapshot; a kill between it and the manifest rename must leave
-      // the inline log authoritative and the orphan snapshot reclaimable
+      // a fresh table's first commit writes the FIRST full snapshot
+      // under the lock; a kill between it and the manifest rename must
+      // leave the empty table authoritative and the orphan snapshot
+      // reclaimable
+      val t0 = GraftTable.create(spark, tmpRoot().resolve("t0").toString,
+        spark.range(0, 1).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v").schema,
+        sortColumns = Seq("k"), properties = tblProps)
+      val snap0 = killAt("meta.checkpointWritten", t0) {
+        t0.insert(spark.range(0, 100).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v"))
+      }
+      assertRecovers(snap0, allowedCounts = Set(0L))
+
+      // a commit that rolls the checkpoint (the fifth since the first
+      // snapshot): a kill between the staged snapshot and the manifest
+      // flip must leave the commit it follows durable
       val t = freshTable(tmpRoot().resolve("t").toString)
       val snap = killAt("meta.checkpointWritten", t) {
         t.insert(spark.range(5000, 5100)
@@ -312,12 +322,12 @@ class CrashFuzzSpec extends AnyFunSuite {
       }
       assertRecovers(snap, allowedCounts = Set(3000L))
 
-      // steady-state delta commit: the table is checkpointed; a kill
-      // between the delta write and the manifest rename must keep the
-      // old manifest serving and let the retry overwrite the orphan
+      // steady-state delta commit: a kill between the delta write and
+      // the manifest rename must keep the old manifest serving and let
+      // the retry overwrite the orphan
       val t2 = freshTable(tmpRoot().resolve("t2").toString)
       t2.insert(spark.range(5000, 5100)
-        .selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")) // → checkpointed
+        .selectExpr("id AS k", "CAST(id AS DOUBLE) AS v"))
       assert(t2.layout.readStatus().ckptV >= 0, "fixture must be checkpointed")
       val snap2 = killAt("meta.deltaWritten", t2) {
         t2.insert(spark.range(6000, 6100)
@@ -357,10 +367,7 @@ class CrashFuzzSpec extends AnyFunSuite {
       // ckpt-v with the manifest flip pending; pre-op and post-op counts
       // are both legal, an orphan snapshot never is (post-grace clean)
       assertRecovers(snapR, allowedCounts = Set(preN, preN + 50L))
-    } finally {
-      System.clearProperty("graft.status.inline.max")
-      System.clearProperty("graft.status.checkpoint.every")
-    }
+    } finally System.clearProperty("graft.status.checkpoint.every")
   }
 
   test("kill during streaming append and handoff; replay does not brick") {

@@ -8,12 +8,10 @@ import java.nio.file.Files
   * beyond the reference; the Delta/Iceberg `VERSION AS OF` capability
   * built on this engine's own commit-log retention).
   *
-  * Two retention paths, both spec'd here:
-  *  - INLINE tables with TBLPROPERTY timetravel='true' stage a
-  *    versioned snapshot per commit; retention is
-  *    graft.timetravel.retain versions, reclaimed by CLEAN FILES.
-  *  - CHECKPOINTED tables replay ckpt + delta tail — horizon
-  *    [prevCkptV, version], zero extra write cost.
+  * Every table commits checkpoint + delta, so every table time-travels
+  * with no opt-in: a version replays from the newest checkpoint at or
+  * below it plus its delta tail, and CLEAN FILES keeps at least the
+  * last graft.timetravel.retain versions replayable.
   *
   * Contracts: an as-of read is byte-identical to what a reader saw at
   * that version (copy-on-write rewrites resurrect the retired inputs;
@@ -55,15 +53,14 @@ class TimeTravelSpec extends AnyFunSuite {
   }
 
   test("checkpointed table: ckpt+delta replay serves the horizon, MoR deltas as-of, loud past it") {
-    System.setProperty("graft.status.inline.max", "0")
     System.setProperty("graft.status.checkpoint.every", "6")
     try {
       val dir = Files.createTempDirectory("graft_ttc_").toString + "/t"
       val a = spark.range(0, 600).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
       val t = GraftTable.create(spark, dir, a.schema, sortColumns = Seq("k"),
         properties = Map("iud_mode" -> "mor", "global_sort_partitions" -> "1"))
-      t.insert(a) // crosses the inline threshold → checkpointed
-      assert(t.status.ckptV >= 0, "fixture must be checkpointed")
+      t.insert(a)
+      assert(t.status.ckptV >= 0, "every table commits checkpoint + delta")
       val v1 = t.status.version
       // a MoR delete adds a delta to the SAME segment: the as-of read
       // must serve the segment WITHOUT the later delta
@@ -73,35 +70,156 @@ class TimeTravelSpec extends AnyFunSuite {
       assert(t.readAsOf(v1).count() == 600L, "pre-MoR-delete rows must be visible as-of")
       assert(t.readAsOf(v2).count() == 550L)
 
-      // push the horizon: enough commits to roll the checkpoint twice —
-      // versions below prevCkptV age out and must fail LOUDLY
+      // roll the checkpoint twice: versions below prevCkptV still replay
+      // from the older checkpoints left in the log directory
       (0 until 14).foreach(i => t.insert(
         spark.range(1000L + i * 10, 1000L + i * 10 + 10)
           .selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")))
       val st = t.status
       assert(st.prevCkptV > v1,
         s"fixture must have rolled past v1 (prevCkptV=${st.prevCkptV}, v1=$v1)")
+      assert(t.readAsOf(v1).count() == 600L)
+      assert(t.readAsOf(v2).count() == 550L)
+
+      // once CLEAN FILES sweeps the log past the retention horizon, v1
+      // fails LOUDLY; versions inside [prevCkptV, version] still replay
+      System.setProperty("graft.timetravel.retain", "4")
+      val old = java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 2 * 3600 * 1000)
+      java.nio.file.Files.list(java.nio.file.Paths.get(dir, "_meta", "log"))
+        .forEach(p => java.nio.file.Files.setLastModifiedTime(p, old))
+      t.cleanFiles()
       val e = intercept[IllegalStateException] { t.readAsOf(v1) }
       assert(e.getMessage.contains("horizon"))
-      // versions inside [prevCkptV, version] still replay exactly
       assert(t.readAsOf(st.prevCkptV).count() >= 550L)
       GraftTable.drop(spark, dir)
     } finally {
-      System.clearProperty("graft.status.inline.max")
       System.clearProperty("graft.status.checkpoint.every")
+      System.clearProperty("graft.timetravel.retain")
     }
   }
 
-  test("inline table WITHOUT the property: only the current version is reachable") {
-    val dir = Files.createTempDirectory("graft_ttoff_").toString + "/t"
-    val a = spark.range(0, 100).selectExpr("id AS k")
-    val t = GraftTable.create(spark, dir, a.schema)
-    t.insert(a)
+  test("a table created with no properties time-travels and feeds changes: every version, TIMESTAMP AS OF, readChanges, TABLE_CHANGES, SHOW VERSIONS") {
+    val dir = Files.createTempDirectory("graft_ttplain_").toString + "/t"
+    val t = GraftTable.create(spark, dir, spark.range(0, 1).selectExpr("id AS k").schema)
+    // final version of each operation -> the rows it leaves; a version
+    // between two operations' final commits (a reserve commit) serves
+    // the earlier state
+    val states = scala.collection.mutable.LinkedHashMap[Long, Seq[Long]](0L -> Nil)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.collect().map(_.getLong(0)).toSeq.sorted
+    t.insert(spark.range(0, 100).selectExpr("id AS k"))
     val v1 = t.status.version
+    states(v1) = 0L until 100L
+    Thread.sleep(20)
+    val ts1 = System.currentTimeMillis()
+    Thread.sleep(20)
     t.insert(spark.range(100, 150).selectExpr("id AS k"))
-    assert(t.readAsOf(t.status.version).count() == 150L)
-    intercept[IllegalStateException] { t.readAsOf(v1) }
+    states(t.status.version) = 0L until 150L
+    assert(Mutation.delete(t, col("k") < 10L) == 10L)
+    val v3 = t.status.version
+    states(v3) = 10L until 150L
+
+    (1L to v3).foreach { v =>
+      val want = states(states.keys.filter(_ <= v).max)
+      assert(rows(t.readAsOf(v)) == want, s"AS OF $v")
+    }
+    assert(rows(t.readAsOfTimestamp(ts1)) == states(v1))
+    val feed = t.readChanges(v1, v3).select("_change_type", "k").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    assert(feed == ((100L until 150L).map(k => ("insert", k)) ++
+      (0L until 10L).map(k => ("delete", k))).sorted)
+    val sqlFeed = spark.sql(s"SELECT _change_type, k FROM TABLE_CHANGES('$dir', $v1, $v3)")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    assert(sqlFeed == feed)
+    val versions = spark.sql(s"SHOW VERSIONS FOR TABLE $dir").collect().map(_.getLong(0)).toSeq
+    assert(versions == (v3 to 1L by -1L), s"every commit listed, got $versions")
     GraftTable.drop(spark, dir)
+  }
+
+  test("six-segment table, three copy-on-write UPDATEs that each roll a checkpoint: AS OF every version equals the per-version model") {
+    val dir = Files.createTempDirectory("graft_ttroll_").toString + "/t"
+    val t = GraftTable.create(spark, dir,
+      spark.range(0, 1).selectExpr("id AS k", "0L AS v").schema)
+    val states = scala.collection.mutable.LinkedHashMap[Long, Seq[(Long, Long)]](0L -> Nil)
+    var model = Seq.empty[(Long, Long)]
+    var nextK = 0L
+    // tops the table up to six live segments: a copy-on-write UPDATE
+    // rewrites every segment it touches into one
+    def topUp(): Unit = while (t.status.visible.size < 6) {
+      t.insert(spark.range(nextK, nextK + 50).selectExpr("id AS k", "0L AS v"))
+      model = model ++ (nextK until nextK + 50).map(_ -> 0L)
+      nextK += 50
+      states(t.status.version) = model
+    }
+    topUp()
+    val firstInsert = states.keys.drop(1).head
+    val ckpts = scala.collection.mutable.ArrayBuffer(t.status.ckptV)
+    (1 to 3).foreach { _ =>
+      topUp()
+      assert(t.update(lit(true), Map("v" -> (col("v") + 1))) == model.size.toLong)
+      model = model.map { case (k, v) => (k, v + 1) }
+      states(t.status.version) = model
+      ckpts += t.status.ckptV
+    }
+    assert(ckpts.distinct.size == ckpts.size,
+      s"each full-table UPDATE must roll a checkpoint: $ckpts")
+    assert(t.status.prevCkptV > firstInsert)
+    (firstInsert to t.status.version).foreach { v =>
+      val want = states(states.keys.filter(_ <= v).max).sorted
+      val got = t.readAsOf(v).select("k", "v").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      assert(got == want, s"AS OF $v")
+    }
+    GraftTable.drop(spark, dir)
+  }
+
+  test("tables an older release wrote (single-file manifest, whole-JSON checkpoint) open, read, commit and time-travel") {
+    import graft.engine.format.{MetaCache, TableStatus}
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+    def write(p: java.nio.file.Path, st: TableStatus): Unit =
+      java.nio.file.Files.write(p, m.writerWithDefaultPrettyPrinter().writeValueAsBytes(st))
+    def legacy(name: String)(rewrite: (java.nio.file.Path, TableStatus) => Unit): Unit = {
+      val dir = Files.createTempDirectory(s"graft_ttlegacy_${name}_").toString + "/t"
+      val a = spark.range(0, 100).selectExpr("id AS k")
+      val t = GraftTable.create(spark, dir, a.schema)
+      t.insert(a)
+      t.insert(spark.range(100, 130).selectExpr("id AS k"))
+      val meta = java.nio.file.Paths.get(dir, "_meta")
+      val st = t.layout.readStatusUncached()
+      val logDir = meta.resolve("log")
+      java.nio.file.Files.list(logDir).forEach(p => java.nio.file.Files.delete(p))
+      rewrite(meta, st.copy(ckptV = -1L, prevCkptV = -1L, ckptId = ""))
+      MetaCache.drop(Some(t.layout.root.toString))
+      val old = GraftTable.at(spark, dir)
+      val v0 = old.status.version
+      assert(v0 == st.version && old.read.count() == 130L, name)
+      // the next commits convert the log; the versions they write replay
+      Mutation.delete(old, col("k") < 20L)
+      val v1 = old.status.version
+      old.insert(spark.range(200, 205).selectExpr("id AS k"))
+      val v2 = old.status.version
+      assert(old.status.ckptV >= 0, s"$name: the first new commit converts the log")
+      assert(old.read.count() == 115L)
+      assert(old.readAsOf(v1).count() == 110L, name)
+      assert(old.readAsOf(v2).count() == 115L, name)
+      assert(old.readChanges(v1, v2).count() == 5L, name)
+      MetaCache.drop(Some(old.layout.root.toString))
+      assert(GraftTable.at(spark, dir).readAsOf(v1).count() == 110L, s"$name: cold replay")
+      GraftTable.drop(spark, dir)
+    }
+    // the single-file manifest: every segment inline, no log directory
+    legacy("inline") { (meta, full) =>
+      java.nio.file.Files.delete(meta.resolve("log"))
+      write(meta.resolve("tablestatus.json"), full)
+    }
+    // a manifest over a whole-JSON checkpoint at the current version
+    legacy("ckptjson") { (meta, full) =>
+      write(meta.resolve("log").resolve(s"ckpt-${full.version}.json"), full)
+      write(meta.resolve("tablestatus.json"), full.copy(segments = Nil,
+        ckptV = full.version, ckptId = "0123456789ab"))
+    }
   }
 
   test("SQL surface: SELECT ... VERSION AS OF / TIMESTAMP AS OF through the catalog") {
@@ -264,17 +382,22 @@ class TimeTravelSpec extends AnyFunSuite {
     GraftTable.drop(spark, dir)
   }
 
-  test("retention: CLEAN FILES reclaims v-snapshots past graft.timetravel.retain") {
+  test("retention: CLEAN FILES reclaims log files past graft.timetravel.retain") {
     System.setProperty("graft.timetravel.retain", "3")
+    System.setProperty("graft.status.checkpoint.every", "2")
     try {
       val dir = Files.createTempDirectory("graft_ttgc_").toString + "/t"
       val a = spark.range(0, 100).selectExpr("id AS k")
-      val t = GraftTable.create(spark, dir, a.schema,
-        properties = Map("timetravel" -> "true"))
+      val t = GraftTable.create(spark, dir, a.schema)
       t.insert(a)
       val vOld = t.status.version
-      (0 until 3).foreach(i =>
-        t.insert(spark.range(100L + i * 10, 100L + i * 10 + 10).selectExpr("id AS k")))
+      // final version of each insert -> visible rows; the reserve commit
+      // between two of them serves the earlier count
+      val counts = scala.collection.mutable.LinkedHashMap(vOld -> 100L)
+      (0 until 3).foreach { i =>
+        t.insert(spark.range(100L + i * 10, 100L + i * 10 + 10).selectExpr("id AS k"))
+        counts(t.status.version) = 110L + i * 10
+      }
       val vNew = t.status.version
       assert(t.readAsOf(vOld).count() == 100L, "inside retention before the clean")
       // age the log files past the 1h sweep grace, then clean
@@ -285,10 +408,17 @@ class TimeTravelSpec extends AnyFunSuite {
         java.nio.file.Files.setLastModifiedTime(p, old))
       t.cleanFiles()
       intercept[IllegalStateException] { t.readAsOf(vOld) }
-      // versions inside the retention window survive the clean
-      assert(t.readAsOf(vNew - 1).count() >= 100L)
+      // the last `retain` versions survive the clean, exactly
+      (vNew - 3 to vNew).foreach(v =>
+        assert(t.readAsOf(v).count() == counts(counts.keys.filter(_ <= v).max), s"AS OF $v"))
+      // and the sweep kept no more than one checkpoint interval beyond them
+      val kept = t.layout.retainedVersions().map(_._1)
+      assert(kept.min >= vNew - 3 - 2 && kept.min <= vNew - 3, s"retained $kept")
       GraftTable.drop(spark, dir)
-    } finally System.clearProperty("graft.timetravel.retain")
+    } finally {
+      System.clearProperty("graft.timetravel.retain")
+      System.clearProperty("graft.status.checkpoint.every")
+    }
   }
 
   test("TIMESTAMP AS OF resolves from the PERSISTED commit wall-clock, surviving a full mtime rewrite (r18)") {
@@ -296,50 +426,47 @@ class TimeTravelSpec extends AnyFunSuite {
     // versions when a table dir is copied/restored by backup tooling
     // (every mtime becomes copy time), and lingering pre-checkpoint
     // deltas resolved-then-rejected spuriously. r18 persists the
-    // commit wall-clock INSIDE every log form (manifest, delta, ckpt
-    // header, v-snapshot) — this test simulates the migrated table by
+    // commit wall-clock INSIDE every log file (manifest, delta, ckpt
+    // header) — this test simulates the migrated table by
     // rewriting EVERY file mtime to a year ago and asserts resolution
     // and SHOW VERSIONS still use the true commit times.
-    System.setProperty("graft.status.inline.max", "0")
-    try {
-      val dir = Files.createTempDirectory("graft_ttwall_").toString + "/t"
-      val a = spark.range(0, 200).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
-      val t0 = System.currentTimeMillis()
-      val t = GraftTable.create(spark, dir, a.schema)
-      t.insert(a)
-      assert(t.status.ckptV >= 0, "fixture must be checkpointed")
-      val v1 = t.status.version
-      Thread.sleep(30)
-      val mid = System.currentTimeMillis()
-      Thread.sleep(30)
-      t.insert(spark.range(200, 260).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v"))
-      val v2 = t.status.version
+    val dir = Files.createTempDirectory("graft_ttwall_").toString + "/t"
+    val a = spark.range(0, 200).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+    val t0 = System.currentTimeMillis()
+    val t = GraftTable.create(spark, dir, a.schema)
+    t.insert(a)
+    assert(t.status.ckptV >= 0, "fixture must be checkpointed")
+    val v1 = t.status.version
+    Thread.sleep(30)
+    val mid = System.currentTimeMillis()
+    Thread.sleep(30)
+    t.insert(spark.range(200, 260).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v"))
+    val v2 = t.status.version
 
-      // the migrated/copied table: every mtime rewritten
-      val bogus = java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 365L * 24 * 3600 * 1000)
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).forEach(p =>
-        try java.nio.file.Files.setLastModifiedTime(p, bogus)
-        catch { case scala.util.control.NonFatal(_) => () })
+    // the migrated/copied table: every mtime rewritten
+    val bogus = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 365L * 24 * 3600 * 1000)
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).forEach(p =>
+      try java.nio.file.Files.setLastModifiedTime(p, bogus)
+      catch { case scala.util.control.NonFatal(_) => () })
 
-      assert(t.layout.versionAtTimestamp(mid) == v1,
-        "TIMESTAMP AS OF must resolve from the persisted stamp, not mtimes")
-      assert(t.readAsOfTimestamp(mid).count() == 200L)
-      assert(t.layout.versionAtTimestamp(System.currentTimeMillis()) == v2)
-      // every version a pre-checkpoint delta still covers resolves too
-      // (advisor r17: these used to resolve by mtime then reject)
-      assert(t.readAsOfTimestamp(System.currentTimeMillis()).count() == 260L)
-      // SHOW VERSIONS surfaces the true commit times, not the rewrite
-      val now = System.currentTimeMillis()
-      val rows = t.layout.retainedVersions()
-      assert(rows.nonEmpty)
-      rows.foreach { case (v, ts, kind) =>
-        assert(ts >= t0 - 1000 && ts <= now + 1000,
-          s"version $v ($kind) shows stamp $ts outside the test's run " +
-            s"window [$t0, $now] — mtime leaked into SHOW VERSIONS")
-      }
-      GraftTable.drop(spark, dir)
-    } finally System.clearProperty("graft.status.inline.max")
+    assert(t.layout.versionAtTimestamp(mid) == v1,
+      "TIMESTAMP AS OF must resolve from the persisted stamp, not mtimes")
+    assert(t.readAsOfTimestamp(mid).count() == 200L)
+    assert(t.layout.versionAtTimestamp(System.currentTimeMillis()) == v2)
+    // every version a pre-checkpoint delta still covers resolves too
+    // (advisor r17: these used to resolve by mtime then reject)
+    assert(t.readAsOfTimestamp(System.currentTimeMillis()).count() == 260L)
+    // SHOW VERSIONS surfaces the true commit times, not the rewrite
+    val now = System.currentTimeMillis()
+    val rows = t.layout.retainedVersions()
+    assert(rows.nonEmpty)
+    rows.foreach { case (v, ts, kind) =>
+      assert(ts >= t0 - 1000 && ts <= now + 1000,
+        s"version $v ($kind) shows stamp $ts outside the test's run " +
+          s"window [$t0, $now] — mtime leaked into SHOW VERSIONS")
+    }
+    GraftTable.drop(spark, dir)
   }
 
   test("mass RESTORE: the resurrection walk (10k file probes) never rides the table lock (r18)") {
@@ -352,66 +479,63 @@ class TimeTravelSpec extends AnyFunSuite {
     // the spec injects per-probe latency through the scheduling hook
     // and asserts the injected time shows up in the restore WALL but
     // not in the LOCK HOLD.
-    System.setProperty("graft.status.inline.max", "0")
-    try {
-      val dir = Files.createTempDirectory("graft_ttmass_").toString + "/t"
-      val a = spark.range(0, 100).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
-      val t = GraftTable.create(spark, dir, a.schema)
-      t.insert(a)
-      // 20 synthetic segments × 500 physically-present files = 10k
-      // probe targets, injected through the normal locked commit
-      val SegN = 20; val FilesPer = 500
-      val base = t.status.nextSegmentId
-      (0 until SegN).foreach { i =>
-        val sd = java.nio.file.Paths.get(t.layout.segmentDir(base + i).toString)
-        java.nio.file.Files.createDirectories(sd)
-        (0 until FilesPer).foreach(j =>
-          java.nio.file.Files.createFile(sd.resolve(s"part-$j.parquet")))
+    val dir = Files.createTempDirectory("graft_ttmass_").toString + "/t"
+    val a = spark.range(0, 100).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+    val t = GraftTable.create(spark, dir, a.schema)
+    t.insert(a)
+    // 20 synthetic segments × 500 physically-present files = 10k
+    // probe targets, injected through the normal locked commit
+    val SegN = 20; val FilesPer = 500
+    val base = t.status.nextSegmentId
+    (0 until SegN).foreach { i =>
+      val sd = java.nio.file.Paths.get(t.layout.segmentDir(base + i).toString)
+      java.nio.file.Files.createDirectories(sd)
+      (0 until FilesPer).foreach(j =>
+        java.nio.file.Files.createFile(sd.resolve(s"part-$j.parquet")))
+    }
+    t.layout.commit { st =>
+      val fakes = (0 until SegN).map { i =>
+        graft.engine.format.SegmentMeta(
+          id = base + i, status = graft.engine.format.SegmentStatus.Success,
+          format = "parquet",
+          files = (0 until FilesPer).map(j => s"part-$j.parquet"),
+          rowCount = 0, sizeBytes = 0, stats = Map.empty,
+          sortColumns = Nil, createdAt = System.currentTimeMillis())
       }
-      t.layout.commit { st =>
-        val fakes = (0 until SegN).map { i =>
-          graft.engine.format.SegmentMeta(
-            id = base + i, status = graft.engine.format.SegmentStatus.Success,
-            format = "parquet",
-            files = (0 until FilesPer).map(j => s"part-$j.parquet"),
-            rowCount = 0, sizeBytes = 0, stats = Map.empty,
-            sortColumns = Nil, createdAt = System.currentTimeMillis())
-        }
-        st.copy(segments = st.segments ++ fakes)
-      }
-      val vFull = t.status.version
-      // the mis-step: retire every synthetic segment (metadata-only)
-      t.layout.commit { st =>
-        st.copy(segments = st.segments.map(s =>
-          if (s.id >= base) s.retire(graft.engine.format.SegmentStatus.MarkedForDelete)
-          else s))
-      }
-      assert(t.status.visible.size == 1)
+      st.copy(segments = st.segments ++ fakes)
+    }
+    val vFull = t.status.version
+    // the mis-step: retire every synthetic segment (metadata-only)
+    t.layout.commit { st =>
+      st.copy(segments = st.segments.map(s =>
+        if (s.id >= base) s.retire(graft.engine.format.SegmentStatus.MarkedForDelete)
+        else s))
+    }
+    assert(t.status.visible.size == 1)
 
-      var probes = 0
-      val probeCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-      graft.engine.format.TableLayout.resetLockHold()
-      val tr = System.nanoTime()
-      Failpoints.withHandler((point, p) => {
-        if (point == "restore.verifyProbe" && p == dir) {
-          probeCounter.incrementAndGet()
-          Thread.sleep(0, 100000) // 0.1 ms of injected stat latency
-        }
-      }) { t.restoreTo(vFull) }
-      val wallMs = (System.nanoTime() - tr) / 1e6
-      probes = probeCounter.get
-      val holdMs = graft.engine.format.TableLayout.lockHoldMaxNanos / 1e6
-      info(f"mass restore: $probes probes, wall $wallMs%.0f ms, max lock hold $holdMs%.0f ms")
-      assert(probes >= SegN * FilesPer, s"expected >= ${SegN * FilesPer} probes, saw $probes")
-      assert(t.status.visible.size == SegN + 1, "restore must resurrect every segment")
-      // the injected ~1s of probe latency must be visible in the wall…
-      assert(wallMs >= 250, f"injected latency missing from wall ($wallMs%.0f ms) — hook dead?")
-      // …and ABSENT from the lock hold: ms-scale flip only
-      assert(holdMs < math.max(250, wallMs / 4),
-        f"restore held the table lock $holdMs%.0f ms of a $wallMs%.0f ms walk — " +
-          "the resurrection verification is back under the lock")
-      GraftTable.drop(spark, dir)
-    } finally System.clearProperty("graft.status.inline.max")
+    var probes = 0
+    val probeCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+    graft.engine.format.TableLayout.resetLockHold()
+    val tr = System.nanoTime()
+    Failpoints.withHandler((point, p) => {
+      if (point == "restore.verifyProbe" && p == dir) {
+        probeCounter.incrementAndGet()
+        Thread.sleep(0, 100000) // 0.1 ms of injected stat latency
+      }
+    }) { t.restoreTo(vFull) }
+    val wallMs = (System.nanoTime() - tr) / 1e6
+    probes = probeCounter.get
+    val holdMs = graft.engine.format.TableLayout.lockHoldMaxNanos / 1e6
+    info(f"mass restore: $probes probes, wall $wallMs%.0f ms, max lock hold $holdMs%.0f ms")
+    assert(probes >= SegN * FilesPer, s"expected >= ${SegN * FilesPer} probes, saw $probes")
+    assert(t.status.visible.size == SegN + 1, "restore must resurrect every segment")
+    // the injected ~1s of probe latency must be visible in the wall…
+    assert(wallMs >= 250, f"injected latency missing from wall ($wallMs%.0f ms) — hook dead?")
+    // …and ABSENT from the lock hold: ms-scale flip only
+    assert(holdMs < math.max(250, wallMs / 4),
+      f"restore held the table lock $holdMs%.0f ms of a $wallMs%.0f ms walk — " +
+        "the resurrection verification is back under the lock")
+    GraftTable.drop(spark, dir)
   }
 
   test("RESTORE inside the single-entry unlink window: CLEAN FILES aborts LOUDLY, never silently (r18)") {
@@ -508,5 +632,21 @@ class TimeTravelSpec extends AnyFunSuite {
       t.status.version)
     assert(TableLayout.committedAtCache.size >= n1)
     GraftTable.drop(spark, dir)
+  }
+
+  test("one commit-log form: src/main names no removed log knob, and TableLayout builds no v-<n> path") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"expected the sources under ${main.toAbsolutePath}")
+    val gone = Seq("\"timetravel\"", "graft.status.inline.max", "graft.status.ckpt.jsonl.min",
+      "graft.meta.probe", "graft.meta.serial.below")
+    val vPath = """["/]v-\$""".r
+    val offenders = for {
+      p <- Files.walk(main).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      (l, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if gone.exists(l.contains) ||
+        (p.getFileName.toString == "TableLayout.scala" && vPath.findFirstIn(l).isDefined)
+    } yield s"$p:${i + 1}: ${l.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
