@@ -1815,8 +1815,7 @@ class GraftTable private (val spark: SparkSession, val path: String)
           val tmp = new org.apache.hadoop.fs.Path(dir,
             s".fold-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
           val res: Boolean = try {
-            df.write.mode("overwrite").options(SegmentWriter.writerOptions(meta))
-              .parquet(tmp.toString)
+            SegmentWriter.writeFiles(df, meta, tmp)
             Failpoints.hit("fold.tmpWritten", path)
             val part = layout.fs.listStatus(tmp)
               .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))

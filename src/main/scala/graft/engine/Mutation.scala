@@ -148,7 +148,11 @@ object Mutation extends org.apache.spark.internal.Logging {
     * per-stage re-optimization buys nothing and costs a planning round
     * trip on every mutation. Decision queries run on a cloned session
     * (same SparkContext, same data, AQE off); the REWRITE job keeps the
-    * caller's session and its AQE. One clone per root session, cached —
+    * caller's session and its AQE. A decision query is ANALYZED in the
+    * caller's session and only executed here: this sibling is a new
+    * session with default runtime confs, so resolving a predicate in
+    * it would cast timestamp literals in the wrong time zone and pick
+    * the wrong files. One clone per root session, cached —
     * same lifetime as the root (a bench/driver process holds a handful
     * of sessions). */
   // WEAK keys (same rationale as Q's fixture caches, advisor r20): a
@@ -182,11 +186,14 @@ object Mutation extends org.apache.spark.internal.Logging {
       : Map[Long, Map[String, Long]] = {
     val segs = pruneCandidates(t, segs0, cond)
     if (segs.isEmpty) return Map.empty
-    val spark = decisionSession(t.spark)
-    val hit = LiveRows.read(t, segs, segs.flatMap(_._2), spark)
+    // analyzed in the caller's session (ResolveTimeZone pins each cast's
+    // zone), executed on the sibling
+    val decision = LiveRows.read(t, segs)
       .filter(cond)
       .groupBy(col("_metadata.file_path").as("fp"))
       .count()
+    val hit = org.apache.spark.sql.graft.Shims
+      .ofRows(decisionSession(t.spark), decision.queryExecution.analyzed)
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
     // resolve against the UNPRUNED index: normIndex zips each segment's

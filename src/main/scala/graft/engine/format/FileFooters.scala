@@ -17,9 +17,12 @@ import scala.jdk.CollectionConverters._
   *
   * Only types whose parquet statistics order matches our canonical
   * [[StatValue]] order are lifted (ints, longs, UTF8 strings, dates,
-  * booleans); floats carry NaN hazards and timestamps depend on the
-  * writer's physical type, so both are skipped — per-file stats are an
-  * optional refinement, absent stats just mean coarser pruning. */
+  * booleans, and timestamps stored as INT64 TIMESTAMP(MICROS), whose
+  * values already are [[StatValue]]'s epoch micros). Floats carry NaN
+  * hazards and are skipped. INT96 timestamps — Spark's default, and
+  * what tables written before [[GraftParquetFormat]] hold — have no
+  * parquet statistics, so they get none here either: per-file stats
+  * are an optional refinement, absent stats just mean coarser pruning. */
 object FileFooters {
 
   /** rows + min/max/nulls for `wantCols` of one parquet file.
@@ -50,8 +53,12 @@ object FileFooters {
       val st = c.getStatistics
       if (st == null || st.isEmpty || !st.isNumNullsSet) return None
       val nulls = st.getNumNulls
-      if (!st.hasNonNullValue) Some((None: Option[String], None: Option[String], nulls))
-      else {
+      // no bounds means an all-null chunk only when every value is null;
+      // INT96 chunks hold values but parquet keeps no min/max for them
+      if (!st.hasNonNullValue) {
+        if (nulls == c.getValueCount) Some((None: Option[String], None: Option[String], nulls))
+        else return None
+      } else {
         val pt = c.getPrimitiveType
         def enc(v: Any): Option[String] = (pt.getPrimitiveTypeName, dt) match {
           case (PrimitiveTypeName.BINARY, StringType)
@@ -61,6 +68,16 @@ object FileFooters {
           case (PrimitiveTypeName.INT32, IntegerType | DateType | ShortType | ByteType) =>
             Some(v.toString)
           case (PrimitiveTypeName.INT64, LongType) => Some(v.toString)
+          case (PrimitiveTypeName.INT64, TimestampType | TimestampNTZType) =>
+            pt.getLogicalTypeAnnotation match {
+              // a UTC-adjusted instant backs TimestampType, a wall clock
+              // backs TimestampNTZType; any other pairing is not ours
+              case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+                  if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS &&
+                    ts.isAdjustedToUTC == (dt == TimestampType) =>
+                Some(v.toString)
+              case _ => None
+            }
           case (PrimitiveTypeName.BOOLEAN, BooleanType) =>
             Some(if (v.asInstanceOf[Boolean]) "1" else "0")
           case _ => None

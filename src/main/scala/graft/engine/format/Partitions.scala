@@ -105,7 +105,12 @@ object Partitions {
     oldStats.flatMap { case (c, _) =>
       val dtOpt = schema.fields.find(_.name == c).map(_.dataType)
       val perFile = files.map(f => fileMeta.get(f).flatMap(_.stats.get(c)))
-      if (files.isEmpty || dtOpt.isEmpty || perFile.exists(_.isEmpty)) None // drop
+      // a file entry without bounds whose live rows are not all null
+      // has UNKNOWN bounds (INT96 timestamps, lifted before footers
+      // learned to tell them apart), not an all-null file
+      val unbounded = files.exists(f => fileMeta.get(f).exists(fm =>
+        fm.stats.get(c).exists(cs => cs.min.isEmpty && cs.nullCount < fm.rows)))
+      if (files.isEmpty || dtOpt.isEmpty || perFile.exists(_.isEmpty) || unbounded) None // drop
       else {
         val dt = dtOpt.get
         val cs = perFile.flatten

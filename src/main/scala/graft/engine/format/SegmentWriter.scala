@@ -1,7 +1,9 @@
 package graft.engine.format
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.{Options, Path}
 
@@ -35,13 +37,34 @@ object SegmentWriter {
     * tuning knobs exactly like the reference's table-level
     * TBLPROPERTIES — and `bloom_columns=c1,c2` (the CREATE INDEX … AS
     * 'bloomfilter' analog: the reference's bloom CG index collapses onto
-    * parquet's) layers per-column bloom filter enables on top. */
-  def writerOptions(meta: TableMeta): Map[String, String] = {
+    * parquet's) layers per-column bloom filter enables on top.
+    *
+    * Bloom bitsets are sized to the data: with bloom columns, parquet's
+    * adaptive sizing is on (the global key; parquet ignores its `#col`
+    * form), so a chunk's bitset fits the distinct values it saw instead
+    * of parquet's 1 MiB maximum — on a 6k-row file, 64 KiB instead of
+    * 1 MiB, and every probe reads the bitset before it can skip. A
+    * table's own `parquet.bloom.filter.expected.ndv#c` still wins: parquet
+    * sizes from an NDV hint before it considers adaptive sizing. */
+  private def writerOptions(meta: TableMeta): Map[String, String] = {
     val bloomCols = meta.properties.get("bloom_columns").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    meta.properties.filter(_._1.startsWith("parquet.")) ++
+    val adaptive =
+      if (bloomCols.isEmpty) Map.empty[String, String]
+      else Map("parquet.bloom.filter.adaptive.enabled" -> "true")
+    adaptive ++ meta.properties.filter(_._1.startsWith("parquet.")) ++
       bloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
   }
+
+  /** Write `df` as the parquet data files of a table under `dir`, split
+    * into `dirCols` subdirectories when given. The one writer of table
+    * data files: segment loads and rewrites ([[write]]), delta folds and
+    * streaming batches all come here, so every file carries the writer
+    * options above and the INT64 timestamps of [[GraftParquetFormat]]. */
+  private[engine] def writeFiles(df: DataFrame, meta: TableMeta, dir: Path,
+      dirCols: Seq[String] = Nil): Unit =
+    df.write.mode("overwrite").format(classOf[GraftParquetFormat].getName)
+      .options(writerOptions(meta)).partitionBy(dirCols: _*).save(dir.toString)
 
   /** Write `df` as segment `id` under `layout`, returning its metadata
     * (not yet committed to tablestatus).
@@ -149,11 +172,9 @@ object SegmentWriter {
     // bucketed: the __b id column splits bucket dirs the same way.
     val toWrite = pCols.foldLeft(observed)((d, c) =>
       d.withColumn(Partitions.mirror(c), col(c)))
-    val writer = toWrite.write.mode("overwrite").options(writerOptions(meta))
     val dirCols = pCols.map(Partitions.mirror) ++
       (if (bucketSpec.isDefined) Seq("__b") else Nil)
-    (if (dirCols.isEmpty) writer else writer.partitionBy(dirCols: _*))
-      .parquet(tmp.toString)
+    writeFiles(toWrite, meta, tmp, dirCols)
 
     val m = obs.get
     val rowCount = m("__n").asInstanceOf[Long]
@@ -220,5 +241,22 @@ object SegmentWriter {
     val below = entries.filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
       .flatMap(s => listParquetFiles(fs, base, s.getPath)).toSeq
     (here ++ below).sortBy(_._1)
+  }
+}
+
+/** Spark's parquet format, writing `TimestampType` as INT64
+  * TIMESTAMP(MICROS) instead of Spark's default INT96. Parquet keeps no
+  * min/max and no column index for INT96, so a timestamp-led sort key
+  * would prune no file, row group or page. The write reads its SQL conf
+  * through `getSqlConf`; this format hands it a copy of the session's
+  * conf with the timestamp type set, so the session conf is never
+  * written and a plain `df.write.parquet` in the same session still
+  * writes INT96. */
+class GraftParquetFormat extends ParquetFileFormat {
+  override def getSqlConf(spark: SparkSession): SQLConf = {
+    val writeConf = super.getSqlConf(spark).clone()
+    writeConf.setConf(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+      SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS)
+    writeConf
   }
 }

@@ -62,9 +62,7 @@ object GraftStreaming {
         sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"nulls:${f.name}"))
     }.toSeq
     val tmp = layout.tmpSegmentDir(segId)
-    aligned.observe(obs, aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").options(SegmentWriter.writerOptions(t.meta))
-      .parquet(tmp.toString)
+    SegmentWriter.writeFiles(aligned.observe(obs, aggs.head, aggs.tail: _*), t.meta, tmp)
     val m = obs.get
     val n = m("__n").asInstanceOf[Long]
 

@@ -106,4 +106,63 @@ class TimeZoneSpec extends AnyFunSuite {
       GraftSql.sessionTsMillis(sess, newest.getString(1))) == t.status.version)
     GraftTable.drop(sess, dir)
   }
+
+  /** Copy-on-write mutations decide their files in a query that must
+    * resolve `cond` in the CALLER's session: rows at session-zone and
+    * UTC midnight of 2020-01-01, one per segment, and a predicate on
+    * the wall-clock string. Each statement must touch exactly the rows
+    * plain Spark's filter picks in the same session. */
+  private def midnights(): (org.apache.spark.sql.SparkSession, GraftTable,
+      org.apache.spark.sql.DataFrame) = {
+    assume(java.util.TimeZone.getDefault.getID != zone,
+      "test needs JVM default zone != session zone to discriminate")
+    val sess = spark.newSession()
+    sess.conf.set("spark.sql.session.timeZone", zone)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("k INT, ts TIMESTAMP, v INT")
+    def seg(rows: (Int, String)*) = sess.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (k, at) =>
+        org.apache.spark.sql.Row(k, java.sql.Timestamp.from(java.time.Instant.parse(at)), 0)
+      }: _*), schema)
+    val local = seg(1 -> "2019-12-31T18:30:00Z", 2 -> "2019-12-31T12:00:00Z")
+    val utc = seg(3 -> "2020-01-01T00:00:00Z", 4 -> "2020-01-01T06:00:00Z")
+    val t = GraftTable.create(sess,
+      Files.createTempDirectory("graft_tzcow_").toString + "/t", schema,
+      sortColumns = Seq("k"))
+    t.insert(local)
+    t.insert(utc)
+    (sess, t, local.union(utc))
+  }
+
+  private val midnight = org.apache.spark.sql.functions.col("ts") ===
+    org.apache.spark.sql.functions.lit("2020-01-01 00:00:00")
+
+  private def keys(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.collect().map(_.getInt(0)).toSet
+
+  test("copy-on-write UPDATE decides its files in the session zone") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val (_, t, src) = midnights()
+    val want = keys(src.filter(midnight))
+    assert(want == Set(1), "plain Spark must pick the session-zone midnight")
+    assert(t.update(midnight, Map("v" -> lit(1))) == want.size.toLong)
+    assert(keys(t.read.filter(col("v") === 1)) == want)
+    assert(keys(t.read) == Set(1, 2, 3, 4))
+  }
+
+  test("copy-on-write DELETE decides its files in the session zone") {
+    val (_, t, src) = midnights()
+    val want = keys(src.filter(midnight))
+    assert(t.delete(midnight) == want.size.toLong)
+    assert(keys(t.read) == keys(src.filter(!midnight)))
+  }
+
+  test("INSERT OVERWRITE WHERE decides its files in the session zone") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val (_, t, src) = midnights()
+    val fresh = src.filter(midnight).withColumn("k", col("k") + 10)
+      .withColumn("v", lit(7))
+    t.insertOverwriteWhere(midnight, fresh)
+    assert(keys(t.read) == keys(src.filter(!midnight)) ++ keys(fresh))
+    assert(keys(t.read.filter(col("v") === 7)) == Set(11))
+  }
 }
