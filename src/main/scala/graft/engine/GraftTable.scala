@@ -4,9 +4,9 @@ import graft.engine.format._
 
 import scala.collection.parallel.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** User-facing handle on a carbonish table — the analog of the
   * reference's command surface (SURVEY §2.8): create/insert/load,
@@ -672,9 +672,7 @@ class GraftTable private (val spark: SparkSession, val path: String)
     // time — the writer never supplies it (SpatialIndex.derive)
     val incoming = graft.geo.SpatialIndex.of(m.properties)
       .map(graft.geo.SpatialIndex.derive(df, _)).getOrElse(df)
-    // align column order / types to the table schema by name
-    val aligned = incoming.select(target.fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+    val aligned = GraftTable.align(incoming, target)
     var id = -1L
     layout.commit { st =>
       id = st.nextSegmentId
@@ -863,8 +861,7 @@ class GraftTable private (val spark: SparkSession, val path: String)
       insert(df, overwrite = true)
       return replaced
     }
-    val pinned = df.select(schema.fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)).toSeq: _*).localCheckpoint()
+    val pinned = GraftTable.align(df, schema).localCheckpoint()
     val tuples = pinned.select(pCols.map(col): _*).distinct().collect()
     if (tuples.isEmpty) 0L
     else {
@@ -1972,6 +1969,23 @@ class GraftTable private (val spark: SparkSession, val path: String)
 }
 
 object GraftTable {
+  /** `df`'s columns aligned to `schema` by name: cast to the table's
+    * types, in the table's order, every NOT NULL field null-checked (see
+    * [[fit]]). Every write of new rows goes through it. */
+  private[engine] def align(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.map(f => fit(f, col(f.name))).toSeq: _*)
+
+  /** `c` cast to `f`'s type and named after it. When `f` is NOT NULL, a
+    * null fails the job that evaluates it (Spark's v2 insert check,
+    * `AssertNotNull`), so the write fails before anything publishes. */
+  private[engine] def fit(f: StructField, c: Column): Column = {
+    val cast = c.cast(f.dataType)
+    (if (f.nullable) cast
+     else org.apache.spark.sql.graft.Shims.column(
+       org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
+         org.apache.spark.sql.graft.Shims.expression(cast), Seq(f.name)))).as(f.name)
+  }
+
   /** CREATE TABLE (CarbonCreateTableCommand.scala:38). `partitionColumns`
     * declares hive-style partitioning (CarbonAlterTableAddHivePartition
     * Command.scala:52): writes split into per-value dirs inside each

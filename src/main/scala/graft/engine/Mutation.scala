@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.engine.format.{SegmentMeta, SegmentStatus, SegmentWriter}
+import graft.engine.format.{Buckets, SegmentMeta, SegmentPruner, SegmentStatus, SegmentWriter}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -45,22 +45,26 @@ object Mutation extends org.apache.spark.internal.Logging {
   }
 
   /** Prune the candidate file set for a mutation predicate with the
-    * SAME stats ladder the read path uses (segment min/max → file-grain
-    * footer/partition/bucket stats): a point DELETE on a 100 TB sorted
-    * table then scans ~one segment's files to find its matches instead
-    * of every footer. The condition is resolved against an empty frame
-    * to translate it to source filters; anything untranslatable keeps
-    * everything (conservative — correctness never depends on this). */
+    * read path's ladder, [[SegmentPruner.keep]]
+    * (segment min/max → file footer/partition stats → hash bucket), then
+    * the SI rung: a point DELETE on a 100 TB sorted or bucketed table
+    * scans ~one segment's or one bucket's files to find its matches
+    * instead of every footer. `segs` pairs each segment with its full
+    * file list ([[visibleFiles]]). The condition is resolved against an
+    * empty frame to translate it to source filters; anything
+    * untranslatable keeps everything (conservative — correctness never
+    * depends on this). */
   private[engine] def pruneCandidates(
       t: GraftTable, segs: Seq[(SegmentMeta, Seq[String])], cond: Column)
       : Seq[(SegmentMeta, Seq[String])] = {
-    import graft.engine.format.{Partitions, SegmentPruner}
     val filters: Seq[org.apache.spark.sql.sources.Filter] =
       try {
         val resolved = t.spark.createDataFrame(
             t.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema)
           .filter(cond).queryExecution.analyzed
-        resolved match {
+        // fold the literal casts analysis adds (SQL's `k = 42` on a
+        // BIGINT column), which source filters cannot carry
+        org.apache.spark.sql.catalyst.optimizer.ConstantFolding(resolved) match {
           case org.apache.spark.sql.catalyst.plans.logical.Filter(c, _) =>
             // each translatable conjunct prunes independently; the
             // untranslatable rest simply doesn't prune
@@ -70,18 +74,8 @@ object Mutation extends org.apache.spark.internal.Logging {
         }
       } catch { case scala.util.control.NonFatal(_) => Nil }
     if (filters.isEmpty) return segs
-    val schema = t.schema
-    val kept = segs.flatMap { case (s, abs) =>
-      if (SegmentPruner.prune(Seq(s), filters).isEmpty) None
-      else {
-        val keptAbs = s.files.zip(abs).collect {
-          case (rel, a) if !(s.fileMeta.contains(rel) || rel.contains("=")) ||
-              filters.forall(SegmentPruner.mayMatch(
-                Partitions.fileAsSegment(s, rel, schema), _)) => a
-        }
-        if (keptAbs.isEmpty) None else Some((s, keptAbs))
-      }
-    }
+    val kept = SegmentPruner.keep(segs.map(_._1), filters, t.schema, Buckets.specOf(t.meta))
+      .kept.map { case (s, rels) => (s, t.layout.segmentFilePaths(s, rels)) }
     val siKept = siPrune(t, kept, filters)
     val (fTot, fKept) = (segs.map(_._2.size).sum, siKept.map(_._2.size).sum)
     if (fKept < fTot)
@@ -437,8 +431,7 @@ object Mutation extends org.apache.spark.internal.Logging {
     * so overwriting one day of a 100 TB table rewrites ~that day's
     * segments. Returns #rows replaced. */
   def insertOverwriteWhere(t: GraftTable, cond: Column, df: DataFrame): Long = {
-    val aligned = df.select(t.schema.fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+    val aligned = GraftTable.align(df, t.schema)
     val (before, after, matched) = rewriteAffected(t, cond,
       rows => rows.filter(!coalesce(cond, lit(false))).unionByName(aligned))
     if (before == 0L && after == 0L && matched == 0L) {
@@ -460,7 +453,7 @@ object Mutation extends org.apache.spark.internal.Logging {
       val c = coalesce(cond, lit(false))
       rows.select(schema.fields.map { f =>
         set.get(f.name) match {
-          case Some(e) => when(c, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+          case Some(e) => GraftTable.fit(f, when(c, e.cast(f.dataType)).otherwise(col(f.name)))
           case None => col(f.name)
         }
       }.toSeq: _*)
@@ -686,7 +679,7 @@ object Mutation extends org.apache.spark.internal.Logging {
         return update(t, cond, set) // copy-on-write fallback
       }
       val updated = matched.select(schema.fields.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
+        set.get(f.name).map(GraftTable.fit(f, _)).getOrElse(col(f.name))
       }.toSeq: _*)
       val id = reserve(t)
       val seg =
@@ -879,9 +872,9 @@ class MergeBuilder private[engine] (
       case (acc, (i, _)) => acc || col("__act") === i
     }
     val outCols = schema.fields.map { f =>
-      emitting.foldRight(col(s"t.${f.name}")) { case ((i, a), els) =>
+      GraftTable.fit(f, emitting.foldRight(col(s"t.${f.name}")) { case ((i, a), els) =>
         when(col("__act") === i, fieldExpr(a, f)).otherwise(els)
-      }.as(f.name)
+      })
     }
     val merged = withAct.filter(keep).select(outCols.toSeq: _*)
 

@@ -154,8 +154,8 @@ object Partitions {
 
   /** Per-FILE pseudo segment-meta: segment stats refined by footer file
     * stats and the path-encoded partition tuple. Both refinements bound
-    * the file's contents, so [[SegmentPruner.mayMatch]] over this meta
-    * is exactly file-grain pruning.
+    * the file's contents, so [[SegmentPruner]]'s compiled filters over
+    * this meta are exactly file-grain pruning.
     *
     * The rowCount becomes the FILE's (footer) count, so every segment-
     * level nullCount must be made consistent with it: a segment-wide

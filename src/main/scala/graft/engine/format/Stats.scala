@@ -115,12 +115,13 @@ object StatValue {
       }
     }
 
-  /** One-time-compiled form of [[compare]]: the literal normalizes ONCE
-    * and integral literals get a Long fast path for integral stored
-    * values — at 1M segments the per-segment `BigDecimal` parse of both
-    * sides dominated the pruning pass. `None` = the literal itself is
-    * un-normalizable (every comparison would be None). Semantics are
-    * identical to compare(stored, lit) by construction: the fast path
+  /** Comparison of stored canonical values against one filter literal,
+    * compiled once: the literal normalizes ONCE and integral literals
+    * get a Long fast path for integral stored values — at 1M segments
+    * the per-segment `BigDecimal` parse of both sides dominated the
+    * pruning pass. The returned function's result is < 0 iff stored <
+    * lit; its None = incomparable. `None` = the literal itself is
+    * un-normalizable (every comparison would be None). The fast path
     * only fires when BOTH sides parse as exact longs, where long order
     * equals decimal order. */
   def comparator(lit: Any): Option[String => Option[Int]] = literal(lit).map {
@@ -140,87 +141,126 @@ object StatValue {
         }
       }
     case ('s', s: String) =>
+      // UTF8String binary order == String order only for ASCII; stay
+      // conservative outside that range
       if (!asciiOnly(s)) (_: String) => None
       else (stored: String) =>
         if (asciiOnly(stored)) Some(stored.compareTo(s)) else None
     case _ => (_: String) => None
   }
-
-  /** compare(stored, lit) < 0 iff stored < lit; None = incomparable. */
-  def compare(stored: String, lit: Any): Option[Int] = literal(lit).flatMap {
-    case ('n', d: BigDecimal) =>
-      try Some(BigDecimal(stored).compare(d)) catch { case _: NumberFormatException => None }
-    case ('s', s: String) =>
-      // UTF8String binary order == String order only for ASCII; stay
-      // conservative outside that range.
-      if (asciiOnly(stored) && asciiOnly(s)) Some(stored.compareTo(s)) else None
-    case _ => None
-  }
 }
 
-/** Evaluates pushed-down DSv2 filters against segment-level min/max —
-  * the first rung of the pruning ladder (segment stats → parquet
-  * row-group stats → parquet page/bloom, SURVEY §7.1). */
-object SegmentPruner {
+/** The pruning ladder over pushed-down DSv2 filters: segment min/max,
+  * then per-file stats (footer stats ∩ path-encoded partition tuple),
+  * then the hash-bucket pin, ahead of parquet's own row-group, page and
+  * bloom tiers (SURVEY §7.1). Like the reference's one entry point
+  * (CarbonInputFormat.getPrunedBlocklets), [[keep]] serves planned
+  * scans, runtime filters and mutation candidates alike. */
+object SegmentPruner extends org.apache.spark.internal.Logging {
   import org.apache.spark.sql.sources._
+  import org.apache.spark.sql.types.StructType
 
-  /** true = segment may contain matching rows (keep); false = provably
-    * disjoint (skip). Unknown anything → keep. */
-  def mayMatch(seg: SegmentMeta, filter: Filter): Boolean = {
-    if (seg.rowCount == 0) return false // committed-empty segment
-
-    def stats(attr: String): Option[ColumnStats] = seg.stats.get(attr)
-    def cmpMin(attr: String, v: Any): Option[Int] =
-      stats(attr).flatMap(_.min).flatMap(StatValue.compare(_, v))
-    def cmpMax(attr: String, v: Any): Option[Int] =
-      stats(attr).flatMap(_.max).flatMap(StatValue.compare(_, v))
-
-    filter match {
-      case EqualTo(a, v) =>
-        !(cmpMin(a, v).exists(_ > 0) || cmpMax(a, v).exists(_ < 0))
-      case EqualNullSafe(a, v) =>
-        if (v == null) stats(a).forall(_.nullCount > 0)
-        else !(cmpMin(a, v).exists(_ > 0) || cmpMax(a, v).exists(_ < 0))
-      case GreaterThan(a, v) => !cmpMax(a, v).exists(_ <= 0)
-      case GreaterThanOrEqual(a, v) => !cmpMax(a, v).exists(_ < 0)
-      case LessThan(a, v) => !cmpMin(a, v).exists(_ >= 0)
-      case LessThanOrEqual(a, v) => !cmpMin(a, v).exists(_ > 0)
-      case In(a, vs) =>
-        vs.isEmpty || vs.exists(v =>
-          !(cmpMin(a, v).exists(_ > 0) || cmpMax(a, v).exists(_ < 0)))
-      case IsNull(a) => stats(a).forall(_.nullCount > 0)
-      case IsNotNull(a) =>
-        stats(a).forall(s => seg.rowCount == 0 || s.nullCount < seg.rowCount)
-      case StringStartsWith(a, p) if p.nonEmpty =>
-        // p-prefixed strings live in [p, succ(p)) with succ = last char
-        // incremented — stays ASCII-comparable, unlike appending U+FFFF
-        // (which compare rejects, silently disabling this bound). A
-        // prefix ending in 0x7F would need a carry; keep conservatively.
-        val minBeyond =
-          if (p.last < '\u007f') {
-            val succ = p.init + (p.last + 1).toChar
-            cmpMin(a, succ).exists(_ >= 0)
-          } else false
-        !(minBeyond || cmpMax(a, p).exists(_ < 0))
-      case And(l, r) => mayMatch(seg, l) && mayMatch(seg, r)
-      case Or(l, r) => mayMatch(seg, l) || mayMatch(seg, r)
-      case _ => true // Not, EndsWith, Contains, unknown: conservative keep
-    }
+  /** What [[keep]] kept and which rung cut the rest. `kept` pairs each
+    * surviving segment with its surviving files (segment-relative, in
+    * segment order); `segmentsKept` counts the segment rung's
+    * survivors, which the finer rungs may still empty. */
+  case class Pruned(
+      kept: Seq[(SegmentMeta, Seq[String])],
+      segmentsKept: Int,
+      segmentsTotal: Int,
+      skippedByFile: Int,
+      skippedByBucket: Int) {
+    def filesSkipped: Int = skippedByFile + skippedByBucket
   }
 
+  /** The segments and files of `visible` that may hold a row matching
+    * every filter. Each filter compiles once; the per-file rungs run
+    * over the segment rung's survivors only, so the cost is one pass
+    * over the segments plus O(kept segments' files), never O(table
+    * files). Unknown anything → keep. */
+  def keep(
+      visible: Seq[SegmentMeta],
+      filters: Seq[Filter],
+      schema: StructType,
+      buckets: => Option[Buckets.BucketSpec]): Pruned = {
+    if (filters.isEmpty)
+      return Pruned(visible.map(s => s -> s.files), visible.size, visible.size, 0, 0)
+    val preds = filters.map(compile)
+    val segs = visible.filter(mayHold(preds, _))
+    val pinned = buckets.flatMap(allowedBuckets(_, filters, schema))
+    var byFile = 0
+    var byBucket = 0
+    val kept = segs.flatMap { s =>
+      val rels = s.files.filter { rel =>
+        // a file with footer stats or a partition tuple is bounded more
+        // tightly than its segment; any other file shares the segment's
+        // bounds, which already passed
+        val fileOk = !(s.fileMeta.contains(rel) || rel.contains("=")) ||
+          mayHold(preds, Partitions.fileAsSegment(s, rel, schema))
+        val bucketOk = pinned.forall(ok => Buckets.tagOf(rel).forall(ok.contains))
+        if (!fileOk) byFile += 1 else if (!bucketOk) byBucket += 1
+        fileOk && bucketOk
+      }
+      if (rels.isEmpty) None else Some(s -> rels)
+    }
+    Pruned(kept, segs.size, visible.size, byFile, byBucket)
+  }
+
+  /** The segment rung alone. */
   def prune(segments: Seq[SegmentMeta], filters: Seq[Filter]): Seq[SegmentMeta] =
     if (filters.isEmpty) segments
     else {
-      // compile once per pass: literal normalization (and the integral
-      // Long fast path) happen per FILTER, not per segment — the
-      // mayMatch form re-parsed the literal 1M times on a 1M-segment
-      // pass (r16 MetaScaleProbe: StatValue.compare was the top frame)
       val preds = filters.map(compile)
-      segments.filter(seg => seg.rowCount != 0 && preds.forall(_(seg)))
+      segments.filter(mayHold(preds, _))
     }
 
-  /** Per-filter compiled predicate, semantics identical to [[mayMatch]]
-    * minus the rowCount==0 cut (hoisted into [[prune]]). */
+  /** May `s` (a segment, or a file as one) hold a row matching every
+    * compiled filter? A committed-empty one never does. */
+  private def mayHold(preds: Seq[SegmentMeta => Boolean], s: SegmentMeta): Boolean =
+    s.rowCount != 0 && preds.forall(_(s))
+
+  /** One line per pruning decision: the log and EXPLAIN's "== Graft =="
+    * section print the same text. */
+  def report(line: String, filters: Seq[Filter]): Unit = {
+    logInfo(s"[graft] $line for filters ${filters.mkString("[", ", ", "]")}")
+    graft.engine.ExplainCollector.record(line)
+  }
+
+  /** Bucket ids that can satisfy the conjunction of `filters`, when the
+    * bucket columns are pinned by equality — a point lookup on a
+    * bucketed 100 TB table reads exactly one bucket's files. None =
+    * not derivable (keep all). */
+  private def allowedBuckets(
+      bs: Buckets.BucketSpec, filters: Seq[Filter], schema: StructType): Option[Set[Int]] = {
+    val dts = bs.columns.flatMap(c => schema.fields.find(_.name == c).map(c -> _.dataType)).toMap
+    if (dts.size != bs.columns.size) None
+    else if (bs.columns.size == 1) {
+      val c = bs.columns.head
+      val dt = dts(c)
+      def id(v: Any): Int = Buckets.bucketIdExternal(bs.count, Seq((v, dt)))
+      val sets = filters.flatMap {
+        case EqualTo(a, v) if a == c && v != null => Some(Set(id(v)))
+        case EqualNullSafe(a, v) if a == c => Some(Set(id(v)))
+        case In(a, vs) if a == c && vs.nonEmpty && !vs.contains(null) =>
+          Some(vs.map(id).toSet)
+        case IsNull(a) if a == c => Some(Set(id(null)))
+        case _ => None
+      }
+      sets.reduceOption(_ intersect _)
+    } else {
+      // multi-column buckets need every column pinned by equality
+      val pinned = bs.columns.map(c => filters.collectFirst {
+        case EqualTo(a, v) if a == c && v != null => (v, dts(c))
+        case EqualNullSafe(a, v) if a == c => (v, dts(c))
+      })
+      if (pinned.exists(_.isEmpty)) None
+      else Some(Set(Buckets.bucketIdExternal(bs.count, pinned.map(_.get))))
+    }
+  }
+
+  /** One filter compiled against a segment's (or a file's, through
+    * [[Partitions.fileAsSegment]]) stats: true = may hold a match,
+    * false = provably disjoint. The rowCount==0 cut is [[mayHold]]'s. */
   private def compile(filter: Filter): SegmentMeta => Boolean = {
     type Cmp = Option[String => Option[Int]]
     def cmpMin(seg: SegmentMeta, a: String, c: Cmp): Option[Int] =
@@ -256,6 +296,10 @@ object SegmentPruner {
       case IsNotNull(a) =>
         seg => seg.stats.get(a).forall(s => seg.rowCount == 0 || s.nullCount < seg.rowCount)
       case StringStartsWith(a, p) if p.nonEmpty =>
+        // p-prefixed strings live in [p, succ(p)) with succ = last char
+        // incremented — stays ASCII-comparable, unlike appending U+FFFF
+        // (which the comparator rejects, silently disabling this bound).
+        // A prefix ending in 0x7F would need a carry; keep conservatively.
         val cMax = StatValue.comparator(p)
         val cSucc: Cmp =
           if (p.last < '\u007f') StatValue.comparator(p.init + (p.last + 1).toChar)

@@ -1099,9 +1099,12 @@ class TableLayout(val tablePath: String, conf: Configuration) {
 
   /** List absolute data-file paths of the given segment. */
   // (companion holds the JVM-wide lock registry — see withLock)
-  def segmentFilePaths(seg: SegmentMeta): Seq[String] = {
+  def segmentFilePaths(seg: SegmentMeta): Seq[String] = segmentFilePaths(seg, seg.files)
+
+  /** Absolute paths of `rels`, files of `seg`. */
+  def segmentFilePaths(seg: SegmentMeta, rels: Seq[String]): Seq[String] = {
     val base = seg.externalPath.map(new Path(_)).getOrElse(segmentDir(seg.id))
-    seg.files.map(f => new Path(base, f).toString)
+    rels.map(f => new Path(base, f).toString)
   }
 }
 

@@ -331,8 +331,7 @@ class SegmentFileIndex(
     spark: SparkSession,
     layout: TableLayout,
     visible: Seq[SegmentMeta],
-    schema: StructType,
-    runtimeFilters: Seq[Filter] = Nil)
+    schema: StructType)
   extends InMemoryFileIndex(
     spark,
     // ZERO plan-time filesystem IO (r15, VERDICT r14 Next #2): the
@@ -368,84 +367,22 @@ class SegmentFileIndex(
     try Buckets.specOf(layout.readTableMeta())
     catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Bucket ids that can satisfy the conjunction of `filters`, when the
-    * bucket columns are pinned by equality — a point lookup on a
-    * bucketed 100 TB table reads exactly one bucket's files. None =
-    * not derivable (keep all). */
-  private def allowedBuckets(filters: Seq[Filter]): Option[Set[Int]] = {
-    import org.apache.spark.sql.sources._
-    bucketSpec.flatMap { bs =>
-      val dts = bs.columns.flatMap(c => schema.fields.find(_.name == c).map(c -> _.dataType)).toMap
-      if (dts.size != bs.columns.size) None
-      else if (bs.columns.size == 1) {
-        val c = bs.columns.head
-        val dt = dts(c)
-        def id(v: Any): Int = Buckets.bucketIdExternal(bs.count, Seq((v, dt)))
-        val sets = filters.flatMap {
-          case EqualTo(a, v) if a == c && v != null => Some(Set(id(v)))
-          case EqualNullSafe(a, v) if a == c => Some(Set(id(v)))
-          case In(a, vs) if a == c && vs.nonEmpty && !vs.contains(null) =>
-            Some(vs.map(id).toSet)
-          case IsNull(a) if a == c => Some(Set(id(null)))
-          case _ => None
-        }
-        sets.reduceOption(_ intersect _)
-      } else {
-        // multi-column buckets need every column pinned by equality
-        val pinned = bs.columns.map(c => filters.collectFirst {
-          case EqualTo(a, v) if a == c && v != null => (v, dts(c))
-          case EqualNullSafe(a, v) if a == c => (v, dts(c))
-        })
-        if (pinned.exists(_.isEmpty)) None
-        else Some(Set(Buckets.bucketIdExternal(bs.count, pinned.map(_.get))))
-      }
-    }
-  }
-
   override def listFiles(
       partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : Seq[PartitionDirectory] = {
-    // runtimeFilters: DPP-derived key sets handed to this index at
-    // execution time (SupportsRuntimeFiltering) — merged here so they
-    // prune at FILE grain through the same ladder as pushed filters
     val filters: Seq[Filter] =
-      dataFilters.flatMap(e => org.apache.spark.sql.graft.Shims.translateFilter(e)) ++
-        runtimeFilters
-    // segment rung FIRST, then materialize statuses only for survivors:
-    // the per-file work (file-grain pseudo metas, bucket tags, stat
-    // fallbacks) is O(kept files), never O(table) — a point query on a
-    // 100k-segment table pays one metadata pass plus its own files
-    val keptSegs =
-      if (filters.isEmpty || visible.isEmpty) visible
-      else SegmentPruner.prune(visible, filters)
-    val buckets = if (filters.isEmpty) None else allowedBuckets(filters)
-    var fileSkipped = 0
-    val files = keptSegs.flatMap { s =>
-      s.files.zip(layout.segmentFilePaths(s)).collect {
-        case (rel, abs) if {
-          // file rung: segment stats ∩ footer file stats ∩ path-encoded
-          // partition tuple, then the hash-bucket tag
-          val fileOk =
-            if (filters.isEmpty) true
-            else if (s.fileMeta.contains(rel) || rel.contains("=")) {
-              val pm = Partitions.fileAsSegment(s, rel, schema)
-              filters.forall(SegmentPruner.mayMatch(pm, _))
-            } else true
-          val keep = fileOk &&
-            buckets.forall(ok => Buckets.tagOf(rel).forall(ok.contains))
-          if (!keep) fileSkipped += 1
-          keep
-        } => statusOf(s, rel, abs)
-      }
-    }
-    if (filters.nonEmpty && visible.nonEmpty) {
-      logInfo(s"[graft] min/max skip: kept ${keptSegs.size}/${visible.size} segments, " +
-        s"skipped $fileSkipped more files (partition/footer/bucket grain) for " +
-        s"filters ${filters.mkString("[", ", ", "]")}")
-      graft.engine.ExplainCollector.record(
-        s"min/max skip: kept ${keptSegs.size}/${visible.size} segments, " +
-          s"skipped $fileSkipped more files (partition/footer/bucket grain)")
+      dataFilters.flatMap(e => org.apache.spark.sql.graft.Shims.translateFilter(e))
+    // statuses materialize for the ladder's survivors only: a point
+    // query on a 100k-segment table pays one metadata pass plus its own
+    // files
+    val p = SegmentPruner.keep(visible, filters, schema, bucketSpec)
+    if (filters.nonEmpty && visible.nonEmpty)
+      SegmentPruner.report(
+        s"min/max skip: kept ${p.segmentsKept}/${p.segmentsTotal} segments, " +
+          s"skipped ${p.filesSkipped} more files (partition/footer/bucket grain)", filters)
+    val files = p.kept.flatMap { case (s, rels) =>
+      rels.zip(layout.segmentFilePaths(s, rels)).map { case (rel, abs) => statusOf(s, rel, abs) }
     }
     if (files.isEmpty) Nil
     else Seq(PartitionDirectory(
@@ -476,7 +413,7 @@ class SegmentFileIndex(
   // table canonicalized equal and AQE's exchange reuse silently served
   // one subset's rows for both (readChanges' two exceptAll legs came
   // back identical → empty diff). Identity here = table + the exact
-  // served-rows fingerprint per segment + runtime filters; two indexes
+  // served-rows fingerprint per segment; two indexes
   // over the SAME subset still compare equal, so legitimate stage
   // reuse (the same as-of read appearing twice in one plan) keeps
   // working.
@@ -500,7 +437,6 @@ class SegmentFileIndex(
       h.add(s.format)
       h.mark(1)
     }
-    runtimeFilters.foreach(f => h.add(f.toString))
     (layout.tablePath, h.result)
   }
 
@@ -1340,53 +1276,24 @@ case class CarbonishScan(
   override def filter(filters: Array[Filter]): Unit = {
     val fs = filters.toIndexedSeq
     if (fs.isEmpty) return
-    val kept = SegmentPruner.prune(visible, fs)
-    // file-grain refinement: per-file footer stats (and path-encoded
-    // partition tuples) can drop files INSIDE kept segments — a DPP key
-    // set rarely aligns with segment boundaries at 100 TB, so segment
-    // grain alone leaves most of the win on the table. The precheck is
-    // driver metadata math (same compares listFiles would do).
-    val fileDrops = kept.exists { s =>
-      s.files.exists { rel =>
-        (s.fileMeta.contains(rel) || rel.contains("=")) && {
-          val pm = Partitions.fileAsSegment(s, rel, tableSchema)
-          !fs.forall(f => SegmentPruner.mayMatch(pm, f))
-        }
-      }
-    }
-    // bucket grain: footer stats on a hash-bucketed column span the full
-    // range (hashing doesn't cluster values), so the footer precheck
-    // above can't see the win — but an equality/IN runtime filter on a
-    // bucket column pins files to |values| buckets. Over-triggering is
-    // just a rebuild; listFiles decides the exact file set.
-    val bucketPin = {
-      import org.apache.spark.sql.sources._
-      (try Buckets.specOf(tableMeta) catch { case scala.util.control.NonFatal(_) => None })
-        .exists { bs =>
-          val cols = bs.columns.toSet
-          fs.exists {
-            case EqualTo(a, _) => cols(a)
-            case EqualNullSafe(a, _) => cols(a)
-            case In(a, _) => cols(a)
-            case IsNull(a) => cols(a)
-            case _ => false
-          }
-        }
-    }
-    if (kept.size < visible.size || fileDrops || bucketPin) {
+    // the planned scans' ladder over the runtime (DPP) filters: a key set
+    // rarely aligns with segment boundaries at 100 TB, so the file rung
+    // (footer stats) and the bucket rung (hashing doesn't cluster
+    // values, so footers on a bucket column span its range) carry most
+    // of the win
+    val p = SegmentPruner.keep(visible, fs, tableSchema,
+      try Buckets.specOf(tableMeta) catch { case scala.util.control.NonFatal(_) => None })
+    if (p.segmentsKept < p.segmentsTotal || p.filesSkipped > 0) {
       val grain =
-        (if (fileDrops) Seq("file-grain refinement active") else Nil) ++
-          (if (bucketPin) Seq("bucket pin active") else Nil)
-      logInfo(s"[graft] runtime segment skip: kept ${kept.size}/${visible.size} " +
-        s"segments${if (grain.isEmpty) "" else grain.mkString(" + ", " + ", "")} for " +
-        s"${filters.mkString("[", ", ", "]")}")
-      graft.engine.ExplainCollector.record(
-        s"runtime (DPP) segment skip: kept ${kept.size}/${visible.size} segments" +
-          (if (grain.nonEmpty) grain.mkString(" (", ", ", ")") else ""))
-      // the rebuilt index carries the runtime filters so listFiles
-      // applies the partition/footer/bucket file skip to them too
-      current = inner.copy(fileIndex =
-        new SegmentFileIndex(spark, layout, kept, tableSchema, fs))
+        (if (p.skippedByFile > 0) Seq("file-grain refinement active") else Nil) ++
+          (if (p.skippedByBucket > 0) Seq("bucket pin active") else Nil)
+      SegmentPruner.report(
+        s"runtime (DPP) segment skip: kept ${p.segmentsKept}/${p.segmentsTotal} segments" +
+          (if (grain.nonEmpty) grain.mkString(" (", ", ", ")") else ""), fs)
+      // the index serves exactly the kept files, and its fingerprint
+      // covers them
+      current = inner.copy(fileIndex = new SegmentFileIndex(spark, layout,
+        p.kept.map { case (s, rels) => s.copy(files = rels) }, tableSchema))
     }
   }
 }

@@ -32,8 +32,7 @@ object GraftStreaming {
   def appendBatch(t: GraftTable, batch: DataFrame, batchId: Long): Unit = {
     val layout = t.layout
     val target = t.schema
-    val aligned = batch.select(target.fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+    val aligned = GraftTable.align(batch, target)
 
     // open (or reuse) the streaming segment id — one open segment per table
     var segId = -1L

@@ -174,6 +174,36 @@ class BucketSpec extends AnyFunSuite {
     assert(t.read.filter(col("p") === 1 && col("k") === 7L).count() == 1)
   }
 
+  test("point DELETE and UPDATE on a bucketed table scan one bucket's files " +
+      "(copy-on-write and merge-on-read)") {
+    Seq("cow", "mor").foreach { mode =>
+      val src = spark.range(0, 2000).selectExpr("id AS k", "CAST(id % 10 AS DOUBLE) AS v")
+      // sorted on v: footer stats on k span the whole range in every
+      // bucket file, so only the bucket rung can narrow a point predicate
+      val t = GraftTable.create(spark, tmp(), src.schema, sortColumns = Seq("v"),
+        properties = Map("bucket_columns" -> "k", "bucket_count" -> N.toString,
+          "iud_mode" -> mode))
+      t.insert(src)
+      val segs = Mutation.visibleFiles(t)
+      assert(segs.flatMap(_._2).size == N)
+      def bucketOf(k: Long): Int =
+        Buckets.bucketIdExternal(N, Seq((k, org.apache.spark.sql.types.LongType)))
+      // the API's typed literal and SQL's int literal (cast by analysis)
+      Seq(42L -> (col("k") === 42L), 42L -> expr("k = 42"), 43L -> (col("k") === 43L))
+        .foreach { case (k, cond) =>
+          val kept = Mutation.pruneCandidates(t, segs, cond).flatMap(_._2)
+          assert(kept.size == 1 && kept.head.contains(s"/${Buckets.TagPrefix}${bucketOf(k)}/"),
+            s"$mode $cond kept ${kept.size} of $N bucket files:\n${kept.mkString("\n")}")
+        }
+      assert(t.delete(col("k") === 42L) == 1L, mode)
+      assert(t.update(col("k") === 43L, Map("v" -> lit(-1.0))) == 1L, mode)
+      val want = src.filter(col("k") =!= 42L)
+        .select(col("k"), when(col("k") === 43L, lit(-1.0)).otherwise(col("v")).as("v"))
+      assert(t.read.collect().map(_.toString).sorted
+        .sameElements(want.collect().map(_.toString).sorted), mode)
+    }
+  }
+
   private def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
